@@ -1,499 +1,151 @@
 package graft
 import org.apache.spark.sql.SparkSession
+
+/** Driver throughput bench: every selected key runs fully against the
+  * `noop` sink, three timed runs per key after untimed warm-ups, and the
+  * key reports the min (-1 when it fails). All samples go to
+  * bench_full.json; one summary line goes to stdout.
+  */
 object Bench {
-  // Load calibration (r16 verdict task 4): a FIXED amount of CPU work —
-  // the same fp recurrence tools/burst_rehearsal.py's load threads spin,
-  // run on N PARALLEL THREADS (N = the bench's executor width) — timed
-  // at bench start and end and stamped into bench_full.json next to
-  // synthetic_sleep. On a quiet box the parallel fixed work takes a
-  // near-constant wall (~50 ms at 32 threads on 32 cores, pinned in
-  // BASELINE.md); under the box-wide contention that inflated the
-  // r14/r16 driver runs the SAME work takes proportionally longer. The
-  // spin must be N-wide, not single-threaded: Linux autogrouping gives
-  // each session ONE collective scheduler share, so a lone spin thread
-  // inside the bench JVM's group fits the group's share and reads ~1.0×
-  // even while a 48-process external burst squeezes the 32-thread Spark
-  // stages to half the machine (measured r17: single-thread spin 50 ms
-  // under a full burst whose sweep ran 42 keys over band; the 32-wide
-  // spin is displaced exactly like the stages it vouches for). The two
-  // samples bracket the sweep, so driver-run adjudication starts from a
-  // mechanical in-artifact load reading instead of forensic per-key
-  // pattern matching. Median-of-3 after 3 untimed JIT warm-ups — a
-  // start-of-JVM single draw would time the interpreter, not the box.
-  private val SpinIters = 20000000
-  def spinCalMs(nThreads: Int): Double = {
-    def once(): Double = {
-      val gate = new java.util.concurrent.CountDownLatch(1)
-      val threads = (1 to nThreads).map { _ =>
-        val t = new Thread(() => {
-          gate.await()
-          var x = 1.0
-          var i = 0
-          while (i < SpinIters) { x = x * 1.0000001 + 1e-9; i += 1 }
-          // Keep x observable so the JIT cannot elide the loop.
-          if (java.lang.Double.isNaN(x)) System.err.println("unreachable")
-        })
-        t.setDaemon(true)
-        t.start()
-        t
-      }
-      val t0 = System.nanoTime()
-      gate.countDown()
-      threads.foreach(_.join())
-      (System.nanoTime() - t0) / 1e6
+  /** Chars the shown keys may spend on the stdout line. The driver parses
+    * the line from a 2000-char stdout tail, sbt's trailing "[success]"
+    * line takes ~80 of it, and the fixed fields take ~140 more.
+    */
+  private val KeyBudget = 1700
+
+  private def f(v: Double): String =
+    BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
+
+  /** The stdout line: the slowest keys until [[KeyBudget]] is spent, the
+    * remaining fast keys folded into a count and summed seconds.
+    */
+  def stdoutLine(results: Map[String, Double], sf: String, ckpt: String): String = {
+    // Failures (-1) sort FIRST: they take the budget before any timed
+    // key, so a failure is not folded into the omitted summary.
+    val sorted = results.toSeq.sortBy { case (k, v) => (v >= 0, -v, k) }
+    var used = 0
+    val (shown, omitted) = sorted.partition { case (k, v) =>
+      val cost = k.length + f(v).length + 4 // "k":v,
+      val fits = used + cost <= KeyBudget
+      if (fits) used += cost
+      fits
     }
-    (1 to 3).foreach(_ => once())
-    val ts = (1 to 3).map(_ => once()).sorted
-    ts(1)
+    val qs = shown.map { case (k, v) => s"\"$k\":${f(v)}" }.mkString("{", ",", "}")
+    val total = results.values.filter(_ >= 0).sum
+    val omittedSec = omitted.map(_._2).filter(_ >= 0).sum
+    s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,""" +
+      s""""omitted_fast_keys":${omitted.size},"omitted_sec":${f(omittedSec)},""" +
+      s""""sf":"$sf","ckpt":"$ckpt"}"""
   }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Optional comma-separated key filter for local isolation runs; the
-    // driver never sets it, so driver benches always time the full map.
-    val keyFilter = sys.env.get("SPARK_GRAFT_KEYS")
-      .map(_.split(",").map(_.trim).toSet)
-    val calStartMs = spinCalMs(cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Oracle-parity invariant (see T.normalizeTs): don't depend on the
-      // sbt fork's -D flag alone — a Bench launched any other way must
-      // still read NTZ fixtures as UTC instants.
-      .config("spark.sql.session.timeZone", "UTC")
-      // At 100 TB a table is thousands of ≥128 MB splits and every core
-      // has work; the sf0.1 fixtures are single ~50 MB files, which the
-      // default 128 MB split turns into 1–3 partitions — a 32-core run
-      // where 29 cores idle. Small splits emulate the cluster's natural
-      // scan parallelism at fixture scale (scan config, not a query
-      // change — plans and results are identical).
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfName = new java.io.File(sfDir).getName
+    val spark = LocalRun.session()
     // Noop sink forces FULL execution of every operator: a count() action
     // would let Catalyst prune projections and eliminate sorts, timing a
     // bare scan for projection-only keys.
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-    // FIXED execution order (sorted keys): map iteration order shifted
-    // whenever the inventory changed, which moved which key absorbed
-    // residual warm-up/GC phase — one of the r5 per-key noise sources.
-    val bench = (keyFilter match {
-      case Some(ks) => SparkEntry.queries.filter { case (k, _) => ks(k) }
-      case None     => SparkEntry.queries
-    }).toSeq.sortBy(_._1)
+    def untimed(name: String): Unit = try run(name) catch { case _: Throwable => () }
+    // Sorted keys: a fixed order keeps the same key absorbing any
+    // residual warm-up or GC phase from run to run.
+    val keys = LocalRun.select(SparkEntry.queries).keys.toSeq.sorted
     // Untimed warm-ups: JVM/codegen/file-index warm-up otherwise lands on
-    // whichever query runs first (~4 s of noise on one key); the second
-    // warm-up of the FIRST MEASURED key covers its key-specific codegen
-    // so position #1 isn't systematically penalized.
-    try run("agg_daily_counts") catch { case _: Throwable => () }
-    bench.headOption.foreach { case (k, _) =>
-      try run(k) catch { case _: Throwable => () }
+    // whichever query runs first (~4 s on one key); warming the first
+    // measured key too covers its own codegen. multimodal_binary is the
+    // one key on the typed mapPartitions path, whose first-touch encoder
+    // JIT once made its driver number 6–9× its warm time.
+    untimed("agg_daily_counts")
+    keys.headOption.foreach(untimed)
+    if (LocalRun.selected("multimodal_binary")) untimed("multimodal_binary")
+    val streaming = operators.Streaming
+    if (keys.exists(streaming.checkpointedKeys)) warmStreaming(spark, streaming.ckptOnShm)
+    val samples = keys.map { name =>
+      val ss =
+        try Seq.fill(3) {
+          val t0 = System.nanoTime()
+          run(name)
+          (System.nanoTime() - t0) / 1e9
+        } catch { case _: Throwable => Seq(-1.0) }
+        // Release this key's persisted DataFrames before the next key;
+        // its own three samples share them.
+        finally try spark.catalog.clearCache() catch { case _: Throwable => () }
+      name -> ss
     }
-    // Typed-Dataset/encoder codegen warm-up: multimodal_binary is the one
-    // key on the typed mapPartitions path; its BENCH_r06 driver number
-    // (1.57 s) was 6-9x its isolated/full local min-of-3 (0.18-0.34 s,
-    // unreproducible with identical code), so pay any first-touch typed-
-    // pipeline JIT here, untimed, instead of inside a measured key.
-    if (keyFilter.forall(_("multimodal_binary")))
-      try run("multimodal_binary") catch { case _: Throwable => () }
-    // Untimed checkpointed-streaming warm-up (r9 verdict task 1): the six
-    // checkpointed keys share JVM-global first-touch cost — StreamExecution
-    // / file-source / stream-sink classes, state-store infra, the RocksDB
-    // native library, streaming codegen — that otherwise lands INSIDE the
-    // first streaming key's first timed sample (visible as the family's
-    // wide pinned maxima). Pay it here on a 100-row toy stream so timed
-    // samples measure the keys' own work, not one-per-JVM class loading.
-    // Both derived from Streaming itself so neither the reported ckpt
-    // regime nor the warm-up/cap set can drift from the module that owns
-    // them (review r10).
-    val ckptShm = graft.operators.Streaming.ckptOnShm
-    val streamingKeys = graft.operators.Streaming.checkpointedKeys
-    if (bench.exists { case (k, _) => streamingKeys(k) }) try {
-      import org.apache.spark.sql.functions.{col, window}
-      import org.apache.spark.sql.streaming.Trigger
-      val base =
-        if (ckptShm) java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get("/dev/shm"), "graft_warm")
-        else java.nio.file.Files.createTempDirectory("graft_warm")
-      val confKeys = Seq("spark.sql.shuffle.partitions",
-        "spark.sql.streaming.stateStore.providerClass")
-      val saved = confKeys.map(k =>
-        k -> scala.util.Try(Option(spark.conf.get(k))).toOption.flatten)
-      try {
-        spark.range(100).selectExpr("id AS event_id",
-          "timestamp_micros(1704067200000000 + id * 60000000) AS ts",
-          "CAST(id % 5 AS STRING) AS k", "CAST(id AS DOUBLE) AS v")
-          .coalesce(1).write.parquet(s"$base/in")
-        val sch = spark.read.parquet(s"$base/in").schema
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val q = spark.readStream.schema(sch).parquet(s"$base/in")
-          .withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "1 day"), col("k")).count()
-          .writeStream.outputMode("append").format("parquet")
-          .option("path", s"$base/out")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        // Second toy query: the foreachBatch + dynamic-partition-overwrite
-        // sink path (pipeline_daily_e2e / stream_stateful_totals /
-        // stream_batch_equiv shape) — its first-touch cost was still
-        // visible as a 5.2 s first sample on pipeline_daily_e2e (2.8 s
-        // pinned median) after the file-sink warm-up alone.
-        val q2 = spark.readStream.schema(sch).parquet(s"$base/in")
-          .groupBy(col("k")).count()
-          .writeStream.outputMode("update")
-          .option("checkpointLocation", s"$base/ckpt2")
-          .foreachBatch { (bdf: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            bdf.write.mode("overwrite")
-              .option("partitionOverwriteMode", "DYNAMIC")
-              .partitionBy("k").parquet(s"$base/out2")
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q2.awaitTermination()
-      } finally {
-        saved.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None)    => spark.conf.unset(k)
-        }
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    } catch { case _: Throwable => () }
-    // Early-accept sampling (r9 verdict task 2): blind min-of-3 runs the
-    // six checkpointed streaming keys' ~2 s start/stop machinery three
-    // times for samples that land in-band anyway — a third of the bench's
-    // wall-clock spent re-measuring its own fixed costs, which is exactly
-    // the contention amplifier the r9 driver run exposed (143.5 s vs the
-    // same code's 64 s local). Instead: accept the FIRST sample inside
-    // its pinned envelope (median × 1.3 + 0.05 s from
-    // bench_baseline.json), retry up to 3 total otherwise and report the
-    // min. Identical statistic under contention (all 3 samples run);
-    // ~1/3 the streaming wall-clock on healthy runs — and a shorter
-    // bench is itself less exposed to ambient machine state. Keys without
-    // a pinned median (new keys, missing/mismatched baseline file) keep
-    // plain min-of-3. Pinning runs disable acceptance entirely
-    // (SPARK_GRAFT_EARLY_ACCEPT=0, set by tools/bench_baseline.py) so
-    // pinned medians stay pure min-of-3 — never biased by the pin they
-    // themselves define.
-    val sfName = new java.io.File(sfDir).getName
-    // Pinned per-key (acceptance threshold, band max) from
-    // bench_baseline.json. The band max additionally gates the deferred
-    // re-measure pass below (r10 verdict task 1).
-    val pins: Map[String, (Double, Double)] =
-      if (sys.env.getOrElse("SPARK_GRAFT_EARLY_ACCEPT", "1") != "1") Map.empty
-      else scala.util.Try {
-        val txt = java.nio.file.Files.readString(
-          java.nio.file.Paths.get("bench_baseline.json"))
-        if (s""""sf":\\s*"$sfName"""".r.findFirstIn(txt).isEmpty)
-          Map.empty[String, (Double, Double)] // pin is for a different scale factor
-        else
-          // Acceptance is CAPPED at the pinned band max: an accepted
-          // sample can never itself read as an out-of-band flag to
-          // tools/bench_compare.py or the judge.
-          """"([A-Za-z0-9_]+)":\s*\{\s*"median":\s*([0-9.]+),\s*"min":\s*[0-9.]+,\s*"max":\s*([0-9.]+)""".r
-            .findAllMatchIn(txt)
-            .map { m =>
-              val max = m.group(3).toDouble
-              m.group(1) -> (math.min(
-                m.group(2).toDouble * 1.3 + 0.05, max), max)
-            }.toMap
-      }.getOrElse(Map.empty)
-    val acceptAt: Map[String, Double] = pins.map { case (k, (a, _)) => k -> a }
-    // A matching-sf baseline that parses to ZERO keys means the regex no
-    // longer fits the pin file's format — early-accept would silently
-    // vanish. Fail loud on stderr (the driver parses stdout's tail only)
-    // so the degradation is visible instead of a mystery slowdown
-    // (review r10).
-    if (acceptAt.isEmpty &&
-        sys.env.getOrElse("SPARK_GRAFT_EARLY_ACCEPT", "1") == "1" &&
-        scala.util.Try(java.nio.file.Files.readString(
-          java.nio.file.Paths.get("bench_baseline.json")))
-          .toOption.exists(t => s""""sf":\\s*"$sfName"""".r.findFirstIn(t).nonEmpty))
-      System.err.println(
-        "[bench] WARNING: bench_baseline.json matches this sf but parsed to " +
-          "0 per-key envelopes — early-accept disabled; check the pin format")
-    // Synthetic-regression rehearsal knob (r13 verdict task 1 "done"
-    // criterion): a deliberate per-key slowdown that inflates ONLY the
-    // named key — controls stay quiet, so tools/bench_compare.py must
-    // classify the flag OVER-BAND, not CONTENDED. Never set outside the
-    // rehearsal (BASELINE.md documents the experiment).
-    val sleepKey = sys.env.get("SPARK_GRAFT_BENCH_SLEEP_KEY")
-    val sleepMs =
-      graft.T.envInt("SPARK_GRAFT_BENCH_SLEEP_MS", 2000, min = 0, max = 60000)
-    def timeOnce(name: String): Double = {
-      val t0 = System.nanoTime()
-      run(name)
-      if (sleepKey.contains(name)) Thread.sleep(sleepMs)
-      (System.nanoTime() - t0) / 1e9
-    }
-    val samples = bench.map { case (name, _) =>
-      def once(): Double = timeOnce(name)
-      // A failed query reports -1 (never a bogus near-zero timing).
-      try {
-        val acc = acceptAt.get(name)
-        // Min-of-3 with early-accept for EVERY key. The r9–r11 bench
-        // capped the six checkpointed streaming keys at TWO samples
-        // (each retry re-pays a ~2 s start/stop constant) — but that
-        // reported a 2-draw min against a band pinned from min-of-3
-        // runs, a stats asymmetry the r11 ADVICE flagged: a streaming
-        // key whose two draws both land out-of-band was judged from
-        // less evidence than the band it was judged against. r12
-        // (verdict task 2): such a key takes the one extra confirming
-        // sample, which is exactly what cap=3 + early-accept already
-        // does — the 3rd sample runs ONLY when two draws exceeded the
-        // envelope, so healthy-run wall-clock is unchanged (in-band
-        // keys still stop at sample 1), and the sustained-contention
-        // exposure the 2-cap guarded against is now owned by the
-        // delayed rerun2 pass below marking unrecovered keys contended.
-        // Pinning runs (SPARK_GRAFT_EARLY_ACCEPT=0, set by
-        // tools/bench_baseline.py) keep pure min-of-3 so pinned medians
-        // stay comparable across rounds.
-        val buf = scala.collection.mutable.ArrayBuffer[Double](once())
-        while (buf.length < 3 && !acc.exists(a => buf.min <= a)) buf += once()
-        name -> buf.toSeq
-      } catch { case _: Throwable => name -> Seq(-1.0) }
-      finally
-        // Release this key's persisted DataFrames before the next key
-        // (r13 ADVICE: MEMORY_AND_DISK blocks from the dedup/quantile
-        // persists otherwise accumulate for the whole 138-key sweep).
-        // AFTER the key's samples, not between them — repeat samples of
-        // one key keep sharing their cache exactly as the pinned bands
-        // were measured.
-        try spark.catalog.clearCache() catch { case _: Throwable => () }
-    }
-    // Deferred re-measure pass (r10 verdict task 1): a sustained
-    // contention burst defeats min-of-N because the N samples are
-    // ADJACENT in time — the r10 driver recorded dedup_cluster_cc at
-    // 8.8–11.4 s across all three samples where the same tree runs
-    // 1.20 s locally. After the FULL sweep (so minutes separate the two
-    // windows), re-run ONCE any key whose min still exceeds its pinned
-    // band max and keep the better number. On a healthy run nothing is
-    // over band and the pass costs zero; under a burst it converts
-    // "indistinguishable from a regression" into an in-band number. This
-    // also supplies the ADVICE-suggested extra confirming sample for a
-    // streaming key that exhausted its 2-sample cap out-of-band.
-    // The trigger is tools/bench_compare.py's FLAG threshold —
-    // max(band_max × 1.5, band_max + 0.30 s) — not the raw band max: a
-    // tight quiet 3-JVM pin puts ~15% of keys a few hundredths over
-    // their raw max on a perfectly healthy run (measured r11: 20/138),
-    // which would fire pointless reruns and report noise as signal; the
-    // compare tolerance is the repo's own definition of "regression
-    // candidate". Envelope-gated exactly like early-accept: pinning runs
-    // (SPARK_GRAFT_EARLY_ACCEPT=0) skip it, so pinned medians stay pure
-    // min-of-3 and the pass can never bias the baseline it is judged
-    // against. Failed keys (-1 sentinel) are never retried here — a
-    // deterministic failure would just fail again and mask nothing.
-    def flagAt(bandMax: Double): Double = math.max(bandMax * 1.5, bandMax + 0.30)
-    // Re-measure samples live in SEPARATE maps, never appended to the
-    // sweep's `samples` (r11 ADVICE): a median-consuming reader of
-    // bench_full.json (e.g. a manual re-pin from a normal run) must not
-    // silently average in contention-biased extras. The reported per-key
-    // `min` DOES take the better number — that is the pass's whole point.
-    val rerun1 = scala.collection.mutable.Map.empty[String, Double]
-    val rerun2 = scala.collection.mutable.Map.empty[String, Double]
-    def bestOf(k: String, ss: Seq[Double]): Double =
-      (ss ++ rerun1.get(k) ++ rerun2.get(k)).min
-    def overFlag(k: String, ss: Seq[Double]): Boolean = {
-      val mn = bestOf(k, ss)
-      mn >= 0 && pins.get(k).exists { case (_, bandMax) => mn > flagAt(bandMax) }
-    }
-    // Pass 1 — immediately after the full sweep (minutes separate the
-    // two windows for early keys). Count a rerun ONLY when the extra
-    // sample actually landed: a failed re-measure attempt must not read
-    // as "re-measured and still over band" — the key stays in over_band
-    // with rerun unincremented, the truthful diagnosis (r11 review).
-    // Failed keys (-1 sentinel) are never retried — a deterministic
-    // failure would just fail again and mask nothing.
-    // Re-measures run one UNTIMED warm-up of the key first: the sweep's
-    // clearCache left its persisted subtrees cold, but the pinned band
-    // was measured warm (samples 2-3 share sample 1's cache), so a cold
-    // single draw of a persist-heavy key could stay over band on a
-    // quiet box and defeat the rescue pass (r14 review find). The cost
-    // is one extra execution, paid only by flagged keys.
-    def warmRemeasure(k: String): Double = {
-      try run(k) catch { case _: Throwable => () }
-      val extra = try timeOnce(k) catch { case _: Throwable => -1.0 }
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
-      extra
-    }
-    // Mid-run load samples (r17 verdict task 4): the start/end spins
-    // bracket the run, so a burst that lives entirely INSIDE the sweep
-    // and drains before the closing spin reads quiet at both ends. A
-    // re-measure pass triggering is exactly the moment such a burst is
-    // suspected, so take one extra spin sample at the entry of each
-    // pass — near-zero cost on clean runs (no flags → no sample),
-    // stamped as load_cal.mid_ms in bench_full.json (file only; the
-    // stdout field keeps its fixed start/end width).
-    val calMid = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val flagged1 = samples.filter { case (k, ss) => overFlag(k, ss) }
-    if (flagged1.nonEmpty) calMid += spinCalMs(cpus.toInt)
-    flagged1.foreach { case (k, _) =>
-      val extra = warmRemeasure(k)
-      if (extra >= 0) rerun1(k) = extra
-    }
-    // Pass 2 — DELAYED (r11 verdict task 1): a contention burst that
-    // spans sweep AND pass 1 still reports an inflated number
-    // indistinguishable from a regression (the failure mode that cost
-    // rounds 8–10 an adjudication each; the r11 single-pass rehearsal
-    // corrected 9/9 only because its 120 s burst had ended). For keys
-    // STILL over the flag threshold, back off long enough for a
-    // bench-length burst to drain, then re-measure once more. Healthy
-    // runs never enter this branch, so the delay costs zero; a key
-    // still over after BOTH temporally-separated passes is explicitly
-    // marked `contended` in bench_full.json — "outlasted two windows:
-    // sustained load or a real regression; adjudicate with an isolated
-    // 3-JVM re-run (tools/bench_baseline.py 3 key1,...)".
-    val stillOver = samples.filter { case (k, ss) => overFlag(k, ss) }
-    // Machine-state evidence taken IN the delayed re-measure window
-    // (r13 verdict task 1): when any key is still over band, also time
-    // the pinned never-changing CONTROL keys right next to the re-runs.
-    // tools/bench_compare.py divides these by the controls' pinned
-    // medians — controls inflated alongside the flagged key read as
-    // ambient contention (CONTENDED), controls quiet leave the flag a
-    // genuine regression candidate. Controls must stay untouched
-    // round-over-round; deliberately changing one means re-pinning and
-    // updating the list here AND in bench_compare.py.
-    val controlKeys = Seq("agg_daily_counts", "fn_math")
-    val rerun2Controls = scala.collection.mutable.Map.empty[String, Double]
-    if (stillOver.nonEmpty) {
-      val delayMs =
-        graft.T.envInt("SPARK_GRAFT_RERUN2_DELAY_SEC", 60, min = 0, max = 3600) * 1000L
-      Thread.sleep(delayMs)
-      // Second mid-run load sample, taken INSIDE the delayed window it
-      // vouches for (after the back-off, before the re-measures).
-      calMid += spinCalMs(cpus.toInt)
-      stillOver.foreach { case (k, _) =>
-        val extra = warmRemeasure(k)
-        if (extra >= 0) rerun2(k) = extra
-      }
-      // A control that is itself a flagged key can't vouch for the
-      // window (bench_compare also excludes it); time the others anyway.
-      // Warm-up + min-of-3 per control: the flagged key's judged number
-      // is a min over WARM samples, so a single cold control draw (in a
-      // key-filtered run the control may never have executed in this
-      // JVM) would bias the contention ratio high and could read a real
-      // regression as CONTENDED (r14 review find) — match the statistic.
-      controlKeys.filter(SparkEntry.queries.contains).foreach { c =>
-        try run(c) catch { case _: Throwable => () }
-        val ts = (1 to 3).flatMap(_ =>
-          try Some(timeOnce(c)) catch { case _: Throwable => None })
-        if (ts.nonEmpty) rerun2Controls(c) = ts.min
-      }
-    }
-    // Closing calibration sample: AFTER the sweep and both re-measure
-    // passes, so start/end bracket every timed window the artifact holds.
-    val calEndMs = spinCalMs(cpus.toInt)
-    val results = samples.map { case (k, ss) => k -> bestOf(k, ss) }.toMap
-    // Keys STILL over the flag threshold after both passes: the stdout
-    // line's self-diagnosis (r10 verdict task 2 / r11 task 1).
-    // over_band>0 with rerun2>0 reads "contention outlasted the delayed
-    // window too, or a real regression — check bench_full.json's
-    // contended keys"; over_band=0 with rerun>0 reads "burst caught and
-    // corrected".
-    val overBand = results.count { case (k, v) =>
-      v >= 0 && pins.get(k).exists { case (_, bandMax) => v > flagAt(bandMax) }
-    }
-    // The driver parses this line from a 2000-char stdout TAIL (measured
-    // from BENCH_r01.json: tail len 2000, and round 1's full-precision
-    // line was truncated → "parsed": null). sbt's trailing "[success]"
-    // line consumes ~80 of that window, so the whole line must stay under
-    // ~1900 chars NO MATTER how many keys the inventory grows to: emit
-    // the slowest keys (the informative ones) until the char budget is
-    // spent, and fold the remaining fast keys into a count + summed
-    // seconds. Budget 1630 (r9 task 5 set 1700; r11/r12's
-    // over_band/rerun/rerun2 fields and r17's load_cal stdout field eat
-    // the difference — load_cal costs ~26-34 chars when spin readings
-    // reach 3-4 digits under load, so fixed overhead is ~200 chars
-    // worst case, line ≤ ~1850 with ~120 chars slack under the
-    // driver's 2000-char tail minus sbt's ~80-char [success] line).
-    // Full per-key numbers live in bench_full.json / BASELINE.md.
-    def f(v: Double): String = BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
-    val total = results.values.filter(_ >= 0).sum
-    // Failures (-1 sentinel) sort FIRST: under the char budget the tail
-    // gets folded into the omitted summary, and a failed key must never
-    // disappear from the line (sorting by -v alone would bury them last).
-    val sorted = results.toSeq.sortBy { case (_, v) => (v >= 0, -v) }
-    val (shown, omitted) = {
-      var used = 0
-      val keep = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-      val rest = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-      sorted.foreach { case (k, v) =>
-        val cost = k.length + f(v).length + 4
-        if (used + cost <= 1630) { keep += ((k, v)); used += cost }
-        else rest += ((k, v))
-      }
-      (keep, rest)
-    }
-    val qs = shown.map { case (k, v) => s"\"" + k + "\":" + f(v) }
-      .mkString("{", ",", "}")
-    val omittedSum = omitted.map(_._2).filter(_ >= 0).sum
-    // COMPLETE per-key record (every key, all samples + min) to a file:
-    // the driver's 2000-char stdout tail can only carry the slowest ~66
-    // keys, which left 72 keys invisible to round-over-round comparison
-    // (VERDICT r7 task 2 / r8 task 2). tools/bench_baseline.py consumes
-    // this to pin per-key medians in BASELINE.md.
-    val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench_full.json")
-    // `samples` carries ONLY the sweep's draws; re-measure extras go in
-    // rerun_samples/rerun2_samples so median consumers can't absorb them
-    // by accident (r11 ADVICE). `min` is the best across all of them —
-    // the number the driver and bench_compare judge.
-    val keyJson = samples.sortBy(_._1).map { case (k, ss) =>
-      val rr1 = rerun1.get(k).map(v => s""", "rerun_samples": [${f(v)}]""").getOrElse("")
-      val rr2 = rerun2.get(k).map(v => s""", "rerun2_samples": [${f(v)}]""").getOrElse("")
-      val cont = if (overFlag(k, ss)) """, "contended": true""" else ""
-      s"""    "$k": {"samples": [${ss.map(f).mkString(", ")}], "min": ${f(bestOf(k, ss))}$rr1$rr2$cont}"""
+    val results = samples.map { case (k, ss) => k -> ss.min }.toMap
+    // `ckpt` says where the streaming keys' checkpoints went: the
+    // /dev/shm preference falls back to disk silently.
+    val ckpt = if (streaming.ckptOnShm) "shm" else "tmp"
+    // Every key with all its samples; the stdout line carries only the
+    // slowest keys.
+    val keyJson = samples.map { case (k, ss) =>
+      s"""    "$k": {"samples": [${ss.map(f).mkString(", ")}], "min": ${f(ss.min)}}"""
     }.mkString(",\n")
-    // `ckpt` reports where the streaming keys' ephemeral checkpoints
-    // actually went (r9 verdict task 1: the freshCkptDir /dev/shm
-    // preference falls back to disk SILENTLY — on the driver box this
-    // field is the only way to know which regime a bench number is from).
-    val ckptMode = if (ckptShm) "shm" else "tmp"
-    // Control-key timings from the delayed window, when taken — the
-    // drift-vs-regression evidence bench_compare.py reads.
-    val ctlJson =
-      if (rerun2Controls.isEmpty) ""
-      else rerun2Controls.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k": ${f(v)}""" }
-        .mkString("  \"rerun2_controls\": {", ", ", "},\n")
-    // Rehearsal artifacts must be self-describing (r14 ADVICE): when the
-    // synthetic-slowdown knob is live, stamp it into the JSON header AND
-    // the stdout metric line, so a leaked env var can never produce an
-    // artifact indistinguishable from a genuine regression —
-    // tools/bench_compare.py refuses to green a stamped artifact.
-    val synthJson = sleepKey.map(k =>
-      s"""  "synthetic_sleep": {"key": "$k", "ms": $sleepMs},\n""").getOrElse("")
-    val synthStdout = sleepKey.map(k =>
-      s""","synthetic_sleep":"$k:${sleepMs}ms"""").getOrElse("")
-    // Load calibration stamp (r16 verdict task 4): fixed-work spin wall
-    // times bracketing the run. quiet_ref_ms is the pinned quiet-box
-    // value (BASELINE.md r17) so a reader can ratio without hunting.
-    // mid_ms (r17 verdict task 4) appears only on runs where a
-    // re-measure pass fired — one reading per pass, taken at its entry.
-    val midJson =
-      if (calMid.isEmpty) ""
-      else s""""mid_ms": [${calMid.map(f).mkString(", ")}], """
-    val calJson =
-      s"""  "load_cal": {"start_ms": ${f(calStartMs)}, $midJson"end_ms": ${f(calEndMs)}, "iters": $SpinIters, "threads": $cpus, "quiet_ref_ms": 55},\n"""
-    // Wall-clock stamp: tools/bench_compare.py compares it against
-    // bench_baseline_isolated.json's to require the isolated arbiter to
-    // POSTDATE the run it vouches for.
-    val genAt = System.currentTimeMillis() / 1000L
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath),
-      s"""{\n  "sf": "$sfName",\n  "cpus": $cpus,\n  "ckpt": "$ckptMode",\n  "generated_at": $genAt,\n  "early_accept": ${acceptAt.nonEmpty},\n$synthJson$calJson  "over_band": $overBand,\n  "rerun": ${rerun1.size},\n  "rerun2": ${rerun2.size},\n$ctlJson  "total_min_sec": ${f(total)},\n  "keys": {\n$keyJson\n  }\n}\n""")
-    // The compact load_cal stamp rides the stdout line too (~26 chars
-    // quiet, ~34 worst case with 4-digit readings under heavy load; the
-    // shown-key budget above was trimmed 1655 → 1630 to pay for it, and
-    // the remaining ~120-char slack absorbs the worst case) so even a
-    // tail-only reader sees the bracket readings. mid_ms stays
-    // file-only to keep this line's width fixed.
-    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"omitted_fast_keys":${omitted.size},"omitted_sec":${f(omittedSum)},"sf":"$sfName","ckpt":"$ckptMode","over_band":$overBand,"rerun":${rerun1.size},"rerun2":${rerun2.size},"load_cal":"${f(calStartMs)}/${f(calEndMs)}ms"$synthStdout}""")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_full.json"),
+      s"""{\n  "sf": "$sfName",\n  "cpus": ${LocalRun.cpus},\n  "ckpt": "$ckpt",\n""" +
+        s"""  "total_min_sec": ${f(results.values.filter(_ >= 0).sum)},\n""" +
+        s"""  "keys": {\n$keyJson\n  }\n}\n""")
+    println(stdoutLine(results, sfName, ckpt))
     spark.stop()
   }
+
+  /** Untimed checkpointed-streaming warm-up. The checkpointed keys share
+    * JVM-global first-touch cost (StreamExecution and file-source/sink
+    * classes, state-store infra, the RocksDB native library, streaming
+    * codegen) that otherwise lands inside the first streaming key's first
+    * sample. Two 100-row toy queries pay it: a windowed file-sink
+    * aggregation, and the foreachBatch + dynamic-partition-overwrite
+    * sink path of pipeline_daily_e2e.
+    */
+  private def warmStreaming(spark: SparkSession, onShm: Boolean): Unit = try {
+    import org.apache.spark.sql.functions.{col, window}
+    import org.apache.spark.sql.streaming.Trigger
+    val base =
+      if (onShm) java.nio.file.Files.createTempDirectory(
+        java.nio.file.Paths.get("/dev/shm"), "graft_warm")
+      else java.nio.file.Files.createTempDirectory("graft_warm")
+    val confKeys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass")
+    val saved = confKeys.map(k =>
+      k -> scala.util.Try(Option(spark.conf.get(k))).toOption.flatten)
+    try {
+      spark.range(100).selectExpr("id AS event_id",
+        "timestamp_micros(1704067200000000 + id * 60000000) AS ts",
+        "CAST(id % 5 AS STRING) AS k", "CAST(id AS DOUBLE) AS v")
+        .coalesce(1).write.parquet(s"$base/in")
+      val sch = spark.read.parquet(s"$base/in").schema
+      spark.conf.set("spark.sql.shuffle.partitions", "4")
+      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      spark.readStream.schema(sch).parquet(s"$base/in")
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 day"), col("k")).count()
+        .writeStream.outputMode("append").format("parquet")
+        .option("path", s"$base/out")
+        .option("checkpointLocation", s"$base/ckpt")
+        .trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+      spark.readStream.schema(sch).parquet(s"$base/in")
+        .groupBy(col("k")).count()
+        .writeStream.outputMode("update")
+        .option("checkpointLocation", s"$base/ckpt2")
+        .foreachBatch { (bdf: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          bdf.write.mode("overwrite")
+            .option("partitionOverwriteMode", "DYNAMIC")
+            .partitionBy("k").parquet(s"$base/out2")
+        }
+        .trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+    } finally {
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+    }
+  } catch { case _: Throwable => () }
 }

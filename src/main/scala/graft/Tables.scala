@@ -148,6 +148,11 @@ object T {
     * an empty array — silent row loss. Unreachable below ~2^31 rows per
     * group, but keys that argue 100 TB semantics must fail, not lose rows.
     * The guarded value is identical to CAST(e AS INT) whenever it fits.
+    *
+    * Precondition: `e` is non-negative. Only the upper bound is guarded,
+    * so a value below Int.MinValue would still wrap. Both call sites
+    * (`setop_multiset`) pass counts: `nb` is a count_if and `na − nb`
+    * is ≥ 0 because `nb` counts a subset of the rows `na` counts.
     */
   def intExactSql(e: String): String =
     s"CASE WHEN ($e) <= 2147483647 THEN CAST(($e) AS INT) " +
@@ -165,8 +170,7 @@ object T {
   // delta is an unavoidable serial-decode floor. At cluster scale the
   // same decision holds in reverse — healthy multi-row-group inputs give
   // the scan its parallelism for free, so no loader here adds an
-  // unconditional exchange. Bench bands are pinned on this layout
-  // (BASELINE.md).
+  // unconditional exchange.
 }
 
 /** One bundle of driver-contract queries plus their DuckDB oracle SQL. */

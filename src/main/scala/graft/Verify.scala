@@ -1,23 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Match Bench: small splits give fixture-scale scans the same
-      // many-partition shape they'd have on a cluster (see Bench.scala).
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalRun.session()
     // Optional extra confs for local robustness runs (k=v;k=v) — e.g.
     // SPARK_GRAFT_CONF="spark.sql.adaptive.enabled=false" proves results
     // don't depend on AQE re-planning. The driver never sets it.
@@ -30,15 +18,7 @@ object Verify {
         }
       })
     new java.io.File(outDir).mkdirs()
-    // Optional key filter for local isolation runs (mirrors Bench);
-    // the driver never sets it, so driver verifies always dump all keys.
-    val keyFilter = sys.env.get("SPARK_GRAFT_KEYS")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = keyFilter match {
-      case Some(ks) => SparkEntry.queries.filter { case (k, _) => ks(k) }
-      case None     => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
+    LocalRun.select(SparkEntry.queries).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -84,11 +64,7 @@ object Verify {
     // under SPARK_GRAFT_KEYS makes tools/check.py report every
     // unselected key as declared-but-missing, burying the real result
     // (the driver never filters, so driver dumps are always complete).
-    val dumped = keyFilter match {
-      case Some(ks) => SparkEntry.oracleSql.filter { case (k, _) => ks(k) }
-      case None     => SparkEntry.oracleSql
-    }
-    val json = dumped
+    val json = LocalRun.select(SparkEntry.oracleSql)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

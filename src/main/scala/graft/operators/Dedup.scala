@@ -99,8 +99,7 @@ object Dedup extends QueryModule {
   private val ROWS = K / BANDS
   private val as: Seq[Long] = (1 to K).map(i => (1103515245L * i + 12345L) % P)
   private val bs: Seq[Long] = (1 to K).map(i => (2654435761L * i + 1013904223L) % P)
-  // Shared by the dedup_near_minhash key and the candidate-count probe —
-  // one definition, so the probe measures exactly the key's join.
+  // The minhash signature pass of the dedup_near_minhash key.
   //
   // r18 OPTIMIZATION (guide step 2 / §4.1): the 16 affine-min signatures
   // were `array_min(transform(codes, x -> (a*x+b) % P))` — interpreted
@@ -217,7 +216,7 @@ object Dedup extends QueryModule {
     * signature empty, and 32-bit signatures measurably cluster on the
     * fixture vocabulary (band buckets skew, candidate join blows up).
     */
-  private[graft] def simhashDS(s: SparkSession, d: String): DataFrame = {
+  private def simhashDS(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     documents(s, d).select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions(_.map { case (id, text) =>
@@ -251,9 +250,9 @@ object Dedup extends QueryModule {
     * length filter (den·min ≥ num·max, integer arithmetic) prunes
     * further; exact Jaccard over the full sorted arrays then confirms.
     * Versus indexing every shingle this cuts candidate pairs ~14× on
-    * the current fixtures (sf0.1: 1.13 M → 80.6 k, measured r13 by the
-    * candidateCounts probe; the ratio holds at ×4 and ×16 scale, where
-    * both counts grow linearly on sharded corpora) — and candidate
+    * the current fixtures (sf0.1: 1.13 M → 80.6 k pre-confirm pairs,
+    * measured r13; the ratio holds at ×4 and ×16 scale, where both
+    * counts grow linearly on sharded corpora) — and candidate
     * count, not doc count, is what explodes at 100 TB.
     *
     * t = num/den as integers: ⌈t·n⌉ computed as (num·n + den−1) div den.
@@ -271,10 +270,7 @@ object Dedup extends QueryModule {
     */
   /** The prefix-filtered candidate equi-join alone — `d` is the cached
     * (doc_id, codes sorted asc, nsh) table; output = distinct (a_id <
-    * b_id) candidate pairs, pre-confirm. Shared by [[prefixJaccardPairs]]
-    * and the candidate-count scale probe ([[candidateCounts]]): candidate
-    * count, not doc count, is what explodes at 100 TB, so it's the
-    * quantity the probes measure directly.
+    * b_id) candidate pairs, pre-confirm, for [[prefixJaccardPairs]].
     */
   private def prefixCandStage(d: DataFrame, num: Int, den: Int): DataFrame = {
     val pref = d.select(col("doc_id"), col("nsh"),
@@ -339,78 +335,9 @@ object Dedup extends QueryModule {
     * 799999/1000000, NOT the gate: see prefixJaccardPairs for why pruning
     * at exactly 4/5 could drop a pair the rounded gate accepts.
     */
-  private[graft] def jaccardPairs(s: SparkSession, d: String): DataFrame =
+  private def jaccardPairs(s: SparkSession, d: String): DataFrame =
     prefixJaccardPairs(codesDS(s, d).select(col("doc_id"), col("codes")),
       799999, 1000000)
-
-  /** Candidate-count probe (r12 verdict task 3): the pre-confirm
-    * candidate-pair counts of the three dedup candidate joins, measured
-    * on an arbitrary corpus — full inverted-index baseline (what the
-    * prefix filter is cut FROM), the prefix-filtered stage exactly as
-    * the keys run it, its df-capped variant, and the minhash band join
-    * (raw banded rows = join work, distinct pairs = confirm work). Not
-    * a driver key; consumed by the CandProbe dev main, results recorded
-    * in BASELINE.md next to the r12 IVF/simhash scale probes. These are
-    * the same N² worries, now measured rather than argued analytically.
-    */
-  private[graft] def candidateCounts(s: SparkSession, dir: String): Map[String, Long] = {
-    val docs = codesDS(s, dir).select(col("doc_id"), col("codes"))
-    val d = docs.filter(size(col("codes")) > 0)
-      .select(col("doc_id"), col("codes"), size(col("codes")).as("nsh"))
-      .persist()
-    val all = d.select(col("doc_id"), explode(col("codes")).as("sh"))
-    val fullIdx = all.as("a").join(all.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct().count()
-    val prefix = prefixCandStage(d, 799999, 1000000).count()
-    // df-capped variant, the dedup_ngram_capped recipe: stop-list of
-    // shingles present in > 5% of docs, removed before the prefix join.
-    val sh = docs.select(col("doc_id"), explode(col("codes")).as("sh"))
-    val cap = documents(s, dir)
-      .agg(ceil(count(lit(1)) * 0.05).cast("long").as("cap"))
-    val stopArr = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(cap))
-      .filter(col("df") > col("cap"))
-      .agg(sort_array(collect_list(col("sh"))).as("stop"))
-    val capped = docs.crossJoin(broadcast(stopArr))
-      .select(col("doc_id"), array_except(col("codes"), col("stop")).as("codes"))
-      .filter(size(col("codes")) > 0)
-      .select(col("doc_id"), col("codes"), size(col("codes")).as("nsh"))
-      .persist()
-    val prefixCapped = prefixCandStage(capped, 4, 5).count()
-    // minhash band join: raw banded matches (the join's output volume)
-    // and distinct candidate pairs (what the exact-Jaccard confirm pays).
-    val sigs = minhashSigsDS(docs)
-      .persist()
-      .select(col("doc_id"), explode(array(minhashBandExprs: _*)).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.key").as("key"))
-    val banded = sigs.as("a").join(sigs.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .persist()
-    val mhRows = banded.count()
-    val mhPairs = banded.distinct().count()
-    // simhash band join (r14 verdict task 4: ×64 evidence for this
-    // family too): raw banded candidate volume (what the join shuffles
-    // and the hamming confirm scans) and confirmed hamming ≤ 2 pairs —
-    // the same two-number shape as the minhash row above, measured on
-    // the key's exact stages.
-    // The cap is passed EXPLICITLY and identically to both calls (r15
-    // ADVICE): band rows and confirmed pairs must measure ONE pipeline —
-    // the live-knob one — or the two-number join-volume/recall shape is
-    // internally inconsistent (rows uncapped while pairs capped).
-    val shSig = simhashDS(s, dir).persist()
-    val shRows = simhashBandedCands(shSig, SimhashBands, SimhashBandBits,
-      SimhashBandDfCap.toLong).count()
-    val shPairs = simhashBandPairs(shSig, SimhashBands, SimhashBandBits,
-      SimhashBandDfCap.toLong).count()
-    Map("n_docs" -> d.count(), "full_index_pairs" -> fullIdx,
-      "prefix_pairs" -> prefix, "prefix_capped_pairs" -> prefixCapped,
-      "minhash_band_rows" -> mhRows, "minhash_pairs" -> mhPairs,
-      "simhash_band_rows" -> shRows, "simhash_pairs" -> shPairs)
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Exact dedup: one shuffle on the content hash; deterministic survivor
@@ -634,8 +561,8 @@ object Dedup extends QueryModule {
     * the 4×16 banded join measured 596 M candidate rows (≈ N^1.95) and
     * rule-sized 3×20 cut that only 3.5× (169 M, wall 368 → 171 s,
     * confirmed output bit-identical) — ~1000× over the uniform-key
-    * expectation, and NOT from duplicate signatures (SigStats: 316 748
-    * distinct / 320 000, max group 4). Natural-text simhash bits are
+    * expectation, and NOT from duplicate signatures (316 748 distinct
+    * of 320 000, max group 4). Natural-text simhash bits are
     * correlated, so effective band-key entropy ≪ nominal width; at
     * cluster scale budget width against MEASURED band-key df (or mix
     * the bit source, or cap head band keys via
@@ -724,15 +651,11 @@ object Dedup extends QueryModule {
       .dropDuplicates("a_id", "b_id")
   }
 
-  /** The raw banded candidate join `simhashBandPairs` confirms over —
-    * split out so the [[candidateCounts]] scale probe measures the
-    * key's EXACT candidate stage (one definition for key and probe),
-    * the same discipline prefixCandStage/minhashSigExprs follow.
-    */
-  private[graft] def simhashBandedCands(sig: DataFrame,
-                                        bands: Int,
-                                        width: Int,
-                                        capDf: Long = 0L): DataFrame = {
+  /** The raw banded candidate join `simhashBandPairs` confirms over. */
+  private def simhashBandedCands(sig: DataFrame,
+                                 bands: Int,
+                                 width: Int,
+                                 capDf: Long = 0L): DataFrame = {
     val mask = (1L << width) - 1
     val banded0 = sig.select(col("doc_id"), col("simhash"),
       explode(expr(s"sequence(0, ${bands - 1})")).as("band"))
@@ -748,7 +671,7 @@ object Dedup extends QueryModule {
       // r15 plan dump showed the df aggregate + its exchange running
       // twice); the hot HEAD is at most thousands of rows, and the
       // cache collapses both arms onto one aggregation. Reclaimed by
-      // the callers' clearCache discipline (Bench/probes), like the
+      // the callers' clearCache discipline (Bench/Verify), like the
       // signature persist the keys already carry.
       val hot = banded0.groupBy(col("band"), col("bkey"))
         .agg(count(lit(1)).as("df"))

@@ -357,8 +357,8 @@ object Functions extends QueryModule {
                round(try_divide(p_retailprice, p_size - 25), 6) + 0.0 AS div_maybe,
                -- r19 OPTIMIZATION (guide step 2, the r18 bad_ts lesson
                -- applied to the two remaining exception-driven arms;
-               -- TryProbe measured add 0.37 s / cast 0.21 s of this key's
-               -- 0.82 s — every fixture row pays a Java exception in both):
+               -- add measured 0.37 s and cast 0.21 s of this key's 0.82 s —
+               -- every fixture row pays a Java exception in both):
                -- try_add: MAX + x overflows IFF x > 0 (x ≤ 0 keeps the sum
                -- in [MAX+MIN, MAX] = [-1, MAX]), so the guard is an exact
                -- algebraic identity for ALL bigints, not a fixture

@@ -6,9 +6,11 @@ import org.apache.spark.sql.functions._
 /** Sinks (SURVEY.md §2.1): the reference's daily upsert into MySQL
   * (`LogProcessor.py` insert loop [UNVERIFIED]) re-expressed as the
   * 100 TB-scale pattern — date-partitioned parquet with idempotent
-  * partition overwrite. No JDBC here by design: at scale the rest format
-  * IS the table, and a day's re-run must replace exactly that day's
-  * partition (dynamic partition overwrite), never touch the rest.
+  * partition overwrite. At scale the parquet table is the table of
+  * record, and a day's re-run must replace exactly that day's partition
+  * (dynamic partition overwrite), never touch the rest.
+  * [[upsertJdbcCounts]] keeps the reference's RDBMS upsert as a parity
+  * sink for the API-facing aggregate store.
   *
   * Exercised by SinkSpec (unit tests) rather than `SparkEntry.queries` —
   * sinks return no DataFrame for the driver to hash.

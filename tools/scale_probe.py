@@ -38,10 +38,8 @@ count actually materialize more cells, which is what validating the rule
 requires (engine-side knob: SPARK_GRAFT_IVF_CELLS ~ sqrt(N)).
 
 Measurement protocol (manual, recorded in BASELINE.md):
-  SPARK_GRAFT_EARLY_ACCEPT=0 SPARK_GRAFT_KEYS=<set> \
-  SPARK_GRAFT_SF_DIR=<destDir> sbt -batch "runMain graft.Bench"
-(EARLY_ACCEPT=0 = pure min-of-3, no pinned-band machinery — the pins
-are meaningless on synthetic corpora.)
+  SPARK_GRAFT_KEYS=<set> SPARK_GRAFT_SF_DIR=<destDir> \
+  sbt -batch "runMain graft.Bench"
 """
 import os, shutil, sys
 import duckdb
