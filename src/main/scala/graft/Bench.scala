@@ -60,8 +60,7 @@ object Bench {
     untimed("agg_daily_counts")
     keys.headOption.foreach(untimed)
     if (LocalRun.selected("multimodal_binary")) untimed("multimodal_binary")
-    val streaming = operators.Streaming
-    if (keys.exists(streaming.checkpointedKeys)) warmStreaming(spark, streaming.ckptOnShm)
+    if (keys.exists(Staging.checkpointedKeys)) warmStreaming(spark)
     val samples = keys.map { name =>
       val ss =
         try Seq.fill(3) {
@@ -77,7 +76,7 @@ object Bench {
     val results = samples.map { case (k, ss) => k -> ss.min }.toMap
     // `ckpt` says where the streaming keys' checkpoints went: the
     // /dev/shm preference falls back to disk silently.
-    val ckpt = if (streaming.ckptOnShm) "shm" else "tmp"
+    val ckpt = if (Staging.ckptOnShm) "shm" else "tmp"
     // Every key with all its samples; the stdout line carries only the
     // slowest keys.
     val keyJson = samples.map { case (k, ss) =>
@@ -99,53 +98,39 @@ object Bench {
     * aggregation, and the foreachBatch + dynamic-partition-overwrite
     * sink path of pipeline_daily_e2e.
     */
-  private def warmStreaming(spark: SparkSession, onShm: Boolean): Unit = try {
+  private def warmStreaming(spark: SparkSession): Unit = try {
     import org.apache.spark.sql.functions.{col, window}
     import org.apache.spark.sql.streaming.Trigger
-    val base =
-      if (onShm) java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get("/dev/shm"), "graft_warm")
-      else java.nio.file.Files.createTempDirectory("graft_warm")
-    val confKeys = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.streaming.stateStore.providerClass")
-    val saved = confKeys.map(k =>
-      k -> scala.util.Try(Option(spark.conf.get(k))).toOption.flatten)
+    val base = Staging.freshCkptDir("graft_warm")
     try {
       spark.range(100).selectExpr("id AS event_id",
         "timestamp_micros(1704067200000000 + id * 60000000) AS ts",
         "CAST(id % 5 AS STRING) AS k", "CAST(id AS DOUBLE) AS v")
         .coalesce(1).write.parquet(s"$base/in")
       val sch = spark.read.parquet(s"$base/in").schema
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.readStream.schema(sch).parquet(s"$base/in")
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 day"), col("k")).count()
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-        .awaitTermination()
-      spark.readStream.schema(sch).parquet(s"$base/in")
-        .groupBy(col("k")).count()
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", s"$base/ckpt2")
-        .foreachBatch { (bdf: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          bdf.write.mode("overwrite")
-            .option("partitionOverwriteMode", "DYNAMIC")
-            .partitionBy("k").parquet(s"$base/out2")
-        }
-        .trigger(Trigger.AvailableNow()).start()
-        .awaitTermination()
-    } finally {
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
+      Staging.withConf(spark, "spark.sql.shuffle.partitions" -> "4",
+          "spark.sql.streaming.stateStore.providerClass" ->
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+        spark.readStream.schema(sch).parquet(s"$base/in")
+          .withWatermark("ts", "1 hour")
+          .groupBy(window(col("ts"), "1 day"), col("k")).count()
+          .writeStream.outputMode("append").format("parquet")
+          .option("path", s"$base/out")
+          .option("checkpointLocation", s"$base/ckpt")
+          .trigger(Trigger.AvailableNow()).start()
+          .awaitTermination()
+        spark.readStream.schema(sch).parquet(s"$base/in")
+          .groupBy(col("k")).count()
+          .writeStream.outputMode("update")
+          .option("checkpointLocation", s"$base/ckpt2")
+          .foreachBatch { (bdf: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+            bdf.write.mode("overwrite")
+              .option("partitionOverwriteMode", "DYNAMIC")
+              .partitionBy("k").parquet(s"$base/out2")
+          }
+          .trigger(Trigger.AvailableNow()).start()
+          .awaitTermination()
       }
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    } finally Staging.rmr(java.nio.file.Paths.get(base))
   } catch { case _: Throwable => () }
 }

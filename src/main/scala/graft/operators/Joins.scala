@@ -191,7 +191,7 @@ object Joins extends QueryModule {
     // sf under /tmp and re-registered per session; MERGE hint keeps the
     // bucket-aware SMJ even when one side would broadcast at test scale.
     "join_bucketed_colocated" -> ((s, d) => {
-      val tag = new java.io.File(d).getName.replaceAll("[^A-Za-z0-9]", "_")
+      val tag = graft.Staging.tag(d)
       val base = s"/tmp/graft_buckets_$tag"
       def ensure(name: String, key: String)(build: => DataFrame): Unit =
         if (!s.catalog.tableExists(name))

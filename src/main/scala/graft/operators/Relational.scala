@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryModule, T}
+import graft.{QueryModule, Staging, T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,38 +21,32 @@ import org.apache.spark.sql.functions._
 object Relational extends QueryModule {
   import T._
 
+  /** Day-partitioned at-rest copy of events, staged once per events
+    * fingerprint into /tmp by [[graft.Staging.once]], like the streaming
+    * arrival dirs. `_STAGED` at the dir root is underscore-prefixed, so
+    * the parquet file index ignores it like `_SUCCESS`.
+    */
+  private def eventsByDay(s: SparkSession, d: String): DataFrame = {
+    val path = s"/tmp/graft_events_by_day_${Staging.tag(d)}"
+    val staged = events(s, d).withColumn("day", to_date(col("ts")))
+    Staging.once(path, Staging.eventsFingerprint(s, d)) { tmp =>
+      staged.write.mode("overwrite").partitionBy("day").parquet(tmp.toString)
+    }
+    // Explicit schema on the read-back: an EMPTY source stages zero day
+    // partitions — only the _STAGED marker — and bare inference throws
+    // where the correct answer is the empty table. Partition discovery
+    // (and so PartitionFilters/DPP) is directory-driven and unaffected;
+    // `day` sits last, exactly where partition columns land under
+    // inference.
+    s.read.schema(staged.schema).parquet(path)
+  }
+
   /** Exact integer power sums Σx..Σx⁴ (x integral) via the codegen'd
     * 128-bit sum (graft.functions.Int128SumDouble): order-independent
     * partial aggregation, overflow-proof to 2¹²⁷, correctly-rounded
     * double out — DECIMAL(38,0) gave the same guarantees at ~3× the cost
     * (per-row BigDecimal off the long-backed fast path).
     */
-  /** Day-partitioned at-rest copy of events, staged once per fixture into
-    * /tmp behind the SAME fingerprint-guarded marker as the streaming
-    * arrival dirs (Streaming.ensureStaged). The original guard here was a
-    * name-only `_SUCCESS` existence check — the exact silent-stale-data
-    * class the r7 streaming marker rewrite eliminated, but these two
-    * batch sites never migrated: the round-10 NULL-injection universe
-    * caught scan_dpp serving the PRE-rewrite fixture. `_STAGED` at the
-    * dir root is underscore-prefixed, so the parquet file index ignores
-    * it like `_SUCCESS`.
-    */
-  private def eventsByDay(s: SparkSession, d: String): DataFrame = {
-    val tag = new java.io.File(d).getName.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"/tmp/graft_events_by_day_$tag"
-    val staged = events(s, d).withColumn("day", to_date(col("ts")))
-    Streaming.ensureStaged(s, d, path) {
-      staged.write.mode("overwrite").partitionBy("day").parquet(path)
-    }
-    // Explicit schema on the read-back: an EMPTY source stages zero day
-    // partitions — only the _STAGED marker — and bare inference throws
-    // where the correct answer is the empty table (all-empty probe,
-    // r11). Partition discovery (and so PartitionFilters/DPP) is
-    // directory-driven and unaffected; `day` sits last, exactly where
-    // partition columns land under inference.
-    s.read.schema(staged.schema).parquet(path)
-  }
-
   private def powerSums(x: String) = Seq(
     expr(s"sum_i128($x)").as(s"s1_$x"),
     expr(s"sum_i128($x*$x)").as(s"s2_$x"),

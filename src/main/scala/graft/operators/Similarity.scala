@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryModule, T}
+import graft.{QueryModule, Staging, T}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
@@ -620,24 +620,6 @@ object Similarity extends QueryModule {
     org.apache.spark.sql.types.StructField("cell",
       org.apache.spark.sql.types.LongType)))
 
-  /** Content fingerprint of the embeddings fixture under `d` (row count
-    * + order-independent xxhash64 XOR over full rows), cached per (dir,
-    * on-disk file signature) — the staged-index staleness guard, the
-    * same recipe as Streaming.eventsFingerprint: a regenerated fixture
-    * must re-stage instead of silently serving a stale index.
-    */
-  private val embFpCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def embFingerprint(s: SparkSession, d: String): String = {
-    val key =
-      s"$d|${Streaming.fileSig(java.nio.file.Paths.get(s"$d/embeddings.parquet"))}"
-    embFpCache.getOrElseUpdate(key, {
-      val r = embeddings(s, d).agg(count(lit(1)),
-        expr("bit_xor(xxhash64(vec_id, embedding, label))")).head()
-      s"rows=${r.getLong(0)};xor=${r.get(1)}"
-    })
-  }
-
   /** The trained IVF index — (centroids, full-corpus cell assignment) —
     * staged ONCE per (fixture content, knob fingerprint) behind a
     * content-marker guard and read back by every consumer key (r13
@@ -659,12 +641,10 @@ object Similarity extends QueryModule {
     * the centroid table a small broadcast-side dimension; the build is
     * an INSERT OVERWRITE whose atomicity comes from the table commit
     * protocol, and freshness from the ingest pipeline that owns the
-    * corpus — not from this marker file. Staging is atomic (r15): the
-    * index is built complete — marker included — under a pid-unique
-    * temp sibling and published by rename
-    * ([[Streaming.atomicPublishDir]]), so concurrent builders can race
-    * but never tear each other's output; the rename loser adopts the
-    * winner's verified-identical index.
+    * corpus — not from this marker file. Staging goes through
+    * [[graft.Staging.once]]: the index is built complete under a
+    * pid-unique temp sibling and published by rename, so concurrent
+    * builders can race but never tear each other's output.
     */
   // Trainer/assignment ALGORITHM version, part of the staging
   // fingerprint AND the dir name: the content fingerprint only guards
@@ -681,13 +661,9 @@ object Similarity extends QueryModule {
 
   private def stagedIvf(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     graft.functions.VectorFunctions.register(s)
-    val tag = new java.io.File(d).getName.replaceAll("[^A-Za-z0-9]", "_")
     val knobs =
       s"v=$IvfIndexVersion;cells=$IvfCells;mod=$IvfSampleMod;iters=$IvfIters"
-    val path =
-      s"/tmp/graft_ivf_${tag}_${(knobs.hashCode & 0x7fffffff).toHexString}"
-    val marker = java.nio.file.Paths.get(s"$path/_STAGED")
-    val fp = s"${embFingerprint(s, d)};$knobs"
+    val path = s"/tmp/graft_ivf_${Staging.tag(d)}_${(knobs.hashCode & 0x7fffffff).toHexString}"
     // A staged index for a TEMP fixture (generated test/degen corpora
     // under java.io.tmpdir, each with a unique dir name) can never be
     // reused by another JVM — reap it at exit instead of accumulating
@@ -697,48 +673,24 @@ object Similarity extends QueryModule {
     if (new java.io.File(d).getAbsolutePath.startsWith(tmpRoot) &&
         reapAtExit.putIfAbsent(path, ()).isEmpty)
       sys.addShutdownHook {
-        try Streaming.rmr(java.nio.file.Paths.get(path))
+        try Staging.rmr(java.nio.file.Paths.get(path))
         catch { case _: Throwable => () }
       }
-    val ok = scala.util.Try(java.nio.file.Files.readString(marker))
-      .toOption.contains(fp)
-    if (!ok) {
-      // Build the whole index — cents, assign, marker — under a
-      // pid-unique temp sibling, then publish with atomic renames
-      // (r14 verdict task 3): a reader can never observe a dir whose
-      // marker verifies but whose parquet is absent/torn, because the
-      // marker only ever becomes visible together with the complete
-      // content it describes. Two concurrent builders race only at the
-      // final rename; the loser re-verifies the winner's marker and —
-      // same (content fingerprint, knobs) ⇒ byte-identical derivation —
-      // adopts it.
-      val tmp = java.nio.file.Paths.get(
-        s"$path.tmp.${ProcessHandle.current().pid()}")
-      Streaming.rmr(tmp)
-      java.nio.file.Files.createDirectories(tmp)
-      try {
-        val e = embeddings(s, d).filter(expr(usableVec("embedding")))
-        trainCentroidsN(s, e)
-          .write.mode("overwrite").parquet(s"$tmp/cents")
-        // Assignment against the PERSISTED centroids (read back, not the
-        // in-memory checkpoint) so the staged index is self-consistent
-        // by construction even across process restarts mid-staging.
-        val cents = s.read.schema(centsReadSchema).parquet(s"$tmp/cents")
-        assignCells(
-          e.select(col("vec_id"), col("embedding"),
-            expr("sqrt(dot_f32(embedding, embedding))").as("norm")),
-          cents)
-          .write.mode("overwrite").parquet(s"$tmp/assign")
-        java.nio.file.Files.writeString(tmp.resolve("_STAGED"), fp)
-        Streaming.atomicPublishDir(tmp, java.nio.file.Paths.get(path))
-      } catch {
-        case _: Throwable
-            if scala.util.Try(java.nio.file.Files.readString(marker))
-              .toOption.contains(fp) =>
-          // Lost the publish race, but a verified identical index is in
-          // place — adopt it. Any failure WITHOUT a valid marker rethrows.
-          ()
-      } finally Streaming.rmr(tmp)
+    val embFp = Staging.fingerprint(s"$d/embeddings.parquet", embeddings(s, d),
+      Seq("vec_id", "embedding", "label"))
+    Staging.once(path, s"$embFp;$knobs") { tmp =>
+      val e = embeddings(s, d).filter(expr(usableVec("embedding")))
+      trainCentroidsN(s, e)
+        .write.mode("overwrite").parquet(s"$tmp/cents")
+      // Assignment against the PERSISTED centroids (read back, not the
+      // in-memory checkpoint) so the staged index is self-consistent
+      // by construction even across process restarts mid-staging.
+      val cents = s.read.schema(centsReadSchema).parquet(s"$tmp/cents")
+      assignCells(
+        e.select(col("vec_id"), col("embedding"),
+          expr("sqrt(dot_f32(embedding, embedding))").as("norm")),
+        cents)
+        .write.mode("overwrite").parquet(s"$tmp/assign")
     }
     (s.read.schema(centsReadSchema).parquet(s"$path/cents"),
       s.read.schema(assignReadSchema).parquet(s"$path/assign"))

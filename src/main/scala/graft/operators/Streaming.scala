@@ -1,8 +1,10 @@
 package graft.operators
 
-import graft.{QueryModule, T}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{QueryModule, Staging, T}
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Event-time windowing (SURVEY.md §2.9).
   *
@@ -26,282 +28,121 @@ import org.apache.spark.sql.functions._
 object Streaming extends QueryModule {
   import T._
 
-  private[graft] def rmr(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-  }
-
-  /** Publish a fully-built staging directory at `dst` via atomic rename
-    * (r14 verdict task 3): the old rmr-then-write-in-place staging left a
-    * window where a second JVM saw — or tore — a half-written dir before
-    * the marker landed. Here `tmp` is complete (marker included) before
-    * any rename, the previous generation is moved ASIDE (rename, not a
-    * slow recursive delete) and only then deleted, and `tmp` lands at
-    * `dst` in one rename. Both paths must share a filesystem (same /tmp
-    * parent by construction). A concurrent publisher that wins the race
-    * makes our second rename throw — the caller re-verifies the marker
-    * and accepts the identical winner (same fingerprint ⇒ same content).
-    */
-  private[graft] def atomicPublishDir(tmp: java.nio.file.Path,
-      dst: java.nio.file.Path): Unit = {
-    val retired = java.nio.file.Paths.get(
-      s"$dst.old.${ProcessHandle.current().pid()}")
-    var published = false
-    try {
-      if (java.nio.file.Files.exists(dst))
-        java.nio.file.Files.move(dst, retired,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      java.nio.file.Files.move(tmp, dst,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      published = true
-    } finally {
-      // Failed move-in with the old generation already retired: ROLL
-      // BACK (rename retired into place) so a failed publish never
-      // leaves the destination absent — the first cut of this helper
-      // deleted `retired` unconditionally and a late rename failure
-      // destroyed the only live generation (caught by StreamingSpec's
-      // ghost-publish probe). The retired copy is deleted only once a
-      // valid generation — ours or a concurrent winner's — sits at dst.
-      if (!published && !java.nio.file.Files.exists(dst) &&
-          java.nio.file.Files.exists(retired))
-        try java.nio.file.Files.move(retired, dst,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch { case _: Throwable => () }
-      if (java.nio.file.Files.exists(dst))
-        try rmr(retired) catch { case _: Throwable => () }
-    }
-  }
-
-  /** Temp dir that outlives the returned lazy DataFrame (the streaming
-    * sink's output must stay readable until the caller's action runs) but
-    * is reaped at JVM exit — repeat invocations (bench min-of-3) would
-    * otherwise leak one dir per run (r6 ADVICE).
-    */
-  private def tempDirReapedAtExit(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    sys.addShutdownHook { try rmr(p) catch { case _: Throwable => () } }
-    p.toString
-  }
-
-  /** Fresh per-run checkpoint dir, preferring RAM-backed tmpfs
-    * (`/dev/shm`) over the disk-backed default temp dir. A streaming
-    * checkpoint is many small writes (offset log, commit log, one
-    * state-store delta per partition per micro-batch); for THESE runs it
-    * is pure harness scaffolding — created fresh and deleted in the
-    * `finally` — so its durability is irrelevant and it has no business
-    * on disk. Measured r9 (3-JVM isolated medians of the 9-key family,
-    * identical protocol): ext4 10.57 s vs tmpfs 10.09 / 10.91 s across
-    * two same-code re-runs — i.e. NEUTRAL within the noise band (the OS
-    * page cache already absorbs the small non-fsynced writes); kept on
-    * principle, not claimed as a win. The same protocol rejected
-    * 2 state partitions (10.6 s vs 4's 10.09–10.91): at ~10 state keys,
-    * scan/agg parallelism beats per-store constant overhead. The
-    * family's ~10 s floor is the per-query streaming start/stop constant
-    * (6 checkpointed multi-micro-batch queries × 3 bench samples), not
-    * removable by storage or partition config. One later trim that IS
-    * semantics-free: skipping the trailing no-data micro-batch on the
-    * keys whose emission never depends on it (see the per-key withConf
-    * sites and BASELINE.md's no-data addendum). A real deployment's
-    * checkpoint carries the restart contract and belongs on durable
-    * shared storage (HDFS/S3 via `checkpointLocation`) — this helper is
-    * explicitly the ephemeral-bench path, not deployment advice.
-    */
-  /** The single /dev/shm-usable predicate — Bench reports the checkpoint
-    * regime from THIS value so the report can never drift from what
-    * freshCkptDir actually does (review r10).
-    */
-  private[graft] def ckptOnShm: Boolean =
-    java.nio.file.Files.isWritable(java.nio.file.Paths.get("/dev/shm"))
-
-  /** The six checkpointed streaming keys (fresh checkpoint + real
-    * micro-batch runs per invocation). Bench derives its warm-up and
-    * two-sample-cap set from HERE so a future seventh key cannot be
-    * silently left out (review r10).
-    */
-  private[graft] val checkpointedKeys: Set[String] = Set(
-    "stream_batch_equiv", "stream_late_drop", "stream_dedup",
-    "stream_stateful_totals", "stream_stream_join", "pipeline_daily_e2e")
-
-  private def freshCkptDir(prefix: String): String = {
-    val p =
-      if (ckptOnShm)
-        java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get("/dev/shm"), prefix)
-      else java.nio.file.Files.createTempDirectory(prefix)
-    p.toString
-  }
-
-  /** Run `body` with session confs temporarily set, restoring (or
-    * unsetting) every key on ALL exit paths. The streaming keys size
-    * state parallelism / pick the state-store provider per query; a
-    * leaked conf would silently change every subsequent batch key's
-    * plan, so the restore must be unforgettable.
-    */
-  private def withConf[A](s: SparkSession, kvs: (String, String)*)(body: => A): A = {
-    val saved = kvs.map { case (k, _) =>
-      k -> scala.util.Try(Option(s.conf.get(k))).toOption.flatten
-    }
-    kvs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
-
   /** Stage `df` as ONE flat parquet part-file at `dir/name.parquet` with
     * an explicit mtime — the staged-arrival recipe shared by the
     * micro-batch keys (the file stream source lists plain files, not
     * parquet output dirs, and orders pending files by modification time).
     */
-  private def stageSingleFile(df: DataFrame, dir: String, name: String,
+  private def stageSingleFile(df: DataFrame, dir: Path, name: String,
                               mtime: Long): Unit = {
-    val stage = java.nio.file.Files.createTempDirectory("graft_stage")
+    val stage = Files.createTempDirectory("graft_stage")
     try {
       val tmp = s"$stage/$name"
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get.toPath
-      val dst = java.nio.file.Paths.get(s"$dir/$name.parquet")
-      java.nio.file.Files.move(part, dst,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      java.nio.file.Files.setLastModifiedTime(dst,
+      val dst = dir.resolve(s"$name.parquet")
+      Files.move(part, dst, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(mtime))
-    } finally rmr(stage)
+    } finally Staging.rmr(stage)
   }
 
-  /** On-disk signature of the fixture path — cheap, no Spark job. Keys
-    * the fingerprint cache so a fixture regenerated MID-JVM (long bench
-    * session) still misses the cache and is re-fingerprinted (r8
-    * ADVICE). r15 (r14 ADVICE): the old total-bytes + max-mtime-millis
-    * pair collided when a fixture was regenerated in place with
-    * identical total size within the same millisecond (or on a
-    * coarse-mtime filesystem) — now a SHA-256 over the sorted per-file
-    * (relative name, size, mtime-NANOS) listing plus the file count, so
-    * any file added, removed, renamed, resized, or retouched at
-    * nanosecond granularity changes the signature. (Spark part-file
-    * names carry a fresh task UUID per write, so even a same-instant
-    * in-place rewrite changes the listing.)
+  // Integer cents of `value`. try_cast, not cast: one non-finite or
+  // overflowing value (NaN, ±Inf, |v| ≳ 9.2e16 — every real 100 TB log has
+  // some) would otherwise kill the whole streaming job with CAST_OVERFLOW.
+  // NULL cents skip a sum while the row still counts; the oracles'
+  // TRY_CAST agrees on every input class.
+  private val cents: Column = expr("try_cast(round(value * 100) AS BIGINT)")
+
+  /** One arrival dir of a staged stream, relative to the input dir, and
+    * the file (or dir) relative to it whose footer gives the stream's
+    * schema. `oneFilePerBatch` makes each arrival file its own
+    * micro-batch, in mtime order.
     */
-  private[graft] def fileSig(p: java.nio.file.Path): String = {
-    import scala.jdk.CollectionConverters._
-    if (!java.nio.file.Files.exists(p)) "absent"
-    else {
-      val fs = java.nio.file.Files.walk(p).iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_)).toSeq
-      val listing = fs.map { f =>
-        val nanos = java.nio.file.Files.getLastModifiedTime(f)
-          .to(java.util.concurrent.TimeUnit.NANOSECONDS)
-        s"${p.relativize(f)}:${java.nio.file.Files.size(f)}:$nanos"
-      }.sorted.mkString("\n")
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(listing.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      s"n=${fs.size};sha=${digest.take(12).map("%02x".format(_)).mkString}"
+  private final case class Arrivals(schemaOf: String, dir: String = "",
+                                    oneFilePerBatch: Boolean = true)
+
+  /** How an emission lands in the run's output dir. */
+  private type Sink = (DataStreamWriter[Row], String) => DataStreamWriter[Row]
+
+  private val appendFiles: Sink = (w, out) =>
+    w.outputMode("append").format("parquet").option("path", out)
+
+  // Complete-mode foreachBatch: each trigger delivers the full updated
+  // aggregate; the idempotent overwrite is the exactly-once upsert analog
+  // (a real deployment would MERGE day-partitions).
+  private val rewriteAll: Sink = (w, out) =>
+    w.outputMode("complete").foreachBatch { (bdf: Dataset[Row], _: Long) =>
+      bdf.write.mode("overwrite").parquet(out)
     }
-  }
 
-  /** Content fingerprint of the events fixture under `d`: row count, max
-    * event ts, and an order-independent xxhash64 XOR over every row's
-    * full content (one tiny agg job, cached per (dir, file signature)).
-    * Written into each staged-input marker so a REGENERATED fixture
-    * restages instead of silently reusing stale arrival files — the r7
-    * name-only `_STAGED` marker was a silent-wrong-data class. The XOR
-    * term closes the r8 gap: a regeneration that preserved row count and
-    * max ts but changed values/types/ids now changes the fingerprint.
-    */
-  private val fpCache = scala.collection.concurrent.TrieMap.empty[String, String]
-  private[graft] def eventsFingerprint(s: SparkSession, d: String): String = {
-    val key = s"$d|${fileSig(java.nio.file.Paths.get(s"$d/events.parquet"))}"
-    fpCache.getOrElseUpdate(key, {
-      // props participates in the XOR: a regeneration changing ONLY props
-      // (same ids/ts/types/values) must still change the fingerprint —
-      // the staged copies carry full rows incl. props (review r10).
-      val r = events(s, d).agg(count(lit(1)), max(col("ts")),
-        expr("bit_xor(xxhash64(event_id, ts, event_type, value, user_id, props))")).head()
-      s"rows=${r.getLong(0)};maxTs=${r.get(1)};xor=${r.get(2)}"
-    })
-  }
-
-  /** Marker-guarded staging: reuse `in` only when `_STAGED` holds the
-    * CURRENT fixture fingerprint; on mismatch (first run, regenerated
-    * fixture, interrupted prior staging, or an unreadable/garbage marker
-    * — the read is Try-wrapped, never a key failure) wipe the dir and
-    * restage. The marker is written last, so a crash mid-staging can
-    * never leave a dir that passes the guard.
-    */
-  private[graft] def ensureStaged(s: SparkSession, d: String, in: String)
-                                 (stage: => Unit): Unit = {
-    val marker = java.nio.file.Paths.get(s"$in/_STAGED")
-    val fp = eventsFingerprint(s, d)
-    val ok = scala.util.Try(java.nio.file.Files.readString(marker))
-      .toOption.contains(fp)
-    if (!ok) {
-      rmr(java.nio.file.Paths.get(in))
-      new java.io.File(in).mkdirs()
-      stage
-      java.nio.file.Files.writeString(marker, fp)
+  // Idempotent upsert: each batch dynamically overwrites only the `by`
+  // partitions it emitted; partitions silent in a later batch keep their
+  // last written rows.
+  private def upsertBy(by: String): Sink = (w, out) =>
+    w.outputMode("update").foreachBatch { (bdf: Dataset[Row], _: Long) =>
+      bdf.write.mode("overwrite")
+        .option("partitionOverwriteMode", "DYNAMIC")
+        .partitionBy(by).parquet(out)
     }
-  }
 
-  /** Arrival-file schema gate (r13 verdict task 3): the file stream
-    * source with a user-provided schema silently NULL-fills a column
-    * that a drifted arrival file dropped — rows flow, aggregate under a
-    * phantom NULL group, and the result is silently wrong relative to
-    * the source of truth; a corrupt/truncated file fails only once the
-    * micro-batch actually reads it. At 100 TB's at-least-once ingest
-    * (files landing in a drop folder from many writers), both are
-    * routine, so validate every arrival file's FOOTER against the
-    * expected schema BEFORE starting the stream — the schema-registry
-    * gate every production ingest runs, one footer read per file, never
-    * data-scaled — applied at EVERY staged-arrival read site (all six
-    * checkpointed keys, both join-source dirs included; r14 review
-    * find: the gate began life on stream_late_drop only, leaving the
-    * other drop folders exposed to the same NULL-fill class).
-    * Poison → one loud error naming the file; extra
-    * columns are benign (the explicit-schema reader ignores them);
-    * recovery = remove/fix the named file (the staged dir is input, not
-    * ours to rewrite). Probed end-to-end by tools/degen_check.py's
-    * arrival_poison family: corrupt footer, type drift, dropped column
-    * — all LOUD with zero committed output, then green again once the
-    * poison is removed.
+  /** The checkpointed streaming keys' shared run: stage the input, gate
+    * and read every arrival dir as a stream, drain it through `query`
+    * with an AvailableNow trigger into `sink` on a fresh checkpoint, and
+    * read the output back with the emission's own schema (a run that
+    * emits nothing leaves no footer to infer from; the right answer is
+    * the empty result).
+    *
+    * The input is `/tmp/graft_<name>_in_<tag>`, staged by `stage` once
+    * per events fingerprint ([[Staging.once]]); with `perRun` it is
+    * instead a fresh temp dir staged every run and deleted after it. The
+    * checkpoint is deleted after the run, success or not; the output dir
+    * lives until JVM exit because the returned DataFrame reads it lazily.
+    *
+    * Confs: 4 state partitions instead of the session's one per core —
+    * state parallelism tracks key cardinality (~10 groups here), and each
+    * state store adds checkpoint files per micro-batch; the value is baked
+    * into the fresh checkpoint, so restoring the session conf afterwards
+    * is safe. No-data micro-batches are off: they only advance the
+    * watermark, and no key but stream_late_drop emits on a watermark
+    * advance. `confs` override these.
     */
-  private[graft] def validateArrivals(s: SparkSession, in: String,
-      expected: org.apache.spark.sql.types.StructType): Unit = {
-    // Gate EXACTLY the file set the stream source will list (r14
-    // ADVICE): the source does NOT filter by extension — it lists every
-    // file Spark's hidden-path rule admits — so an extension-based gate
-    // (the r14 `.parquet`-only filter) let a drifted `data.pq` or
-    // `part-000.snappy` bypass the footer check and reopen the
-    // NULL-fill/late-crash class. Mirror the listing rule
-    // (InMemoryFileIndex.shouldFilterOutPathName): hidden = starts with
-    // "." / in-flight "._COPYING_" / starts with "_" without "=" —
-    // except the `_metadata`/`_common_metadata` names, which the source
-    // DOES list and the gate must therefore check too.
-    def sourceLists(name: String): Boolean = {
-      val excluded = (name.startsWith("_") && !name.contains("=")) ||
-        name.startsWith(".") || name.endsWith("._COPYING_")
-      val readmitted =
-        name.startsWith("_metadata") || name.startsWith("_common_metadata")
-      !excluded || readmitted
-    }
-    val files = Option(new java.io.File(in).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && sourceLists(f.getName))
-      .sortBy(_.getName)
-    files.foreach { f =>
-      val sch = try s.read.parquet(f.getPath).schema catch {
-        case e: Throwable => throw new IllegalArgumentException(
-          s"poisoned arrival file ${f.getName}: unreadable parquet footer " +
-            s"(${e.getMessage})", e)
+  private def runStaged(s: SparkSession, d: String, name: String,
+      sources: Seq[Arrivals], sink: Sink, perRun: Boolean = false,
+      confs: Seq[(String, String)] = Nil)(stage: Path => Unit)(
+      query: Seq[DataFrame] => DataFrame): DataFrame = {
+    val out  = Staging.tempDirReapedAtExit(s"graft_${name}_out")
+    val ckpt = Staging.freshCkptDir(s"graft_${name}_ckpt")
+    val in =
+      if (perRun) Files.createTempDirectory(s"graft_${name}_in")
+      else Paths.get(s"/tmp/graft_${name}_in_${Staging.tag(d)}")
+    val allConfs = (Seq(
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.streaming.minBatchesToRetain" -> "2",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++ confs).toMap
+    Staging.withConf(s, allConfs.toSeq: _*) { try {
+      if (perRun) stage(in)
+      else Staging.once(in.toString, Staging.eventsFingerprint(s, d))(stage)
+      val streams = sources.map { a =>
+        val dir = in.resolve(a.dir).toString
+        val schema = s.read.parquet(in.resolve(a.schemaOf).toString).schema
+        // Fail loud on a poisoned arrival file before the stream starts.
+        Staging.validateArrivals(s, dir, schema)
+        val reader = s.readStream.schema(schema)
+        (if (a.oneFilePerBatch) reader.option("maxFilesPerTrigger", "1")
+         else reader).parquet(dir)
       }
-      expected.fields.foreach { fld =>
-        val got = sch.fields.find(_.name == fld.name)
-        require(got.exists(_.dataType == fld.dataType),
-          s"poisoned arrival file ${f.getName}: column ${fld.name} expected " +
-            s"${fld.dataType.simpleString}, got " +
-            got.map(_.dataType.simpleString).getOrElse("MISSING"))
-      }
-    }
+      val emitted = query(streams)
+      sink(emitted.writeStream.option("checkpointLocation", ckpt), out)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+      s.read.schema(emitted.schema).parquet(out)
+    } finally {
+      Staging.rmr(Paths.get(ckpt))
+      if (perRun) Staging.rmr(in)
+    } }
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -324,7 +165,7 @@ object Streaming extends QueryModule {
 
     // Stream-equals-batch equivalence, driver-checked: a TRUE Structured
     // Streaming run (readStream file source → tumbling-window stateful agg
-    // → foreachBatch upsert into a serving table, Trigger.AvailableNow) —
+    // → foreachBatch upsert into a serving table, AvailableNow trigger) —
     // the reference's cron-driven daily batch made incremental — whose
     // final table must equal the batch SQL oracle. Aggregates are
     // integer-exact (count + cents sum) so incremental state-merge order
@@ -332,75 +173,26 @@ object Streaming extends QueryModule {
     // operational ingest shape: new log files land, AvailableNow drains
     // them through bounded state, foreachBatch upserts day-partitions.
     "stream_batch_equiv" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      // Stream sources can't infer schema: take it from the batch reader
-      // (ts arrives as raw long / NTZ per fixture generation — see
-      // T.events; T.normalizeTs below maps either to TIMESTAMP).
+      // Stream sources can't infer schema: the runner takes it from the
+      // batch reader (ts arrives as raw long / NTZ per fixture generation —
+      // see T.events; T.normalizeTs below maps either to TIMESTAMP).
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema = s.read.parquet(s"$d/events.parquet").schema
-      val out  = tempDirReapedAtExit("graft_sbe_out")
-      val ckpt = freshCkptDir("graft_sbe_ckpt")
       // The file stream source watches a DIRECTORY (its real contract:
       // log files landing in a drop folder); the fixture is a single
-      // file, so stage it into one via symlink — read-only, zero copy.
-      val in = java.nio.file.Files.createTempDirectory("graft_sbe_in")
-      // Checkpoint + staged input are dead once the query terminates;
-      // remove them even when the streaming run throws (r6 ADVICE: a
-      // failure before cleanup leaked all three dirs).
-      // State-store parallelism: the session's 32 shuffle partitions mean
-      // 32 state-store instances (each with its own checkpoint delta/
-      // snapshot files) for ~10 (day, event_type) groups — pure constant
-      // overhead per micro-batch. 4 partitions hold the same state with
-      // 8× fewer checkpoint files; the value is baked into the fresh
-      // checkpoint at query start, so restoring the session conf after
-      // is safe. At real scale the key cardinality (days × types) stays
-      // small, so a low state-partition count is the RIGHT setting there
-      // too — state parallelism should track key cardinality, not the
-      // batch shuffle width.
-      // No-data micro-batches exist to advance the watermark so append-mode
-      // aggregations can emit closed windows; this query has no watermark
-      // (complete mode re-emits the full aggregate every batch), so a
-      // trailing no-data batch would only re-run the foreachBatch full
-      // rewrite for nothing. Disabled here and on every streaming key whose
-      // emission doesn't depend on a post-data watermark advance; the one
-      // key that DOES (stream_late_drop: append agg emits closed day
-      // windows only when the watermark passes them) keeps the default.
-      withConf(s, "spark.sql.shuffle.partitions" -> "4",
-          "spark.sql.streaming.minBatchesToRetain" -> "2",
-          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") { try {
-        java.nio.file.Files.createSymbolicLink(
-          in.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
-        validateArrivals(s, in.toString, schema)
-        val agg = T.normalizeTs(s.readStream.schema(schema).parquet(in.toString))
+      // file, so each run stages it into a fresh dir via symlink —
+      // read-only, zero copy. Complete mode has no watermark, so a
+      // trailing no-data batch would only redo the full rewrite.
+      runStaged(s, d, "sbe", Seq(Arrivals("events.parquet", oneFilePerBatch = false)),
+          rewriteAll, perRun = true) { in =>
+        Files.createSymbolicLink(in.resolve("events.parquet"),
+          Paths.get(s"$d/events.parquet").toAbsolutePath)
+      } { case Seq(ev) =>
+        T.normalizeTs(ev)
           .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            // try_cast, not cast: a single non-finite/overflow value (NaN,
-            // ±Inf, |v| ≳ 9.2e16 — every real 100 TB log has some) would
-            // otherwise kill the whole streaming job with CAST_OVERFLOW
-            // (measured, r11 dirty-values corpus). NULL cents skip the
-            // sum while the row still counts; the oracle's TRY_CAST
-            // agrees on every input class.
-            sum(expr("try_cast(round(value * 100) AS BIGINT)")).as("total_cents"))
+          .agg(count(lit(1)).as("n"), sum(cents).as("total_cents"))
           .select(col("w.start").cast("date").as("day"), col("event_type"),
             col("n"), col("total_cents"))
-        val q = agg.writeStream
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          // Complete-mode foreachBatch: each trigger delivers the full
-          // updated aggregate; the idempotent overwrite is the exactly-once
-          // upsert analog (a real deployment would MERGE day-partitions).
-          .foreachBatch { (bdf: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            bdf.write.mode("overwrite").parquet(out)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        // Explicit schema on the read-back (r11 review): a zero-row
-        // corpus leaves `out` with no parquet footer to infer from; the
-        // correct answer is the empty aggregate, not an inference error.
-        s.read.schema(agg.schema).parquet(out)
-      } finally { rmr(java.nio.file.Paths.get(ckpt)); rmr(in) } }
+      }
     }),
 
     // Watermark late-data semantics, driver-checked: the events table is
@@ -423,73 +215,28 @@ object Streaming extends QueryModule {
     // bounded state via watermark, deterministic lateness cutoff, no
     // double-emits for closed windows.
     "stream_late_drop" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
       val cutoff = lit(java.sql.Timestamp.valueOf("2024-01-10 00:00:00"))
       val mid    = lit(java.sql.Timestamp.valueOf("2024-01-05 00:00:00"))
-      val out  = tempDirReapedAtExit("graft_sld_out")
-      val ckpt = freshCkptDir("graft_sld_ckpt")
-      // The three arrival files are a pure function of the fixture: stage
-      // them ONCE per sf into a marker-guarded fixed dir (the
-      // scan_partition_pruned recipe) and reuse across invocations — only
-      // the checkpoint must be fresh per run (a reused one would replay
-      // "already processed" and emit nothing). Staged as plain micro-
-      // TIMESTAMP parquet via T.events, so the stream schema needs no
-      // nanos shim; mtimes are set explicitly 60 s apart because the file
-      // source orders pending files by modification time and all three
-      // writes land within the same ms.
-      val tag = new java.io.File(d).getName.replaceAll("[^A-Za-z0-9]", "_")
-      val in = s"/tmp/graft_sld_in_$tag"
-      // 4 state partitions instead of the session's 32 — see
-      // stream_batch_equiv: three micro-batches × 32 state stores of
-      // checkpoint files for ~10 groups is pure constant overhead.
-      withConf(s, "spark.sql.shuffle.partitions" -> "4",
-          "spark.sql.streaming.minBatchesToRetain" -> "2") { try {
-        ensureStaged(s, d, in) {
-          val ev = events(s, d)
-          val t0 = System.currentTimeMillis() - 180000
-          stageSingleFile(ev.filter(col("ts") >= cutoff), in, "0_ontime", t0)
-          stageSingleFile(ev.filter(col("ts") >= mid && col("ts") < cutoff),
-            in, "1_mid", t0 + 60000)
-          stageSingleFile(ev.filter(col("ts") < mid), in, "2_late", t0 + 120000)
-        }
-        val schema = s.read.parquet(s"$in/0_ontime.parquet").schema
-        // Fail LOUD on any poisoned arrival file before the stream
-        // starts (corrupt footer / schema drift — see validateArrivals).
-        validateArrivals(s, in, schema)
-        val emitted = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(in.toString)
-          .withWatermark("ts", "1 hour")
+      // Append-mode windows close only when the watermark passes them, so
+      // this key keeps the trailing no-data batch. The arrivals are plain
+      // micro-TIMESTAMP parquet via T.events, so the stream schema needs
+      // no nanos shim; mtimes are set 60 s apart because the file source
+      // orders pending files by modification time.
+      runStaged(s, d, "sld", Seq(Arrivals("0_ontime.parquet")), appendFiles,
+          confs = Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "true")) { in =>
+        val ev = events(s, d)
+        val t0 = System.currentTimeMillis() - 180000
+        stageSingleFile(ev.filter(col("ts") >= cutoff), in, "0_ontime", t0)
+        stageSingleFile(ev.filter(col("ts") >= mid && col("ts") < cutoff),
+          in, "1_mid", t0 + 60000)
+        stageSingleFile(ev.filter(col("ts") < mid), in, "2_late", t0 + 120000)
+      } { case Seq(ev) =>
+        ev.withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            // try_cast, not cast: a single non-finite/overflow value (NaN,
-            // ±Inf, |v| ≳ 9.2e16 — every real 100 TB log has some) would
-            // otherwise kill the whole streaming job with CAST_OVERFLOW
-            // (measured, r11 dirty-values corpus). NULL cents skip the
-            // sum while the row still counts; the oracle's TRY_CAST
-            // agrees on every input class.
-            sum(expr("try_cast(round(value * 100) AS BIGINT)")).as("total_cents"))
+          .agg(count(lit(1)).as("n"), sum(cents).as("total_cents"))
           .select(col("w.start").cast("date").as("day"), col("event_type"),
             col("n"), col("total_cents"))
-        val q = emitted.writeStream
-          .outputMode("append")
-          .format("parquet")
-          .option("path", out)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        // Read back with the emission's own schema: a run that closes NO
-        // windows (single event, all-late arrivals — the watermark never
-        // passes a day boundary) leaves only _spark_metadata in the sink
-        // dir, where bare schema inference would throw instead of
-        // answering the correct empty result (streaming-degenerate find).
-        s.read.schema(emitted.schema).parquet(out)
-      } finally {
-        // Only the checkpoint is per-run garbage; the staged input dir is
-        // the reusable per-sf fixture.
-        rmr(java.nio.file.Paths.get(ckpt))
-      } }
+      }
     }),
 
     // Streaming exactly-once dedup, driver-checked: the events file lands
@@ -508,62 +255,26 @@ object Streaming extends QueryModule {
     // The read-back aggregate must equal the plain batch aggregate over
     // events (each id once).
     "stream_dedup" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val out  = tempDirReapedAtExit("graft_sdd_out")
-      val ckpt = freshCkptDir("graft_sdd_ckpt")
-      // Staged arrivals are a pure function of the fixture → write once
-      // per sf behind a marker (the stream_late_drop recipe); mtimes 60 s
-      // apart because the file source orders pending files by mtime.
-      val tag = new java.io.File(d).getName.replaceAll("[^A-Za-z0-9]", "_")
-      val in = s"/tmp/graft_sdd_in_$tag"
       // dropDuplicatesWithinWatermark is a stateful FILTER: survivors emit
-      // in the same data batch they arrive in, and the watermark only
-      // bounds state eviction (irrelevant here — the checkpoint is
-      // discarded after the run). The trailing no-data batch would commit
-      // an empty batch for nothing; skip it.
-      withConf(s, "spark.sql.shuffle.partitions" -> "4",
-          "spark.sql.streaming.minBatchesToRetain" -> "2",
-          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") { try {
-        ensureStaged(s, d, in) {
-          val ev = events(s, d)
-          val t0 = System.currentTimeMillis() - 180000
-          stageSingleFile(ev, in, "0_full", t0)
-          stageSingleFile(ev.filter(col("event_type") === "click"),
-            in, "1_redelivered", t0 + 60000)
-        }
-        val schema = s.read.parquet(s"$in/0_full.parquet").schema
-        validateArrivals(s, in, schema)
-        val emitted = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(in.toString)
-          .withWatermark("ts", "1 hour")
+      // in the batch they arrive in, so no no-data batch is needed.
+      runStaged(s, d, "sdd", Seq(Arrivals("0_full.parquet")), appendFiles) { in =>
+        val ev = events(s, d)
+        val t0 = System.currentTimeMillis() - 180000
+        stageSingleFile(ev, in, "0_full", t0)
+        stageSingleFile(ev.filter(col("event_type") === "click"),
+          in, "1_redelivered", t0 + 60000)
+      } { case Seq(ev) =>
+        ev.withWatermark("ts", "1 hour")
           .dropDuplicatesWithinWatermark("event_id")
           .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-        val q = emitted.writeStream
-          .outputMode("append")
-          .format("parquet")
-          .option("path", out)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+      }
         // Aggregate the deduped emission for a compact, integer-exact
-        // compare: equality here certifies each event_id survived exactly
-        // once with its original row intact. Explicit schema on the
-        // read-back: a zero-emission run (empty corpus) leaves a sink dir
-        // with only _spark_metadata, where inference would throw.
-        s.read.schema(emitted.schema).parquet(out)
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            countDistinct(col("event_id")).as("n_ids"),
-            // try_cast, not cast: a single non-finite/overflow value (NaN,
-            // ±Inf, |v| ≳ 9.2e16 — every real 100 TB log has some) would
-            // otherwise kill the whole streaming job with CAST_OVERFLOW
-            // (measured, r11 dirty-values corpus). NULL cents skip the
-            // sum while the row still counts; the oracle's TRY_CAST
-            // agrees on every input class.
-            sum(expr("try_cast(round(value * 100) AS BIGINT)")).as("total_cents"))
-      } finally rmr(java.nio.file.Paths.get(ckpt)) }
+        // compare: equality certifies each event_id survived exactly once
+        // with its original row intact.
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          countDistinct(col("event_id")).as("n_ids"),
+          sum(cents).as("total_cents"))
     }),
 
     // Arbitrary stateful processing (Spark 4 transformWithState),
@@ -576,84 +287,43 @@ object Streaming extends QueryModule {
     // final table is the running total per key — which must equal the
     // plain batch aggregate.
     "stream_stateful_totals" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, Trigger, TTLConfig, TimerValues, ValueState}
+      import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TTLConfig, TimerValues, ValueState}
       import s.implicits._
-      val out  = tempDirReapedAtExit("graft_sst_out")
-      val ckpt = freshCkptDir("graft_sst_ckpt")
-      val tag = new java.io.File(d).getName.replaceAll("[^A-Za-z0-9]", "_")
-      val in = s"/tmp/graft_sst_in_$tag"
+      class Totals extends StatefulProcessor[String, (String, Long), (String, Long, Long)] {
+        @transient private var st: ValueState[(Long, Long)] = _
+        override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+          st = getHandle.getValueState[(Long, Long)]("totals",
+            implicitly[org.apache.spark.sql.Encoder[(Long, Long)]], TTLConfig.NONE)
+        override def handleInputRows(key: String, rows: Iterator[(String, Long)],
+            timers: TimerValues): Iterator[(String, Long, Long)] = {
+          var (n, cents) = if (st.exists()) st.get() else (0L, 0L)
+          rows.foreach { r => n += 1; cents += r._2 }
+          st.update((n, cents))
+          Iterator.single((key, n, cents))
+        }
+      }
       // transformWithState requires the RocksDB state store.
-      withConf(s,
-        "spark.sql.shuffle.partitions" -> "4",
-        "spark.sql.streaming.minBatchesToRetain" -> "2",
-        // TimeMode.None: no watermark, no timers — a no-data batch can
-        // never fire new emissions, so don't schedule one.
-        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      ) { try {
-        ensureStaged(s, d, in) {
-          val ev = events(s, d)
-            .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-          val split = lit(java.sql.Timestamp.valueOf("2024-01-15 00:00:00"))
-          val t0 = System.currentTimeMillis() - 120000
-          stageSingleFile(ev.filter(col("ts") < split), in, "0_h1", t0)
-          stageSingleFile(ev.filter(col("ts") >= split), in, "1_h2", t0 + 60000)
-        }
-        class Totals extends StatefulProcessor[String, (String, Long), (String, Long, Long)] {
-          @transient private var st: ValueState[(Long, Long)] = _
-          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-            st = getHandle.getValueState[(Long, Long)]("totals",
-              implicitly[org.apache.spark.sql.Encoder[(Long, Long)]], TTLConfig.NONE)
-          override def handleInputRows(key: String, rows: Iterator[(String, Long)],
-              timers: TimerValues): Iterator[(String, Long, Long)] = {
-            var (n, cents) = if (st.exists()) st.get() else (0L, 0L)
-            rows.foreach { r => n += 1; cents += r._2 }
-            st.update((n, cents))
-            Iterator.single((key, n, cents))
-          }
-        }
-        val sch = s.read.parquet(s"$in/0_h1.parquet").schema
-        validateArrivals(s, in, sch)
-        val emitted = s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(in.toString)
-          .select(col("event_type"),
-            // coalesce: a NULL value row must still COUNT while adding 0
-            // cents — exactly what the batch oracle's sum-skips-NULLs +
-            // count(*) computes. The bare cast NPE'd the typed encoder
-            // (NOT_NULL_ASSERT_VIOLATION on Tuple2._2) — one NULL row
-            // killed the stream (NULL-injection universe find).
-            // try_cast inside the coalesce: NULL *or* non-finite/overflow
-            // values add 0 cents while still counting (r11 dirty-values
-            // corpus: the bare ANSI cast killed the stream on one 1e300
-            // row) — identical to the oracle's count(*) + sum-skips-NULL.
-            coalesce(expr("try_cast(round(value * 100) AS BIGINT)"), lit(0L)).as("cents"))
+      runStaged(s, d, "sst", Seq(Arrivals("0_h1.parquet")), upsertBy("event_type"),
+          confs = Seq("spark.sql.streaming.stateStore.providerClass" ->
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) { in =>
+        val ev = events(s, d)
+          .select(col("event_id"), col("ts"), col("event_type"), col("value"))
+        val split = lit(java.sql.Timestamp.valueOf("2024-01-15 00:00:00"))
+        val t0 = System.currentTimeMillis() - 120000
+        stageSingleFile(ev.filter(col("ts") < split), in, "0_h1", t0)
+        stageSingleFile(ev.filter(col("ts") >= split), in, "1_h2", t0 + 60000)
+      } { case Seq(ev) =>
+        // coalesce: a NULL or dirty value row still COUNTS while adding 0
+        // cents — the oracle's count(*) + sum-skips-NULL — and never
+        // reaches the typed encoder as NULL.
+        ev.select(col("event_type"), coalesce(cents, lit(0L)).as("cents"))
           .as[(String, Long)]
           .groupByKey(_._1)
           .transformWithState(new Totals, TimeMode.None(), OutputMode.Update())
           .toDF("event_type", "n", "total_cents")
-        val q = emitted.writeStream
-          .outputMode("update")
-          .option("checkpointLocation", ckpt)
-          // Idempotent upsert: each batch dynamically overwrites ONLY the
-          // event_type partitions it emitted; keys silent in a later
-          // batch keep their last written totals.
-          .foreachBatch { (bdf: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            bdf.write.mode("overwrite")
-              .option("partitionOverwriteMode", "DYNAMIC")
-              .partitionBy("event_type")
-              .parquet(out)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        // Explicit schema (r11 review): with a zero-row corpus no batch
-        // ever writes a partition, leaving nothing to infer from. The
-        // emission schema's event_type doubles as the partition column.
-        s.read.schema(emitted.schema).parquet(out)
-          .select(col("event_type"), col("n"), col("total_cents"))
-      } finally rmr(java.nio.file.Paths.get(ckpt)) }
+      }
+        // The emission schema's event_type doubles as the partition column.
+        .select(col("event_type"), col("n"), col("total_cents"))
     }),
 
     // Stream-stream interval join, driver-checked: the purchase and click
@@ -667,57 +337,30 @@ object Streaming extends QueryModule {
     // so no row is watermark-late and the emission must equal the batch
     // theta join — the oracle.
     "stream_stream_join" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val out  = tempDirReapedAtExit("graft_ssj_out")
-      val ckpt = freshCkptDir("graft_ssj_ckpt")
-      val tag = new java.io.File(d).getName.replaceAll("[^A-Za-z0-9]", "_")
-      val in = s"/tmp/graft_ssj_in_$tag"
-      // Stream-stream INNER join emits each pair in the data batch where
-      // the match lands (watermarks only bound buffered state / lateness,
-      // and both files arrive in batch 0) — the trailing no-data batch
-      // would only evict state we're about to delete with the checkpoint.
-      withConf(s, "spark.sql.shuffle.partitions" -> "4",
-          "spark.sql.streaming.minBatchesToRetain" -> "2",
-          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") { try {
-        ensureStaged(s, d, in) {
-          val ev = events(s, d).filter(col("user_id").isNotNull)
-          ev.filter(col("event_type") === "purchase")
-            .select(col("event_id"), col("user_id"), col("ts"))
-            .coalesce(1).write.mode("overwrite").parquet(s"$in/p")
-          ev.filter(col("event_type") === "click")
-            .select(col("user_id"), col("ts"))
-            .coalesce(1).write.mode("overwrite").parquet(s"$in/c")
-        }
-        val pSch = s.read.parquet(s"$in/p").schema
-        val cSch = s.read.parquet(s"$in/c").schema
-        validateArrivals(s, s"$in/p", pSch)
-        validateArrivals(s, s"$in/c", cSch)
-        val p = s.readStream.schema(pSch).parquet(s"$in/p")
+      runStaged(s, d, "ssj", Seq(Arrivals("p", "p", oneFilePerBatch = false),
+          Arrivals("c", "c", oneFilePerBatch = false)), appendFiles) { in =>
+        val ev = events(s, d).filter(col("user_id").isNotNull)
+        ev.filter(col("event_type") === "purchase")
+          .select(col("event_id"), col("user_id"), col("ts"))
+          .coalesce(1).write.mode("overwrite").parquet(s"$in/p")
+        ev.filter(col("event_type") === "click")
+          .select(col("user_id"), col("ts"))
+          .coalesce(1).write.mode("overwrite").parquet(s"$in/c")
+      } { case Seq(purchases, clicks) =>
+        val p = purchases
           .select(col("event_id").as("p_id"), col("user_id"), col("ts").as("p_ts"))
           .withWatermark("p_ts", "1 hour")
-        val c = s.readStream.schema(cSch).parquet(s"$in/c")
+        val c = clicks
           .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
           .withWatermark("c_ts", "1 hour")
-        val emitted = p.join(c,
+        p.join(c,
             col("user_id") === col("c_user") &&
               col("c_ts") <= col("p_ts") &&
               col("c_ts") >= col("p_ts") - expr("INTERVAL 5 MINUTES"))
           .select(col("p_id"), col("user_id"))
-        val q = emitted.writeStream
-          .outputMode("append")
-          .format("parquet")
-          .option("path", out)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        // Pair counts per user — compact, integer-exact compare. Explicit
-        // schema: a corpus with no qualifying pairs (no purchases, or no
-        // click within the band) emits nothing, leaving a metadata-only
-        // sink dir where inference would throw.
-        s.read.schema(emitted.schema).parquet(out)
-          .groupBy(col("user_id")).agg(count(lit(1)).as("n_pairs"))
-      } finally rmr(java.nio.file.Paths.get(ckpt)) }
+      }
+        // Pair counts per user — compact, integer-exact compare.
+        .groupBy(col("user_id")).agg(count(lit(1)).as("n_pairs"))
     }),
 
     // The reference's ENTIRE operational loop as ONE driver-checked key:
@@ -730,54 +373,22 @@ object Streaming extends QueryModule {
     // Oracle = the same point lookups straight off the raw events: the
     // whole ingest→sink→API chain must be lossless.
     "pipeline_daily_e2e" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val out  = tempDirReapedAtExit("graft_p2e_out")
-      val ckpt = freshCkptDir("graft_p2e_ckpt")
-      val tag = new java.io.File(d).getName.replaceAll("[^A-Za-z0-9]", "_")
-      val in = s"/tmp/graft_p2e_in_$tag"
-      // Update-mode aggregation without a watermark: every emission
-      // happens in a data batch (state never expires), so a no-data batch
-      // would only re-fire foreachBatch's dynamic-overwrite for nothing.
-      withConf(s, "spark.sql.shuffle.partitions" -> "4",
-          "spark.sql.streaming.minBatchesToRetain" -> "2",
-          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") { try {
-        ensureStaged(s, d, in) {
-          val ev = events(s, d)
-            .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-          val split = lit(java.sql.Timestamp.valueOf("2024-01-15 00:00:00"))
-          val t0 = System.currentTimeMillis() - 120000
-          stageSingleFile(ev.filter(col("ts") < split), in, "0_h1", t0)
-          stageSingleFile(ev.filter(col("ts") >= split), in, "1_h2", t0 + 60000)
-        }
-        val sch = s.read.parquet(s"$in/0_h1.parquet").schema
-        validateArrivals(s, in, sch)
-        val emitted = s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(in.toString)
-          .groupBy(col("event_type").as("file"),
-            day(col("ts")).as("date"))
+      val counts = runStaged(s, d, "p2e", Seq(Arrivals("0_h1.parquet")), upsertBy("date")) { in =>
+        val ev = events(s, d)
+          .select(col("event_id"), col("ts"), col("event_type"), col("value"))
+        val split = lit(java.sql.Timestamp.valueOf("2024-01-15 00:00:00"))
+        val t0 = System.currentTimeMillis() - 120000
+        stageSingleFile(ev.filter(col("ts") < split), in, "0_h1", t0)
+        stageSingleFile(ev.filter(col("ts") >= split), in, "1_h2", t0 + 60000)
+      } { case Seq(ev) =>
+        ev.groupBy(col("event_type").as("file"), day(col("ts")).as("date"))
           .agg(count(lit(1)).as("count"))
-        val q = emitted.writeStream
-          .outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (bdf: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            bdf.write.mode("overwrite")
-              .option("partitionOverwriteMode", "DYNAMIC")
-              .partitionBy("date")
-              .parquet(out)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        // Query the upserted counts table through the reference API.
-        // Explicit schema (r11 review): a zero-row corpus writes no
-        // partitions, and the API must answer empty off an empty table
-        // instead of failing schema inference.
-        val pc = new graft.api.Playcounts(
-          s.read.schema(emitted.schema).parquet(out))
-        pc.dateCount("view", java.sql.Date.valueOf("2024-01-20"))
-          .unionByName(pc.dateCount("click", java.sql.Date.valueOf("2024-01-05")))
-      } finally rmr(java.nio.file.Paths.get(ckpt)) }
+      }
+      // Query the upserted counts table through the reference API; on a
+      // zero-row corpus it must answer empty off an empty table.
+      val pc = new graft.api.Playcounts(counts)
+      pc.dateCount("view", java.sql.Date.valueOf("2024-01-20"))
+        .unionByName(pc.dateCount("click", java.sql.Date.valueOf("2024-01-05")))
     }),
 
     // Per-user session windows, 5-minute gap. Session end = last event +

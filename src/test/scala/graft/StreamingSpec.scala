@@ -320,20 +320,19 @@ class StreamingSpec extends AnyFunSuite {
   // VERDICT r7 task 4 / r8 task 3 "done" criterion: staging must RESTAGE
   // when the marker is missing, stale (wrong fingerprint), or unreadable —
   // and must NOT restage when the marker matches the current fixture.
-  test("ensureStaged restages on missing/stale/corrupt marker, reuses on match") {
+  test("Staging.once restages on missing/stale/corrupt marker, reuses on match") {
     val in = java.nio.file.Files.createTempDirectory("graft_stage_t").toString
     val marker = java.nio.file.Paths.get(s"$in/_STAGED")
     var runs = 0
     def attempt(): Unit =
-      operators.Streaming.ensureStaged(spark, sf, in) {
+      Staging.once(in, Staging.eventsFingerprint(spark, sf)) { tmp =>
         runs += 1
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$in/payload.txt"), s"staging#$runs")
+        java.nio.file.Files.writeString(tmp.resolve("payload.txt"), s"staging#$runs")
       }
     attempt()                       // fresh dir → stage
     assert(runs == 1)
     val fp = java.nio.file.Files.readString(marker)
-    assert(fp == operators.Streaming.eventsFingerprint(spark, sf))
+    assert(fp == Staging.eventsFingerprint(spark, sf))
     attempt()                       // matching marker → reuse
     assert(runs == 1, "restaged despite matching fingerprint")
     // Stale marker (the regenerated-fixture case): old-format / wrong fp.
@@ -367,12 +366,12 @@ class StreamingSpec extends AnyFunSuite {
       t
     }
     // First publish: dst absent → single rename.
-    operators.Streaming.atomicPublishDir(buildTmp(1), dst)
+    Staging.atomicPublishDir(buildTmp(1), dst)
     assert(java.nio.file.Files.readString(dst.resolve("payload.txt")) == "gen#1")
     // Second publish over a live generation: retire-aside + rename; the
     // new content and marker become visible together, the old
     // generation and the temp dir are both gone.
-    operators.Streaming.atomicPublishDir(buildTmp(2), dst)
+    Staging.atomicPublishDir(buildTmp(2), dst)
     assert(java.nio.file.Files.readString(dst.resolve("payload.txt")) == "gen#2")
     assert(java.nio.file.Files.readString(dst.resolve("_STAGED")) == "fp#2")
     val leftovers = java.nio.file.Files.list(root).iterator()
@@ -387,11 +386,46 @@ class StreamingSpec extends AnyFunSuite {
     // degrade to "kept the old index", never to "no index at all".
     val ghost = root.resolve("idx.tmp.ghost")
     intercept[java.nio.file.NoSuchFileException] {
-      operators.Streaming.atomicPublishDir(ghost, dst)
+      Staging.atomicPublishDir(ghost, dst)
     }
     assert(java.nio.file.Files.readString(dst.resolve("payload.txt")) == "gen#2",
       "failed publish must roll the retired generation back into place")
     assert(java.nio.file.Files.readString(dst.resolve("_STAGED")) == "fp#2")
+  }
+
+  // A restage whose build fails must leave the previous generation live:
+  // staging builds beside the dir and publishes only a complete one.
+  test("Staging.once: a failed restage keeps the live generation") {
+    val root = java.nio.file.Files.createTempDirectory("graft_once_t")
+    val dir = root.resolve("staged")
+    def read(name: String) = java.nio.file.Files.readString(dir.resolve(name))
+    Staging.once(dir.toString, "fp#1") { tmp =>
+      java.nio.file.Files.writeString(tmp.resolve("payload.txt"), "gen#1")
+    }
+    // The fixture changed (marker now stale); the rebuild dies half way.
+    val err = intercept[IllegalStateException] {
+      Staging.once(dir.toString, "fp#2") { tmp =>
+        java.nio.file.Files.writeString(tmp.resolve("payload.txt"), "gen#2 partial")
+        throw new IllegalStateException("build died")
+      }
+    }
+    assert(err.getMessage == "build died")
+    assert(read("payload.txt") == "gen#1", "failed restage destroyed the live payload")
+    assert(read("_STAGED") == "fp#1")
+    val names = scala.collection.mutable.ArrayBuffer.empty[String]
+    java.nio.file.Files.list(root).forEach(p => names += p.getFileName.toString)
+    assert(names.toSeq == Seq("staged"), s"failed restage left debris: $names")
+    var runs = 0
+    def attempt(): Unit = Staging.once(dir.toString, "fp#2") { tmp =>
+      runs += 1
+      java.nio.file.Files.writeString(tmp.resolve("payload.txt"), "gen#2")
+    }
+    attempt()
+    attempt()
+    assert(runs == 1)
+    assert(read("payload.txt") == "gen#2")
+    assert(read("_STAGED") == "fp#2")
+    Staging.rmr(root)
   }
 
   test("validateArrivals gates every file the stream source lists, not just *.parquet") {
@@ -405,9 +439,9 @@ class StreamingSpec extends AnyFunSuite {
       .find(_.getName.endsWith(".parquet")).get.toPath
     java.nio.file.Files.copy(part,
       java.nio.file.Paths.get(s"$in/arrival-000.parquet"))
-    operators.Streaming.rmr(java.nio.file.Paths.get(s"$in/stage"))
+    Staging.rmr(java.nio.file.Paths.get(s"$in/stage"))
     // Clean dir: gate passes.
-    operators.Streaming.validateArrivals(spark, in, expected)
+    Staging.validateArrivals(spark, in, expected)
     // Poison WITHOUT a .parquet suffix — the r14 gate's blind spot: the
     // file stream source lists it (no hidden prefix), reads it as
     // parquet, and crashes or NULL-fills mid-batch. The gate must now
@@ -415,7 +449,7 @@ class StreamingSpec extends AnyFunSuite {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$in/data.pq"), "not parquet at all")
     val err = intercept[IllegalArgumentException] {
-      operators.Streaming.validateArrivals(spark, in, expected)
+      Staging.validateArrivals(spark, in, expected)
     }
     assert(err.getMessage.contains("data.pq"),
       s"gate must name the poison file: ${err.getMessage}")
@@ -428,13 +462,13 @@ class StreamingSpec extends AnyFunSuite {
       java.nio.file.Paths.get(s"$in/.hidden"), "junk")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$in/x._COPYING_"), "in-flight junk")
-    operators.Streaming.validateArrivals(spark, in, expected)
+    Staging.validateArrivals(spark, in, expected)
     // But `_metadata`-named files ARE listed by the source (the one
     // readmission in Spark's hidden-path rule) — so the gate checks them.
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$in/_metadata"), "junk the source reads")
     val err2 = intercept[IllegalArgumentException] {
-      operators.Streaming.validateArrivals(spark, in, expected)
+      Staging.validateArrivals(spark, in, expected)
     }
     assert(err2.getMessage.contains("_metadata"))
   }
@@ -484,24 +518,18 @@ class StreamingSpec extends AnyFunSuite {
     } finally {
       // The key stages arrivals into a per-fixture /tmp dir keyed by the
       // (unique) temp dir name — reap it so test runs don't accumulate.
-      val tag = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
-      Seq(dir, s"/tmp/graft_sld_in_$tag").foreach { p =>
-        val path = java.nio.file.Paths.get(p)
-        import scala.jdk.CollectionConverters._
-        if (java.nio.file.Files.exists(path))
-          java.nio.file.Files.walk(path).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
+      Seq(dir, s"/tmp/graft_sld_in_${Staging.tag(dir)}")
+        .foreach(p => Staging.rmr(java.nio.file.Paths.get(p)))
     }
   }
 
   // VERDICT r9 task 3: the r9 fixture-regeneration event, as a spec. The
   // SAME JVM sees the fixture swapped under it (the driver's mid-session
   // regeneration); the fingerprint cache is keyed on the on-disk file
-  // signature, so ensureStaged must miss the cache, re-fingerprint, and
+  // signature, so Staging.once must miss the cache, re-fingerprint, and
   // restage — no manual marker tampering involved (the test above covers
   // marker corruption; this one covers the cache keying).
-  test("ensureStaged restages after an in-place fixture regeneration (mid-JVM)") {
+  test("Staging.once restages after an in-place fixture regeneration (mid-JVM)") {
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("graft_regen").toString
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -510,22 +538,17 @@ class StreamingSpec extends AnyFunSuite {
     val in = java.nio.file.Files.createTempDirectory("graft_regen_in").toString
     var runs = 0
     def attempt(): Unit =
-      operators.Streaming.ensureStaged(spark, dir, in) { runs += 1 }
+      Staging.once(in, Staging.eventsFingerprint(spark, dir)) { _ => runs += 1 }
     attempt()
     assert(runs == 1)
     attempt()
     assert(runs == 1, "restaged an unchanged fixture")
     // Regenerate IN PLACE: same path, same schema, changed content
     // (value column shifted) — the exact driver scenario.
-    def rmr(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
     val mutated = raw.withColumn("value", col("value") + 1.0)
     val tmp = java.nio.file.Files.createTempDirectory("graft_regen_mut").toString
     mutated.write.parquet(s"$tmp/events.parquet")
-    rmr(java.nio.file.Paths.get(s"$dir/events.parquet"))
+    Staging.rmr(java.nio.file.Paths.get(s"$dir/events.parquet"))
     java.nio.file.Files.move(java.nio.file.Paths.get(s"$tmp/events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
     attempt()
@@ -581,8 +604,8 @@ class StreamingSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sf/events.parquet")
     raw.write.parquet(s"$dir/events.parquet")
-    val fp1 = operators.Streaming.eventsFingerprint(spark, dir)
-    assert(fp1 == operators.Streaming.eventsFingerprint(spark, dir)) // stable
+    val fp1 = Staging.eventsFingerprint(spark, dir)
+    assert(fp1 == Staging.eventsFingerprint(spark, dir)) // stable
     // Regenerate IN PLACE with identical row count and max ts but one
     // column's contents changed — the r8-ADVICE hole in the old
     // rows+maxTs fingerprint. The cache is keyed on file size+mtime, so
@@ -590,15 +613,10 @@ class StreamingSpec extends AnyFunSuite {
     val mutated = raw.withColumn("event_type", upper(col("event_type")))
     val tmp = java.nio.file.Files.createTempDirectory("graft_fp_mut").toString
     mutated.write.parquet(s"$tmp/events.parquet")
-    def rmr(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-    rmr(java.nio.file.Paths.get(s"$dir/events.parquet"))
+    Staging.rmr(java.nio.file.Paths.get(s"$dir/events.parquet"))
     java.nio.file.Files.move(java.nio.file.Paths.get(s"$tmp/events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
-    val fp2 = operators.Streaming.eventsFingerprint(spark, dir)
+    val fp2 = Staging.eventsFingerprint(spark, dir)
     assert(fp1 != fp2, s"content-only regeneration not detected: $fp1")
   }
 

@@ -531,6 +531,16 @@ def write_events_arrival(sfdir: str) -> None:
     ])
 
 
+def staged_dir_present(arrival: str) -> bool:
+    """The probes plant files into the dir the key staged; a renamed
+    staging path must fail the family by name, not with a traceback."""
+    if os.path.exists(f"{arrival}/_STAGED"):
+        return True
+    print(f"FAIL arrival_poison[staged_dir_missing] ({arrival}/_STAGED absent)")
+    print("[degen_check] arrival_poison: FAIL")
+    return False
+
+
 def run_arrival_poison() -> bool:
     """ARRIVAL-POISON family (r13 verdict task 3): a corrupt/truncated
     parquet file or a schema-drift file planted in a STAGED STREAMING
@@ -538,7 +548,7 @@ def run_arrival_poison() -> bool:
     writers dropping files into a watched folder). The batch families
     poison the source tables; this one poisons the drop folder itself,
     where the staging fingerprint (which guards the SOURCE fixture)
-    cannot see it. Contract, pinned by Streaming.validateArrivals: every
+    cannot see it. Contract, pinned by Staging.validateArrivals: every
     poison class fails LOUD naming the file, commits NO output, and the
     dir serves green again once the poison is removed. The dropped-
     column probe is the dangerous one — without the footer gate the file
@@ -553,6 +563,8 @@ def run_arrival_poison() -> bool:
     write_events_arrival(d)
     # Clean pass stages the arrival dir and proves the cross-engine gate.
     ok = run_family("arrival_clean", d, key)
+    if not staged_dir_present(arrival):
+        return False
 
     def loud_probe(label: str, writer, expect_msg: str,
                    pkey: str = key, parrival: str = None,
@@ -655,6 +667,8 @@ def run_arrival_poison() -> bool:
     key2 = "stream_dedup"
     arrival2 = "/tmp/graft_sdd_in_degen_arrival"
     ok = run_family("arrival2_clean", d, key2) and ok  # stages arrival2
+    if not staged_dir_present(arrival2):
+        return False
     ok = loud_probe("dropped_column_stream_dedup", w_dropcol,
                     "column event_type expected string, got MISSING",
                     pkey=key2, parrival=arrival2) and ok
