@@ -33,30 +33,6 @@ object T {
     a
   }
 
-  /** Integer tuning knob from the environment, parsed with context: a
-    * malformed or out-of-range value fails NAMING the variable and the
-    * bad text, instead of a bare NumberFormatException thrown from some
-    * object initializer three modules away (r12 ADVICE). Range checks
-    * live HERE — on the knob, not inside one consumer — so every surface
-    * that derives SQL from the knob (Spark query, DuckDB oracle
-    * generator) shares a single guard; an out-of-range value can never
-    * silently generate a wrong oracle (e.g. a 32-bit `1 << p` overflow
-    * in DuckDB at planes ≥ 31).
-    */
-  private[graft] def envInt(name: String, default: Int,
-                            min: Int, max: Int): Int = {
-    val v = sys.env.get(name).map { raw =>
-      try raw.toInt catch {
-        case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"$name must be an integer, got '$raw'")
-      }
-    }.getOrElse(default)
-    require(v >= min && v <= max,
-      s"$name must be in [$min, $max], got $v")
-    v
-  }
-
   /** All fixture tables, for view registration / docs. */
   val tables: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",

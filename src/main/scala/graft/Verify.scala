@@ -3,20 +3,28 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** `SPARK_GRAFT_CONF` (`k=v;k=v`) as (key, value) pairs; blank entries
+    * are skipped. An entry that is not `key=value` throws naming it: a
+    * skipped `spark.sql.adaptive.enabled false` would report a run "with
+    * AQE off" that ran with AQE on.
+    */
+  private[graft] def confPairs(raw: String): Seq[(String, String)] =
+    raw.split(";").toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => k.trim -> v.trim
+        case _ => throw new IllegalArgumentException(
+          s"malformed SPARK_GRAFT_CONF entry (want key=value): '$kv'")
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = LocalRun.session()
-    // Optional extra confs for local robustness runs (k=v;k=v) — e.g.
+    // Optional extra confs for local robustness runs — e.g.
     // SPARK_GRAFT_CONF="spark.sql.adaptive.enabled=false" proves results
     // don't depend on AQE re-planning. The driver never sets it.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(
-      _.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => spark.conf.set(k.trim, v.trim)
-          case _ => System.err.println(
-            s"[verify] ignoring malformed SPARK_GRAFT_CONF entry: '$kv'")
-        }
-      })
+    val confs = sys.env.get("SPARK_GRAFT_CONF").map(confPairs).getOrElse(Nil)
+    val spark = LocalRun.session()
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     new java.io.File(outDir).mkdirs()
     LocalRun.select(SparkEntry.queries).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

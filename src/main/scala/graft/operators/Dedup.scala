@@ -535,11 +535,11 @@ object Dedup extends QueryModule {
     * across geometries). Factored out (the prefixJaccardPairs pattern)
     * so the guarantee is testable off-fixture.
     *
-    * SCALE KNOB (measured, session-4b scale probe): besides true
-    * near-dups, the banded join carries a chance-collision candidate
-    * term of ~`bands`·N²/2^(width+1) — negligible at fixture N, but at
-    * N ≈ 2^16 docs it dominates (×7.4 step for ×4 rows at 80 k docs
-    * with the default 4×16 geometry).
+    * SCALE (measured, session-4b scale probe): besides true near-dups,
+    * the banded join carries a chance-collision candidate term of
+    * ~`bands`·N²/2^(width+1) — negligible at fixture N, but at N ≈ 2^16
+    * docs it dominates (×7.4 step for ×4 rows at 80 k docs with the
+    * shipped 4×16 geometry).
     *
     * SIZING RULE — width, not bands, is the scale lever (r12 session-5
     * ×16-corpus measurement, BASELINE.md "round-12 session 5": at 80 k
@@ -565,73 +565,18 @@ object Dedup extends QueryModule {
     * of 320 000, max group 4). Natural-text simhash bits are
     * correlated, so effective band-key entropy ≪ nominal width; at
     * cluster scale budget width against MEASURED band-key df (or mix
-    * the bit source, or cap head band keys via
-    * `SPARK_GRAFT_SIMHASH_BAND_DF_CAP` — see [[SimhashBandDfCap]] for
-    * the recall bound and the ×64 measured cost/loss table), not the
-    * uniform formula.
+    * the bit source), not the uniform formula.
     */
-  // `SPARK_GRAFT_SIMHASH_BANDS`/`_WIDTH` override the fixture-optimal
-  // 4×16 so the width knob is exercisable at probe scale. The driver key
-  // and its oracle both pick these up in the same JVM — and because the
-  // output is the EXACT hamming ≤ 2 pair set under ANY admissible
-  // geometry (the property above), product and oracle stay equal even if
-  // only one side's geometry changed.
-  private[graft] val SimhashBands: Int =
-    graft.T.envInt("SPARK_GRAFT_SIMHASH_BANDS", 4, min = 3, max = 64)
-  private[graft] val SimhashBandBits: Int =
-    graft.T.envInt("SPARK_GRAFT_SIMHASH_WIDTH", 16, min = 1, max = 62)
-  /** Head-band-key df cap (r15 ×64 mitigation, default 0 = OFF). When
-    * > 0, banded rows whose (band, key) group exceeds the cap are
-    * dropped BEFORE the self-join — the correlated-bit skew measured at
-    * ×64 (BASELINE.md round-15 probe: 169 M band rows at rule-sized
-    * 3×20, ~1000× the uniform-key expectation) lives entirely in a
-    * small head of hot band keys, so capping them removes the
-    * quadratic term the width rule cannot reach. RECALL BOUND
-    * (pigeonhole): a hamming ≤ 2 pair has ≥ bands−2 identical
-    * ("clean") bands and is lost only if EVERY clean band's key is
-    * capped — with the shipped 4 bands that takes ≥ 2 hot keys on the
-    * same pair; with 3 bands a single hot key can cost a pair whose
-    * two differing bits land in the other two bands. Unlike the
-    * geometry knobs this trades bounded recall for scale, so it is NOT
-    * exactness-preserving: leave it 0 under Verify (the oracle computes
-    * the uncapped pair set). Measured loss at ×64 is in BASELINE.md
-    * next to the band-row cuts.
-    *
-    * CLUSTER SIZING RULE (r15 VERDICT task 6 — the 100 TB deployment
-    * answer, mirroring the r14 width rule). Order of operations: run
-    * exact/normalized dedup first (saturation pathology), size width
-    * per the log₂N + 4 rule, THEN set the cap as insurance against the
-    * natural-text correlated-bit head the width rule cannot reach:
-    *
-    *   cap ≈ N/100 … N/30 of the per-shard doc count N
-    *   (the shipped ×64 measurement: N = 320 000, cap = 10 000 = N/32
-    *   removed the one df ≈ 12 700 hot key — ~81 M of 596 M join rows —
-    *   with ZERO recall loss; cap = 1 000 = N/320 cost 8.1%).
-    *
-    * Why that window works at any scale: a band key with df > N/100 is
-    * shared by > 1% of the shard — after exact dedup no genuine
-    * near-dup cluster is that large, so the cap binds only on the
-    * low-entropy crowd patterns whose pairs the hamming confirm would
-    * reject ~always anyway. Two a-priori bounds a deployer can hold on
-    * to, both linear in N for a df-proportional cap:
-    *   - broadcast: |hot| ≤ N·bands/cap (pigeonhole over N·bands banded
-    *     rows) — at cap = N/100 that is ≤ 100·bands keys, trivially
-    *     broadcastable at any corpus size;
-    *   - join volume: post-cap candidate rows = Σ_cold df² ≤ cap·N·bands
-    *     — the cap converts the quadratic band-join term to LINEAR in N
-    *     by construction, not just empirically.
-    * The cap is per-shard arithmetic (a groupBy over the shard's banded
-    * rows), so sharded corpora apply it independently per shard with
-    * the same N-relative window. Default stays 0 (exact) — driver and
-    * oracle runs never set it.
-    */
-  private[graft] val SimhashBandDfCap: Int =
-    graft.T.envInt("SPARK_GRAFT_SIMHASH_BAND_DF_CAP", 0,
-      min = 0, max = Int.MaxValue)
+  // The shipped geometry: 4 bands × 16 bits, sized for the fixtures by
+  // the width rule above; a deployment at another N edits these two
+  // constants. The driver key and its oracle read the same values — and
+  // because the output is the EXACT hamming ≤ 2 pair set under ANY
+  // admissible geometry (the property above), they agree at any setting.
+  private[graft] val SimhashBands = 4
+  private[graft] val SimhashBandBits = 16
   private[graft] def simhashBandPairs(sig: DataFrame,
                                       bands: Int = SimhashBands,
-                                      width: Int = SimhashBandBits,
-                                      capDf: Long = SimhashBandDfCap.toLong)
+                                      width: Int = SimhashBandBits)
       : DataFrame = {
     require(bands >= 3,
       s"hamming ≤ 2 recall needs ≥ 3 disjoint bands (pigeonhole), got $bands")
@@ -640,10 +585,10 @@ object Dedup extends QueryModule {
     // them is ADMISSIBLE — exactness is preserved by the hamming ≤ 2
     // confirm filter — but keys on 2 constant bits and loses that much
     // discriminating power (mildly more chance collisions at scale; the
-    // shipped 4×16 default accepts this, 3×20 avoids it).
+    // shipped 4×16 geometry accepts this, 3×20 avoids it).
     require(width >= 1 && bands * width <= 64,
       s"band geometry must fit the 64-bit signature word: $bands × $width")
-    simhashBandedCands(sig, bands, width, capDf)
+    simhashBandedCands(sig, bands, width)
       // Filter BEFORE the pair-dedup: hamming is identical for every
       // banded copy of a pair, and candidates outnumber survivors ~1000×
       // on clustered corpora — dedup only what passed.
@@ -654,32 +599,12 @@ object Dedup extends QueryModule {
   /** The raw banded candidate join `simhashBandPairs` confirms over. */
   private def simhashBandedCands(sig: DataFrame,
                                  bands: Int,
-                                 width: Int,
-                                 capDf: Long = 0L): DataFrame = {
+                                 width: Int): DataFrame = {
     val mask = (1L << width) - 1
-    val banded0 = sig.select(col("doc_id"), col("simhash"),
+    val banded = sig.select(col("doc_id"), col("simhash"),
       explode(expr(s"sequence(0, ${bands - 1})")).as("band"))
       .withColumn("bkey",
         expr(s"shiftright(simhash, CAST(band * $width AS INT)) & $mask"))
-    // capDf > 0: drop banded rows keyed by a hot (band, key) group. The
-    // hot-key list is tiny by construction (it is the df HEAD), so it
-    // broadcasts; the groupBy is one linear aggregation over N·bands
-    // rows — strictly cheaper than the quadratic join term it removes.
-    // Recall bound + Verify caveat: see the SimhashBandDfCap scaladoc.
-    val banded = if (capDf <= 0L) banded0 else {
-      // persist(): the self-join duplicates this subtree per arm (the
-      // r15 plan dump showed the df aggregate + its exchange running
-      // twice); the hot HEAD is at most thousands of rows, and the
-      // cache collapses both arms onto one aggregation. Reclaimed by
-      // the callers' clearCache discipline (Bench/Verify), like the
-      // signature persist the keys already carry.
-      val hot = banded0.groupBy(col("band"), col("bkey"))
-        .agg(count(lit(1)).as("df"))
-        .filter(col("df") > capDf)
-        .select(col("band"), col("bkey"))
-        .persist()
-      banded0.join(broadcast(hot), Seq("band", "bkey"), "left_anti")
-    }
     banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey")
           && col("a.doc_id") < col("b.doc_id"))

@@ -19,16 +19,17 @@ import org.apache.spark.sql.functions._
   *   probe row, map-side cosine, TakeOrderedAndProject — no shuffle of the
   *   vector table and no driver collect;
   * - the ANN path is sign-LSH with FIXED arithmetic hyperplanes (no RNG —
-  *   reproducible across engines and runs): `LshPlanes` planes →
-  *   2^planes buckets (default 8 → 256, planes ∝ log₂N is the scale
-  *   rule — see the LshPlanes scaladoc); at scale the bucket id becomes
+  *   reproducible across engines and runs): `LshPlanes` = 8 planes →
+  *   256 buckets (planes ∝ log₂N is the scale rule — see the LshPlanes
+  *   scaladoc); at scale the bucket id becomes
   *   the shuffle/partition key so a probe touches one bucket's share of
   *   the data; recall is tunable by multi-probing neighboring buckets
   *   (not needed on fixtures);
   * - embedding near-dup kNN blocks on coarse QUANTIZATION cells (each
   *   vector assigned to its nearest mean-vector centroid, the IVF recipe)
   *   so the pair space is k× smaller than the n² cross join and the
-  *   centroid count k — not a lucky metadata column — is the scale knob;
+  *   centroid count k (`IvfCells` = 16, sized ≈ √N) — not a lucky
+  *   metadata column — bounds it;
   * - the vector-average UDAF is a typed Aggregator with map-side partial
   *   merge — state is one (sums[64], count) buffer per group, the same
   *   shape Spark's own avg uses.
@@ -45,18 +46,6 @@ object Similarity extends QueryModule {
     if (!s.sessionState.functionRegistry.functionExists(id))
       s.udf.register("mean_vec", udaf(VectorAvg,
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Float]]()))
-  }
-
-  /** Double-input twin of mean_vec, for the trainer's spherical
-    * refinement update (mean of embedding[i]/norm — the division must
-    * happen in DOUBLE to match the oracle's avg over exact doubles; a
-    * float-typed intermediate would round each quotient to f32 first).
-    */
-  private def registerMeanVecD(s: SparkSession): Unit = {
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("mean_vecd")
-    if (!s.sessionState.functionRegistry.functionExists(id))
-      s.udf.register("mean_vecd", udaf(VectorAvgD,
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()))
   }
 
   /** Left-to-right double-precision dot product a·b (both array<float>). */
@@ -175,11 +164,8 @@ object Similarity extends QueryModule {
     * (r6-rounded cosine, cell-asc tie-break — the row_number twin of
     * Spark's packed argmax; both break an all-NULL group to the minimum
     * cell because DuckDB orders NULLS LAST under DESC) → per-cell
-    * per-dim mean = trained centroid (+ its norm) → [[IvfIters]] − 1
-    * further Lloyd steps, each reassigning the sample to the previous
-    * iteration's centroids and taking the per-cell NORMALIZED mean
-    * (zero-norm members excluded — see the IvfIters scaladoc) → every
-    * usable vector assigned to its nearest final centroid (`cellof`).
+    * per-dim mean = trained centroid (+ its norm) → every usable vector
+    * assigned to its nearest trained centroid (`cellof`).
     *
     * Every cosine denominator is `nullif(..., 0)` so a zero-norm seed,
     * member, or trained centroid yields NULL BY CONSTRUCTION on any
@@ -191,8 +177,7 @@ object Similarity extends QueryModule {
     * both engines and the NULLS-LAST tie-break reasoning above holds
     * regardless of DuckDB's division dialect.
     */
-  private def duckTrained: String = {
-    val base = s"""
+  private def duckTrained: String = s"""
       u AS (
         SELECT vec_id, label, embedding FROM embeddings
         WHERE ${duckUsableVec("embedding")}),
@@ -228,38 +213,8 @@ object Similarity extends QueryModule {
       centn1 AS (
         SELECT cell, c,
                sqrt(list_sum(list_transform(range(1, 65), i -> c[i] * c[i]))) AS cnorm
-        FROM cent1)"""
-    // Refinement iterations (k ≥ 2): reassign the sample to the previous
-    // iteration's centroids (the same arithmetic as `assigned` below,
-    // restricted to samp), then the spherical update — per-cell per-dim
-    // mean of embedding[i]/norm over norm > 0 members (IvfIters scaladoc).
-    val refine = (2 to IvfIters).map { k => s""",
-      sassign$k AS (
-        SELECT s.vec_id, cn.cell,
-               round(list_sum(list_transform(range(1, 65),
-                       i -> CAST(s.embedding[i] AS DOUBLE) * cn.c[i]))
-                 / nullif(s.snorm * cn.cnorm, 0), 6) AS ccos
-        FROM samp s, centn${k - 1} cn),
-      sbest$k AS (
-        SELECT vec_id, cell FROM (
-          SELECT *, row_number() OVER (PARTITION BY vec_id
-                      ORDER BY ccos DESC, cell) AS rn
-          FROM sassign$k) WHERE rn = 1),
-      cent$k AS (
-        SELECT cell, list(m ORDER BY i) AS c FROM (
-          SELECT b.cell AS cell, i,
-                 avg(CAST(s.embedding[CAST(i AS INT)] AS DOUBLE) / s.snorm) AS m
-          FROM samp s JOIN sbest$k b ON s.vec_id = b.vec_id, range(1, 65) t(i)
-          WHERE s.snorm > 0
-          GROUP BY cell, i)
-        GROUP BY cell),
-      centn$k AS (
-        SELECT cell, c,
-               sqrt(list_sum(list_transform(range(1, 65), i -> c[i] * c[i]))) AS cnorm
-        FROM cent$k)"""
-    }.mkString
-    s"""$base$refine,
-      centf AS (SELECT * FROM centn$IvfIters),
+        FROM cent1),
+      centf AS (SELECT * FROM centn1),
       norms AS (
         SELECT vec_id, label, embedding,
                sqrt(${duckDot("embedding", "embedding")}) AS norm
@@ -275,7 +230,6 @@ object Similarity extends QueryModule {
           SELECT *, row_number() OVER (PARTITION BY vec_id
                       ORDER BY ccos DESC, cell) AS rn
           FROM assigned) WHERE rn = 1)"""
-  }
 
   /** Oracle twin of `ivfTopk` — one template, parameterized on nprobe.
     * The probe CTE reads from the usable-filtered `u`, matching the
@@ -302,16 +256,16 @@ object Similarity extends QueryModule {
       ORDER BY cos DESC, n.vec_id LIMIT 5
     """
 
-  /** Sign-LSH plane count — the bucket-geometry scale knob of the ANN
+  /** Sign-LSH plane count — the bucket-geometry scale lever of the ANN
     * family (2^planes buckets). A fixed 256-bucket table means bucket
     * SIZE grows with N (each probe scores N/256 rows); planes ∝ log₂N
     * keeps bucket size flat, at one extra sign-dot per plane per row on
-    * the index build. `SPARK_GRAFT_LSH_PLANES` overrides the default 8;
-    * the oracle SQL generator reads the same constant, so the
-    * cross-engine gate holds at any plane count.
+    * the index build. 8 planes suit the fixtures; a larger corpus
+    * raises this constant. The oracle SQL generator reads the same
+    * constant, so the cross-engine gate holds at any plane count ≤ 30
+    * (DuckDB's `1 << p` is 32-bit).
     */
-  private[graft] val LshPlanes: Int =
-    T.envInt("SPARK_GRAFT_LSH_PLANES", 8, min = 1, max = 30)
+  private[graft] val LshPlanes = 8
 
   /** Deterministic LSH hyperplane weight for (plane p, 1-based dim i):
     * pseudo-random int in [-998, 998] from fixed affine arithmetic —
@@ -329,9 +283,9 @@ object Similarity extends QueryModule {
     s"(CAST((CAST(1103515245 AS BIGINT) * ($p * 64 + i - 1) + 12345) % 1997 AS DOUBLE) - 998)"
   private[graft] def planeWeight(p: Int, i: Int): Long =
     (1103515245L * (p * 64 + i - 1) + 12345L) % 1997L - 998L
-  // planes parameterized (default = the knob) so GenPropertySpec can
+  // planes parameterized (default = LshPlanes) so GenPropertySpec can
   // prove the bucketing arithmetic and the radius-1 recall contract at
-  // EVERY admissible plane count, not just the env default.
+  // EVERY admissible plane count, not just the shipped one.
   private[graft] def sparkBucket(emb: String, planes: Int = LshPlanes): String = {
     (0 until planes).map { p =>
       val arr = (1 to 64).map(i => s"CAST(${planeWeight(p, i)} AS DOUBLE)")
@@ -367,74 +321,42 @@ object Similarity extends QueryModule {
     df.select(col("vec_id"), col("label"),
       r6(expr(ncosine("embedding", "probe_emb"))).as("cos"))
 
-  /** Coarse-quantizer cell count (IVF "nlist") — THE scale knob of the
-    * cell-blocked embedding family (sim_ivf_*, dedup_embed_cosine).
+  /** Coarse-quantizer cell count (IVF "nlist") — the pair-space bound of
+    * the cell-blocked embedding family (sim_ivf_*, dedup_embed_cosine).
     * Seed count for [[trainCentroidsN]]: at most IvfCells centroids are
     * trained (cells no sampled vector chose don't materialize).
     *
-    * 100 TB sizing rule (the r11 verdict's one recorded scale caveat,
-    * now a documented knob): the within-cell self-join costs ~N²/cells
-    * pairs, so set IvfCells ≈ √N for N corpus vectors (10⁹ vectors →
-    * ~30k cells), bounding the blocked pair space to ~N^1.5 with each
-    * cell's shard ≈ √N rows. SURVEY §7.6 records the same rule.
-    *
-    * `SPARK_GRAFT_IVF_CELLS` overrides the default 16 so the rule is
-    * exercisable, not just documented: every consumer — trainer, cell
+    * 100 TB sizing rule (the r11 verdict's one recorded scale caveat):
+    * the within-cell self-join costs ~N²/cells pairs, so set IvfCells ≈
+    * √N for N corpus vectors (10⁹ vectors → ~30k cells), bounding the
+    * blocked pair space to ~N^1.5 with each cell's shard ≈ √N rows.
+    * SURVEY §7.6 records the same rule. 16 suits the fixtures; a
+    * deployment edits this constant. Every consumer — trainer, cell
     * assignment, AND the generated oracle SQL ([[duckTrained]]) — reads
-    * this one constant in the same JVM, so the cross-engine gate stays
-    * valid at any cell count (validated on the ×16 scale-probe corpus,
-    * BASELINE.md round-12 session 5).
+    * it, so the cross-engine gate holds at any cell count (validated on
+    * the ×16 scale-probe corpus, BASELINE.md round-12 session 5).
     */
-  // max = 2^21 − 2: the packed-argmax cell field is 21 bits and the
-  // all-ones value is reserved (mask − cell must stay non-negative and
-  // distinguishable) — the same bound the dedup_embed_cosine require
-  // used to re-check locally.
-  private[graft] val IvfCells: Int =
-    T.envInt("SPARK_GRAFT_IVF_CELLS", 16, min = 1, max = (1 << 21) - 2)
+  private[graft] val IvfCells = 16
 
   /** Trainer sampling rate: the quantizer trains on the ~1/mod of the
     * usable corpus whose vec_id hash lands on 0 — the piece of the IVF
     * recipe that makes it 100 TB-honest (k-means-style training reads a
     * SAMPLE, never the corpus; at 10⁹ vectors set mod ~10⁴ so the
-    * training subset stays ~10⁵ rows regardless of N). Default 2 so the
+    * training subset stays ~10⁵ rows regardless of N). 2 so the
     * sampling path is always EXERCISED, not a fixture-silent identity;
-    * the oracle generator reads the same constant, so the gate holds at
-    * any rate.
+    * the oracle generator reads the same constant.
     */
-  private[graft] val IvfSampleMod: Int =
-    T.envInt("SPARK_GRAFT_IVF_SAMPLE_MOD", 2, min = 1, max = 1 << 30)
-
-  /** Lloyd iteration count for [[trainCentroidsN]] (r13 verdict task 4).
-    * Default 1 = exactly the round-13 trainer (seed assignment + one
-    * mean update — driver-visible behavior unchanged); at real scale a
-    * single step leaves centroids near their seeds, and convergence
-    * wants a few more passes over the TRAINING SAMPLE (never the
-    * corpus — each extra iteration costs sample×cells dots, knob-bounded).
-    * Refinement iterations (k ≥ 2) use the spherical k-means update —
-    * per-cell mean of NORMALIZED members (Dhillon & Modha, "Concept
-    * decompositions for large sparse text data using clustering", 2001)
-    * — because that is the update under which cosine-assignment Lloyd is
-    * provably monotone: the assignment step maximizes each sample's
-    * (rounded) cosine by construction, and the normalized-mean direction
-    * maximizes Σ cos(x, c) over its cell, so the within-cell spherical
-    * SSE Σ(1 − cos) never increases across iterations (property-pinned
-    * in GenPropertySpec on generated corpora, to r6-grid tolerance).
-    * The iteration-1 update keeps the r13 RAW mean for frozen-surface
-    * compatibility; zero-norm members are excluded from refinement means
-    * in BOTH engines (x/0 diverges cross-engine: Spark Inf/NaN vs DuckDB
-    * NULL-skipped list products). The oracle CTE chain ([[duckTrained]])
-    * grows one sassign/sbest/cent/centn block per iteration from the
-    * same knob, so the cross-engine gate holds at any setting (validated
-    * at iters ∈ {1, 2, 3}, BASELINE.md r14).
-    */
-  private[graft] val IvfIters: Int =
-    T.envInt("SPARK_GRAFT_IVF_ITERS", 1, min = 1, max = 8)
+  private[graft] val IvfSampleMod = 2
 
   // Packed-argmax geometry (see the dedup_embed_cosine scaladoc for the
   // derivation): cell ids take 21 bits, the r6-rounded cosine is an
   // exact integer count of millionths in [-1e6, 1e6].
   private val CellBits = 21
   private val CellMask = (1L << CellBits) - 1
+  // The all-ones cell value is reserved (mask − cell must stay
+  // non-negative and distinguishable), so at most 2^21 − 2 cells.
+  require(IvfCells >= 1 && IvfCells <= CellMask - 1,
+    s"IvfCells must be in [1, ${CellMask - 1}], got $IvfCells")
 
   /** The (ccos DESC, cell ASC) winner per vec_id over (vec_id, cell,
     * ccos) rows, by packed-long HASH aggregation — never a window
@@ -476,33 +398,25 @@ object Similarity extends QueryModule {
     *     (r6-rounded cosine, cell-asc tie-break via the packed argmax),
     *     and the per-cell mean (the mean_vec UDAF) is the trained
     *     centroid. Cells no sampled vector chose simply don't exist —
-    *     consistent in both engines;
-    *  4. [[IvfIters]] − 1 refinement steps (spherical k-means — see the
-    *     IvfIters scaladoc): reassign the sample to the previous
-    *     centroids (codegen'd dot_f32f64, packed argmax), update each
-    *     cell to the mean of its NORMALIZED members (mean_vecd over
-    *     embedding[i]/norm, zero-norm members excluded in both engines).
+    *     consistent in both engines.
     *
-    * The seed-rank window runs over ≤ IvfCells rows (post-LIMIT, knob-
-    * bounded, never data-scaled); everything data-sized is hash-agg or
-    * broadcast-join shaped. Input `e` must be usable-filtered (corrupt
+    * The seed-rank window runs over ≤ IvfCells rows (post-LIMIT, never
+    * data-scaled); everything data-sized is hash-agg or broadcast-join
+    * shaped. Input `e` must be usable-filtered (corrupt
     * rows must not poison centroids — emb_dirty contract).
     *
-    * The sample is persist()ed — it is consumed 2·iters + 1 times (seed
-    * limit, per-iteration assignment and membership joins), and without
-    * compute-once caching the usable-filter + hash scan of the corpus
-    * re-runs each time (r13 ADVICE). The returned (cell, c, cnorm)
-    * table is EAGERLY materialized via localCheckpoint (≤ IvfCells
-    * rows — knob-bounded, never a driver collect) so the sample cache
-    * can be released before this returns and consumers (probe routing,
-    * full-corpus assignment, the staged-index write) never re-run the
-    * training chain.
+    * The sample is persist()ed — it is consumed 3 times (seed limit,
+    * assignment and membership join), and without compute-once caching
+    * the usable-filter + hash scan of the corpus re-runs each time (r13
+    * ADVICE). The returned (cell, c, cnorm) table is EAGERLY
+    * materialized via localCheckpoint (≤ IvfCells rows — never a driver
+    * collect) so the sample cache can be released before this returns
+    * and consumers (probe routing, full-corpus assignment, the
+    * staged-index write) never re-run the training chain.
     */
-  private[graft] def trainCentroidsN(s: SparkSession, e: DataFrame,
-                                     iters: Int = IvfIters): DataFrame = {
+  private[graft] def trainCentroidsN(s: SparkSession, e: DataFrame): DataFrame = {
     graft.functions.VectorFunctions.register(s)
     registerMeanVec(s)
-    registerMeanVecD(s)
     val samp = e.select(col("vec_id"), col("embedding"),
         expr(sparkHash).as("hv"),
         expr("sqrt(dot_f32(embedding, embedding))").as("norm"))
@@ -515,29 +429,15 @@ object Similarity extends QueryModule {
             .cast("long"))
         .select(col("cell"), col("embedding").as("seed_emb"),
           expr("sqrt(dot_f32(embedding, embedding))").as("snorm"))
-      val sassign = widen(samp).crossJoin(broadcast(seeds))
+      val sassign = samp.crossJoin(broadcast(seeds))
         .select(col("vec_id"),
           r6(expr("dot_f32(embedding, seed_emb)") /
             nullif(col("norm") * col("snorm"), lit(0.0))).as("ccos"),
           col("cell"))
-      var cents = samp.select(col("vec_id"), col("embedding"))
+      val cents = samp.select(col("vec_id"), col("embedding"))
         .join(argmaxCell(sassign), Seq("vec_id"))
         .groupBy(col("cell"))
         .agg(expr("mean_vec(embedding)").as("c"))
-      for (_ <- 2 to iters) {
-        val cn = centroidsWithNorm(cents)
-        val sa = widen(samp).crossJoin(broadcast(cn))
-          .select(col("vec_id"),
-            r6(expr("dot_f32f64(embedding, c)") /
-              nullif(col("norm") * col("cnorm"), lit(0.0))).as("ccos"),
-            col("cell"))
-        cents = samp.filter(col("norm") > 0)
-          .join(argmaxCell(sa), Seq("vec_id"))
-          .groupBy(col("cell"))
-          .agg(expr(
-            "mean_vecd(transform(embedding, x -> CAST(x AS DOUBLE) / norm))")
-            .as("c"))
-      }
       centroidsWithNorm(cents).localCheckpoint()
     } finally samp.unpersist()
   }
@@ -551,38 +451,13 @@ object Similarity extends QueryModule {
     cents.withColumn("cnorm", expr(s"sqrt($dotCC)"))
   }
 
-  /** Widen-only repartition, gated on the cell-count regime: the
-    * assignment/training cross joins are COMPUTE-bound (N×cells dots per
-    * input row), so their parallelism is the input's partition count —
-    * and a fixture/probe parquet file is 1-2 splits, serializing the
-    * dominant term on 2 of 32 cores (the ×16 probe at 64 cells spent
-    * ~2.5 s there; plan-audited r13, and raising cells made the keys
-    * SLOWER — the knob inverted). Widen to the cluster's parallelism
-    * when the scan is narrower; never narrow a wide scan (at 100 TB the
-    * scan already has ≫ cores splits and the exchange would only cost).
-    * The exchanged payload is one (id, vector, norm) row per input row —
-    * ~300 B — amortized by the cells-fold of compute it parallelizes;
-    * below ~32 cells the compute is too small to amortize the exchange +
-    * the extra planning pass (interleaved fixture measurement, r13:
-    * sim_ivf_topk 0.8→1.3 s widened at the default 16 cells — the same
-    * adjudication r12 recorded for dedup_embed_cosine), so the default-
-    * geometry fixture path skips it entirely.
-    */
-  private def widen(df: DataFrame): DataFrame = {
-    if (IvfCells < 32) df
-    else {
-      val par = df.sparkSession.sparkContext.defaultParallelism
-      if (df.rdd.getNumPartitions < par) df.repartition(par) else df
-    }
-  }
-
   /** Every vector of `e` (vec_id, embedding, norm) assigned to its
     * nearest trained centroid — N×cells codegen'd dot_f32f64 products,
     * argmax by hash aggregation (one N-row exchange regardless of the
     * cell count; the r12 session-5 adjudication).
     */
   private def assignCells(e: DataFrame, centsN: DataFrame): DataFrame =
-    argmaxCell(widen(e).crossJoin(broadcast(centsN))
+    argmaxCell(e.crossJoin(broadcast(centsN))
       .select(col("vec_id"),
         r6(expr("dot_f32f64(embedding, c) / nullif(norm * cnorm, CAST(0 AS DOUBLE))")).as("ccos"),
         col("cell")))
@@ -621,18 +496,18 @@ object Similarity extends QueryModule {
       org.apache.spark.sql.types.LongType)))
 
   /** The trained IVF index — (centroids, full-corpus cell assignment) —
-    * staged ONCE per (fixture content, knob fingerprint) behind a
+    * staged ONCE per (fixture content, index key) behind a
     * content-marker guard and read back by every consumer key (r13
     * verdict task 2). A real deployment builds an ANN index once and
     * probes it many times; the rebuild-per-query shape the keys had
     * before this was a harness artifact that charged every probe the
-    * full train + assign cost. The knob fingerprint (cells, sample mod,
-    * iters) is part of BOTH the marker content and the directory name,
-    * so knob sweeps coexist without thrashing one staging dir, and the
-    * marker is written last so an interrupted staging never passes the
-    * guard. One-time build cost is recorded in BASELINE.md (r14); the
-    * oracle is unchanged — [[duckTrained]] re-derives identical
-    * centroids from the corpus at any knob setting.
+    * full train + assign cost. The index key (algorithm version, cells,
+    * sample mod, one Lloyd step) is part of BOTH the marker content and
+    * the directory name, so an edited constant stages a fresh index
+    * instead of serving the old one, and the marker is written last so
+    * an interrupted staging never passes the guard. One-time build cost
+    * is recorded in BASELINE.md (r14); the oracle is unchanged —
+    * [[duckTrained]] re-derives identical centroids from the corpus.
     *
     * Cluster translation: the /tmp parquet pair is the local-harness
     * stand-in for what a 100 TB deployment does with real tables — the
@@ -661,9 +536,11 @@ object Similarity extends QueryModule {
 
   private def stagedIvf(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     graft.functions.VectorFunctions.register(s)
-    val knobs =
-      s"v=$IvfIndexVersion;cells=$IvfCells;mod=$IvfSampleMod;iters=$IvfIters"
-    val path = s"/tmp/graft_ivf_${Staging.tag(d)}_${(knobs.hashCode & 0x7fffffff).toHexString}"
+    // `iters=1` names the trainer's single Lloyd step; it stays in the
+    // key so indexes staged under this exact string are reused.
+    val indexKey =
+      s"v=$IvfIndexVersion;cells=$IvfCells;mod=$IvfSampleMod;iters=1"
+    val path = s"/tmp/graft_ivf_${Staging.tag(d)}_${(indexKey.hashCode & 0x7fffffff).toHexString}"
     // A staged index for a TEMP fixture (generated test/degen corpora
     // under java.io.tmpdir, each with a unique dir name) can never be
     // reused by another JVM — reap it at exit instead of accumulating
@@ -678,7 +555,7 @@ object Similarity extends QueryModule {
       }
     val embFp = Staging.fingerprint(s"$d/embeddings.parquet", embeddings(s, d),
       Seq("vec_id", "embedding", "label"))
-    Staging.once(path, s"$embFp;$knobs") { tmp =>
+    Staging.once(path, s"$embFp;$indexKey") { tmp =>
       val e = embeddings(s, d).filter(expr(usableVec("embedding")))
       trainCentroidsN(s, e)
         .write.mode("overwrite").parquet(s"$tmp/cents")
@@ -773,7 +650,7 @@ object Similarity extends QueryModule {
 
     // Multi-probe LSH: also search every bucket within hamming radius 1
     // of the probe's bucket (flip each of the LshPlanes bits) — the
-    // standard recall knob, (planes+1)/2^planes of the data instead of 1.
+    // standard recall lever, (planes+1)/2^planes of the data instead of 1.
     "sim_ann_multiprobe" -> ((s, d) => {
       graft.functions.VectorFunctions.register(s)
       // Same usable-filter-before-bucketing rule as sim_ann_lsh.
@@ -791,17 +668,17 @@ object Similarity extends QueryModule {
     }),
 
     // IVF-style ANN: coarse cells trained label-free from a hash
-    // sample (trainCentroidsN — deterministic k-means-style Lloyd steps,
-    // staged once per (fixture, knobs) by stagedIvf);
+    // sample (trainCentroidsN — deterministic seeds and one k-means
+    // Lloyd step, staged once per fixture by stagedIvf);
     // the probe routes to its nearest centroid (cosine, r6-rounded,
     // cell tie-break), then exact top-5 WITHIN that cell's members
     // only. At scale the cell id is the partition key: a probe touches
     // one cell's shard, and nprobe>1 multi-cell search is the recall
-    // knob.
+    // lever.
     "sim_ivf_topk" -> ((s, d) => ivfTopk(s, d, nprobe = 1)),
 
     // IVF with nprobe=2: search the TWO nearest cells — the standard
-    // recall knob (each extra probe linearly trades compute for recall;
+    // recall lever (each extra probe linearly trades compute for recall;
     // at scale each cell is a partition shard, so nprobe bounds the
     // fraction of data a probe touches).
     "sim_ivf_nprobe2" -> ((s, d) => ivfTopk(s, d, nprobe = 2)),
@@ -817,13 +694,12 @@ object Similarity extends QueryModule {
     // centroid by r6-rounded cosine, cell-asc tie-break: the sim_ivf_topk
     // assignment recipe applied to every vector, not just the probe), NOT
     // on any metadata column. This is the honest 100 TB shape: the
-    // centroid count k is the knob that bounds the pair space to n²/k,
-    // and the cell id is the one shuffle key; label-blocking (the r5
-    // form) only worked because the fixture had a convenient category
-    // column — and the r12 label-FOLD trainer still leaned on it; the
-    // trained quantizer (r13) needs no labels at all. Cosine rounded
-    // BEFORE ranking so ties break identically in both engines (by
-    // neighbor id).
+    // centroid count k bounds the pair space to n²/k, and the cell id
+    // is the one shuffle key; label-blocking (the r5 form) only worked
+    // because the fixture had a convenient category column — and the
+    // r12 label-FOLD trainer still leaned on it; the trained quantizer
+    // (r13) needs no labels at all. Cosine rounded BEFORE ranking so
+    // ties break identically in both engines (by neighbor id).
     "dedup_embed_cosine" -> ((s, d) => {
       graft.functions.VectorFunctions.register(s)
       // Norms once per vector (map-side), not three dot products per pair.
@@ -843,9 +719,9 @@ object Similarity extends QueryModule {
       // Coarse quantizer: the STAGED index from the shared
       // label-independent trainCentroidsN / assignCells recipe
       // (identical to sim_ivf_topk, so the oracle mirrors one SQL
-      // shape; IvfCells is the scale knob — see its scaladoc for the
-      // √N rule; build cost is paid once per (fixture, knobs) in
-      // stagedIvf, not per query). Assignment COMPUTE is the
+      // shape; IvfCells bounds the pair space — see its scaladoc for
+      // the √N rule; build cost is paid once per fixture in stagedIvf,
+      // not per query). Assignment COMPUTE is the
       // cells-scaling term (×16 probe corpus, r12 session 5): N×cells
       // cosines spelled as interpreted HOF folds grew this key 12.0 s →
       // 25.0 s when cells went 16 → 64 — assignCells keeps the dot
@@ -859,8 +735,8 @@ object Similarity extends QueryModule {
       // and max(packed) = highest score then LOWEST id; decode is
       // shift/mask arithmetic (arithmetic >> floors negative scaled
       // scores correctly), and scaled/1e6 round-trips bit-identically to
-      // r6's output. Id widths: cells 21 bits (guarded on the IvfCells
-      // knob initializer), neighbor ids 41 bits (|scaled|·2^41 ≤ 2^61;
+      // r6's output. Id widths: cells 21 bits (the require beside
+      // CellBits), neighbor ids 41 bits (|scaled|·2^41 ≤ 2^61;
       // the assert_true below fails LOUDLY if a corpus ever carries ids
       // outside [0, 2^41) — corrupt structural metadata is the loud
       // tier of the dirty-data contract, unlike droppable vector rows).
@@ -1141,42 +1017,6 @@ object VectorAvg extends Aggregator[Array[Float], (Array[Double], Long), Array[D
   // dimensionality, and a dimension mismatch mid-group fails loudly.
   def zero: (Array[Double], Long) = (Array.empty[Double], 0L)
   def reduce(b: (Array[Double], Long), a: Array[Float]): (Array[Double], Long) = {
-    val sums = if (b._2 == 0) new Array[Double](a.length) else b._1
-    require(sums.length == a.length,
-      s"vector dimension mismatch: ${sums.length} vs ${a.length}")
-    var i = 0
-    while (i < a.length) { sums(i) += a(i); i += 1 }
-    (sums, b._2 + 1)
-  }
-  def merge(x: (Array[Double], Long), y: (Array[Double], Long)): (Array[Double], Long) = {
-    if (x._2 == 0) y
-    else if (y._2 == 0) x
-    else {
-      require(x._1.length == y._1.length,
-        s"vector dimension mismatch: ${x._1.length} vs ${y._1.length}")
-      var i = 0
-      while (i < x._1.length) { x._1(i) += y._1(i); i += 1 }
-      (x._1, x._2 + y._2)
-    }
-  }
-  def finish(r: (Array[Double], Long)): Array[Double] =
-    if (r._2 == 0) Array.empty else r._1.map(_ / r._2)
-  import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-  def bufferEncoder: org.apache.spark.sql.Encoder[(Array[Double], Long)] =
-    ExpressionEncoder[(Array[Double], Long)]()
-  def outputEncoder: org.apache.spark.sql.Encoder[Array[Double]] =
-    ExpressionEncoder[Array[Double]]()
-}
-
-/** Mean of DOUBLE vectors — [[VectorAvg]]'s input widened to
-  * Array[Double] for the trainer's spherical refinement update (the
-  * normalized components embedding[i]/norm are doubles; summing them as
-  * f32 would diverge from the oracle's double avg). Same (sums, count)
-  * partial-merge state, same loud dimension-mismatch contract.
-  */
-object VectorAvgD extends Aggregator[Array[Double], (Array[Double], Long), Array[Double]] {
-  def zero: (Array[Double], Long) = (Array.empty[Double], 0L)
-  def reduce(b: (Array[Double], Long), a: Array[Double]): (Array[Double], Long) = {
     val sums = if (b._2 == 0) new Array[Double](a.length) else b._1
     require(sums.length == a.length,
       s"vector dimension mismatch: ${sums.length} vs ${a.length}")

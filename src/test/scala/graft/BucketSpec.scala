@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +14,7 @@ class BucketSpec extends AnyFunSuite {
   import T._
 
   test("bucketed fact-fact join plans with zero exchanges") {
-    val base = Files.createTempDirectory("graft_buckets").toString
+    val base = Staging.tempDirReapedAtExit("graft_buckets")
     lineitem(spark, sf).write.format("parquet")
       .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
       .option("path", s"$base/li").saveAsTable("li_bucketed")

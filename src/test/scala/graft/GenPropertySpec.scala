@@ -440,52 +440,14 @@ class GenPropertySpec extends AnyFunSuite {
       } yield (a, b) -> h.toLong).toMap
       // The pigeonhole argument is geometry-independent (any ≥ 3 disjoint
       // bands), and the r12 scale probe makes width the log₂(N) scale
-      // knob — so the exact-pair-set contract must hold for every
-      // admissible geometry, not just the shipped 4×16 default.
+      // lever — so the exact-pair-set contract must hold for every
+      // admissible geometry, not just the shipped 4×16.
       for ((bands, width) <- Seq((4, 16), (3, 20), (5, 12))) {
         val got = operators.Dedup
           .simhashBandPairs(docs.toDF("doc_id", "simhash"), bands, width)
           .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2).toLong).toMap
         assert(got == want,
           s"banded pairs ≠ brute force at $bands×$width: " +
-            s"missing=${(want.keySet -- got.keySet).take(5)} " +
-            s"extra=${(got.keySet -- want.keySet).take(5)}")
-      }
-    }
-  }
-
-  // The head-band-key df cap (r15 ×64 mitigation) has an EXACT loss
-  // characterization, not just a bound: a banded row is dropped iff its
-  // (band, key) group has df > cap, so a hamming ≤ 2 pair survives iff
-  // it retains at least one clean band (identical key in both docs)
-  // whose key is cold (df ≤ cap). This test pins that characterization
-  // brute-force — the output is EXACTLY {hamming ≤ 2 pairs with a cold
-  // clean band} — on the planted-flip corpora, tiny caps (1, 2) so the
-  // planted base groups actually go hot, across both shipped geometries.
-  // cap = 0 must stay byte-equal to the uncapped exact set (the Verify
-  // default: the driver key runs with the knob unset).
-  test("df-capped banded simhash = exactly the hamming ≤ 2 pairs with a cold clean band") {
-    forAll(simhashCorpusGen) { sigs =>
-      import spark.implicits._
-      val docs = sigs.zipWithIndex.map { case (sg, i) => (i.toLong, sg) }
-      for ((bands, width) <- Seq((4, 16), (3, 20)); cap <- Seq(0L, 1L, 2L)) {
-        val mask = (1L << width) - 1
-        def key(sg: Long, b: Int): Long = (sg >>> (b * width)) & mask
-        val df: Map[(Int, Long), Int] = docs
-          .flatMap { case (_, sg) => (0 until bands).map(b => (b, key(sg, b))) }
-          .groupBy(identity).map { case (k, v) => k -> v.size }
-        val want = (for {
-          (a, sa) <- docs; (b, sb) <- docs if a < b
-          h = java.lang.Long.bitCount(sa ^ sb)
-          if h <= 2
-          if cap == 0L || (0 until bands).exists(bd =>
-            key(sa, bd) == key(sb, bd) && df((bd, key(sa, bd))) <= cap)
-        } yield (a, b) -> h.toLong).toMap
-        val got = operators.Dedup
-          .simhashBandPairs(docs.toDF("doc_id", "simhash"), bands, width, cap)
-          .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2).toLong).toMap
-        assert(got == want,
-          s"capped pairs ≠ characterization at $bands×$width cap=$cap: " +
             s"missing=${(want.keySet -- got.keySet).take(5)} " +
             s"extra=${(got.keySet -- want.keySet).take(5)}")
       }
@@ -559,14 +521,14 @@ class GenPropertySpec extends AnyFunSuite {
         val u = 200L + (i % 7)
         List((4000L + 2 * i, p, u, "purchase"), (4001L + 2 * i, p + d, u, "error"))
       }
-      val dir = java.nio.file.Files.createTempDirectory("graft_theta_bnd")
+      val dir = Staging.tempDirReapedAtExit("graft_theta_bnd")
       try {
         rows.toDF("event_id", "us", "user_id", "event_type")
           .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
             col("user_id"), col("event_type"), lit(1.0).as("value"),
             lit("{}").as("props"))
           .coalesce(1).write.parquet(s"$dir/events.parquet")
-        val got = SparkEntry.queries("join_theta_range")(spark, dir.toString)
+        val got = SparkEntry.queries("join_theta_range")(spark, dir)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         // Brute force, no buckets: every (purchase, error) same-user pair
         // with |Δus| ≤ band.
@@ -578,7 +540,7 @@ class GenPropertySpec extends AnyFunSuite {
         } yield u).groupBy(identity).map { case (u, l) => u -> l.size.toLong }
         assert(got == want,
           s"bucketized theta join diverged from brute force: got=$got want=$want")
-      } finally reap(dir)
+      } finally Staging.rmr(java.nio.file.Paths.get(dir))
     }
   }
 
@@ -604,7 +566,7 @@ class GenPropertySpec extends AnyFunSuite {
     forAll(evGen) { rnd =>
       val forced = List((2, 0, 1), (2, 29, 2), (2, 30, 4), (2, 59, 8))
       val evs = rnd ++ forced
-      val dir = java.nio.file.Files.createTempDirectory("graft_w30_bnd")
+      val dir = Staging.tempDirReapedAtExit("graft_w30_bnd")
       try {
         val rows = evs.zipWithIndex.map { case ((ty, d, v), i) =>
           // Intra-day spread incl. exact midnight (i % 3 == 0) so the
@@ -616,7 +578,7 @@ class GenPropertySpec extends AnyFunSuite {
           .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
             col("user_id"), col("event_type"), col("value"), col("props"))
           .coalesce(1).write.parquet(s"$dir/events.parquet")
-        val got = SparkEntry.queries("win_trailing_30d")(spark, dir.toString)
+        val got = SparkEntry.queries("win_trailing_30d")(spark, dir)
           .collect().map { r =>
             (r.getString(0), r.getDate(1).toLocalDate.toEpochDay) ->
               (r.getLong(2), r.getDouble(3))
@@ -634,7 +596,7 @@ class GenPropertySpec extends AnyFunSuite {
         assert(got == want,
           s"trailing-30d mismatch: ${got.toSet.diff(want.toSet).take(3)} vs " +
             s"want ${want.toSet.diff(got.toSet).take(3)} on evs=$evs")
-      } finally reap(dir)
+      } finally Staging.rmr(java.nio.file.Paths.get(dir))
     }
   }
 
@@ -656,7 +618,7 @@ class GenPropertySpec extends AnyFunSuite {
       v <- Gen.chooseNum(0, 9)
     } yield (d, b, v))
     forAll(evGen) { evs =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_tum_bnd")
+      val dir = Staging.tempDirReapedAtExit("graft_tum_bnd")
       try {
         val rows = evs.zipWithIndex.map { case ((d, b, v), i) =>
           val off = b match {
@@ -671,7 +633,7 @@ class GenPropertySpec extends AnyFunSuite {
           .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
             col("user_id"), col("event_type"), col("value"), col("props"))
           .coalesce(1).write.parquet(s"$dir/events.parquet")
-        val got = SparkEntry.queries("stream_tumbling_daily")(spark, dir.toString)
+        val got = SparkEntry.queries("stream_tumbling_daily")(spark, dir)
           .collect().map { r =>
             (r.getTimestamp(0).getTime / 1000, r.getString(1)) ->
               (r.getLong(2), r.getDouble(3))
@@ -682,18 +644,8 @@ class GenPropertySpec extends AnyFunSuite {
         assert(got == want,
           s"tumbling boundary mismatch: ${got.toSet.diff(want.toSet).take(3)} vs " +
             s"want ${want.toSet.diff(got.toSet).take(3)} on evs=$evs")
-      } finally reap(dir)
+      } finally Staging.rmr(java.nio.file.Paths.get(dir))
     }
-  }
-
-  /** Reap a per-sample fixture dir — these tests mint one per forAll
-    * sample, which would otherwise accumulate in /tmp across runs.
-    */
-  private def reap(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
   }
 
   // win_range_numeric's ±10.0 band edge vs the bucket boundary (VERDICT
@@ -717,7 +669,7 @@ class GenPropertySpec extends AnyFunSuite {
       Gen.listOf(Gen.chooseNum(-4000, 4000).map(_ / 100.0))
     forAll(rndGen) { rnd =>
       val vals = forced ++ rnd
-      val dir = java.nio.file.Files.createTempDirectory("graft_wrn_bnd")
+      val dir = Staging.tempDirReapedAtExit("graft_wrn_bnd")
       try {
         val baseUs = 1704067200L * 1000000L
         val rows = vals.zipWithIndex.map { case (v, i) =>
@@ -729,7 +681,7 @@ class GenPropertySpec extends AnyFunSuite {
           .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
             col("user_id"), col("event_type"), col("value"), col("props"))
           .coalesce(1).write.parquet(s"$dir/events.parquet")
-        val got = SparkEntry.queries("win_range_numeric")(spark, dir.toString)
+        val got = SparkEntry.queries("win_range_numeric")(spark, dir)
           .collect().map(r => r.getLong(0) ->
             (r.getLong(2), math.round(r.getDouble(3) * 100))).toMap
         val want = vals.zipWithIndex.map { case (v, i) =>
@@ -739,7 +691,7 @@ class GenPropertySpec extends AnyFunSuite {
         assert(got == want,
           s"band-edge mismatch: ${got.toSet.diff(want.toSet).take(3)} vs " +
             s"want ${want.toSet.diff(got.toSet).take(3)} on vals=$vals")
-      } finally reap(dir)
+      } finally Staging.rmr(java.nio.file.Paths.get(dir))
     }
   }
 
@@ -762,7 +714,7 @@ class GenPropertySpec extends AnyFunSuite {
       u <- Gen.chooseNum(0, 3)
     } yield (k, b, u))
     forAll(evGen) { evs =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_sld_bnd")
+      val dir = Staging.tempDirReapedAtExit("graft_sld_bnd")
       try {
         val rows = evs.zipWithIndex.map { case ((k, b, u), i) =>
           val off = b match {
@@ -776,7 +728,7 @@ class GenPropertySpec extends AnyFunSuite {
           .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
             col("user_id"), col("event_type"), col("value"), col("props"))
           .coalesce(1).write.parquet(s"$dir/events.parquet")
-        val got = SparkEntry.queries("stream_sliding_1h30m")(spark, dir.toString)
+        val got = SparkEntry.queries("stream_sliding_1h30m")(spark, dir)
           .collect().map(r => r.getTimestamp(0).getTime ->
             (r.getLong(1), r.getLong(2))).toMap
         val contrib = rows.flatMap { case (_, us, u, _, _, _) =>
@@ -789,7 +741,7 @@ class GenPropertySpec extends AnyFunSuite {
         assert(got == want,
           s"sliding alignment mismatch: ${got.toSet.diff(want.toSet).take(3)} " +
             s"vs want ${want.toSet.diff(got.toSet).take(3)} on evs=$evs")
-      } finally reap(dir)
+      } finally Staging.rmr(java.nio.file.Paths.get(dir))
     }
   }
 
@@ -839,11 +791,11 @@ class GenPropertySpec extends AnyFunSuite {
     val langs = Array("en", "de", "fr")
     def rate(l: String): Long = l match { case "en" => 10L; case "de" => 20L; case _ => 5L }
     val docs = (0L until 1000L).map(i => (i, s"t$i", langs((i % 3).toInt), "src", 2L))
-    val dir = java.nio.file.Files.createTempDirectory("graft_bern_bnd")
+    val dir = Staging.tempDirReapedAtExit("graft_bern_bnd")
     try {
       docs.toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.parquet(s"$dir/documents.parquet")
-      val got = SparkEntry.queries("sample_hash_bernoulli")(spark, dir.toString)
+      val got = SparkEntry.queries("sample_hash_bernoulli")(spark, dir)
         .collect().map(_.getLong(0)).toSet
       val want = docs.filter { case (id, _, l, _, _) => bucket(id) < rate(l) }
         .map(_._1).toSet
@@ -858,7 +810,7 @@ class GenPropertySpec extends AnyFunSuite {
           ids.exists(id => bucket(id) == rate(l) - 1),
           s"boundary buckets unexercised for $l — enlarge the id range")
       }
-    } finally reap(dir)
+    } finally Staging.rmr(java.nio.file.Paths.get(dir))
   }
 
   // dot_f32's r12 contract: EXACT equivalence with the HOF
@@ -1006,10 +958,10 @@ class GenPropertySpec extends AnyFunSuite {
   // multiprobe DETERMINISTICALLY retrieves every vector whose sign-LSH
   // bucket differs from the probe's in at most one plane — i.e. every
   // vector that agrees with the probe on all but ≤ 1 hyperplane side.
-  // Now that LshPlanes is a runtime knob, the contract (and the
-  // bucketing arithmetic it rests on) must hold at EVERY admissible
-  // plane count, not just the shipped default — same treatment the r12
-  // simhash-geometry property gave the band knob.
+  // LshPlanes is the plane count a deployment sizes to its corpus, so
+  // the contract (and the bucketing arithmetic it rests on) must hold at
+  // EVERY admissible plane count, not just the shipped 8 — same
+  // treatment the r12 simhash-geometry property gave the band width.
   test("multiprobe radius-1 recall holds at every LSH plane count") {
     graft.functions.VectorFunctions.register(spark)
     val vecGen: Gen[List[Array[Float]]] = for {
@@ -1118,7 +1070,7 @@ class GenPropertySpec extends AnyFunSuite {
     }
     forAll(corpusGen) { vecs =>
       import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft_quant_prop").toString
+      val dir = Staging.tempDirReapedAtExit("graft_quant_prop")
       vecs.zipWithIndex.map { case (v, i) => (i.toLong, v, i % 3) }
         .toDF("vec_id", "embedding", "label")
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -1135,81 +1087,6 @@ class GenPropertySpec extends AnyFunSuite {
       val base0 = a1(if (vecs.head.forall(_ == 0.0f)) 1L else 0L)
       val dupOfBase0 = a1(vecs.length.toLong - 2)
       assert(base0 == dupOfBase0, "exact duplicate vectors split across cells")
-    }
-  }
-
-  // Lloyd monotonicity (r13 verdict task 4): with cosine assignment and
-  // the spherical (normalized-mean) refinement update, the within-cell
-  // spherical SSE over the TRAINING SAMPLE — Σ (1 − cos(x, c_cell(x)))
-  // with the engine's r6-rounded cosines — never increases across
-  // iterations. The proof shape (see the IvfIters scaladoc): the argmax
-  // assignment maximizes each sample's rounded cosine by construction,
-  // and the normalized-mean direction maximizes Σ cos over its cell, so
-  // each step can only lower the objective — up to the r6 grid, hence
-  // the 5e-6·n tolerance (each rounded cosine sits within 5e-7 of the
-  // true value; assignment flips on grid boundaries cost ≤ 1e-6 each).
-  // The spec recomputes SSE with a bit-exact Scala TWIN of the engine's
-  // arithmetic (left-to-right f32-widened dot folds, std::round-ties-
-  // away r6) against the engine's own collected centroids, so the
-  // property pins the trainer, not the twin.
-  test("Lloyd refinement never increases within-cell spherical SSE on generated corpora") {
-    val corpusGen: Gen[List[Array[Float]]] = for {
-      n <- Gen.chooseNum(6, 20)
-      vs <- Gen.listOfN(n, Gen.listOfN(64,
-        Gen.chooseNum(-800, 800).map(_ / 64.0f)))
-      withZero <- Gen.oneOf(true, false)
-    } yield {
-      val base = vs.map(_.toArray)
-      (if (withZero) List(Array.fill(64)(0.0f)) else Nil) ++ base ++ base.take(2)
-    }
-    def dotFF(a: Array[Float], b: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < 64) { s += a(i).toDouble * b(i).toDouble; i += 1 }; s
-    }
-    def dotFD(a: Array[Float], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < 64) { s += a(i).toDouble * b(i); i += 1 }; s
-    }
-    // DuckRound twin: std::round(x·1e6)/1e6, ties away from zero.
-    def r6d(x: Double): Double = {
-      val y = x * 1e6
-      (if (y < 0) -math.floor(-y + 0.5) else math.floor(y + 0.5)) / 1e6
-    }
-    // Scala twin of Similarity.sparkHash (vec_id ≥ 0, so pmod ≡ %).
-    val M = 2147483647L
-    def inSample(id: Long): Boolean =
-      ((id % M) * 1103515245L + 12345L) % M % operators.Similarity.IvfSampleMod == 0
-    forAll(corpusGen) { vecs =>
-      import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft_sse_prop").toString
-      vecs.zipWithIndex.map { case (v, i) => (i.toLong, v, i % 3) }
-        .toDF("vec_id", "embedding", "label")
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      val cents = (1 to 3).map { k =>
-        operators.Similarity.trainCentroidsN(spark, emb, k)
-          .collect().map(r => (r.getLong(0),
-            r.getSeq[Double](1).toArray, r.getDouble(2))).toList
-      }
-      // The chain argument needs every centroid scorable: a zero-NORM
-      // centroid (normalized members summing to exactly zero) makes its
-      // cell unchoosable mid-chain — a measure-zero class on generated
-      // corpora; skip those few rather than weaken the bound.
-      val usable = cents.forall(cs => cs.nonEmpty && cs.forall(_._3 > 0))
-      val sample = vecs.zipWithIndex.collect {
-        case (v, i) if inSample(i.toLong) && dotFF(v, v) > 0 => v
-      }
-      if (usable && sample.nonEmpty) {
-        def sse(cs: List[(Long, Array[Double], Double)]): Double =
-          sample.map { x =>
-            val nx = math.sqrt(dotFF(x, x))
-            1.0 - cs.map { case (_, c, cn) => r6d(dotFD(x, c) / (nx * cn)) }.max
-          }.sum
-        val s123 = cents.map(sse)
-        val tol = sample.size * 5e-6 + 1e-9
-        assert(s123(1) <= s123(0) + tol && s123(2) <= s123(1) + tol,
-          s"spherical SSE increased across Lloyd iterations: $s123")
-      }
     }
   }
 }

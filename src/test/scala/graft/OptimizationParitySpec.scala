@@ -185,7 +185,7 @@ class OptimizationParitySpec extends AnyFunSuite {
       // (split(NULL) propagates NULL in the expression twin), not an NPE.
       null
     ).zipWithIndex
-    val tmp = java.nio.file.Files.createTempDirectory("qparity").toString
+    val tmp = Staging.tempDirReapedAtExit("qparity")
     texts.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     try
@@ -232,7 +232,7 @@ class OptimizationParitySpec extends AnyFunSuite {
       "", "one", "one two", "a a a a", "x y x y x",
       "the quick brown fox", "solo", " lead", "trail ", "a  b"
     ).zipWithIndex
-    val tmp = java.nio.file.Files.createTempDirectory("bparity").toString
+    val tmp = Staging.tempDirReapedAtExit("bparity")
     texts.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     try
@@ -350,7 +350,7 @@ class OptimizationParitySpec extends AnyFunSuite {
       (1L to 300L).filter(_ => rnd.nextBoolean()).toSeq :+ 4096L
     )
     keySets.zipWithIndex.foreach { case (keys, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"ccparity$i").toString
+      val tmp = Staging.tempDirReapedAtExit(s"ccparity$i")
       keys.map(k => (k, k * 1.5 + 0.25)).toDF("p_partkey", "p_retailprice")
         .write.mode("overwrite").parquet(s"$tmp/part.parquet")
       try {

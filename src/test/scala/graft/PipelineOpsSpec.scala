@@ -74,7 +74,7 @@ class PipelineOpsSpec extends AnyFunSuite {
 
   test("cc: an already-clean corpus (no near-dup edges) yields an empty result, not a crash") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_clean").toString
+    val dir = Staging.tempDirReapedAtExit("graft_cc_clean")
     (0L until 20L).map(i => (i, s"unique document number $i with its own words w$i x$i y$i z$i q$i",
         "en", "src0", 40L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -88,7 +88,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     // chain's ends share almost nothing — only transitive propagation can
     // unify them. Fixture clusters are shallow; this exercises depth.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_chain").toString
+    val dir = Staging.tempDirReapedAtExit("graft_cc_chain")
     val base = (0 until 80).map(i => s"tok$i")
     (0L until 8L).map { i =>
       val text = base.slice(3 * i.toInt, 3 * i.toInt + 40).mkString(" ")
@@ -111,7 +111,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     // min(comp, comp[comp]) each round doubles the min label's reach,
     // so this must converge in ~⌈log₂ 29⌉ + slack rounds.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_deep").toString
+    val dir = Staging.tempDirReapedAtExit("graft_cc_deep")
     val words = (0 until 45).map(i => f"tok$i%02d")
     (0L until 30L).map { i =>
       val text = words.slice(i.toInt, i.toInt + 16).mkString(" ")
@@ -133,7 +133,7 @@ class PipelineOpsSpec extends AnyFunSuite {
   // 3-gram shingles, and the eval doc embeds both texts verbatim.
   test("decontaminate threshold boundary: exactly 10 shared shingles kept, 9 dropped") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_decon_bnd").toString
+    val dir = Staging.tempDirReapedAtExit("graft_decon_bnd")
     def text(p: String, n: Int) = (1 to n).map(i => s"$p$i").mkString(" ")
     val a = text("alpha", 12) // 10 distinct shingles
     val b = text("beta", 11)  // 9 distinct shingles
@@ -321,7 +321,7 @@ class PipelineOpsSpec extends AnyFunSuite {
   // marker rewrite eliminated; this pins the IVF staging against it).
   test("staged IVF index restages when the fixture content changes") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_stale_ivf").toString
+    val dir = Staging.tempDirReapedAtExit("graft_stale_ivf")
     val rnd = new scala.util.Random(7)
     def noise(): Array[Float] = Array.fill(64)(rnd.nextGaussian().toFloat)
     val probe = noise()

@@ -30,7 +30,7 @@ class Round3Spec extends AnyFunSuite {
   //   part corpus rows 13/14).
   test("fn_collation UTF8_LCASE edges: İ, ß/SS split, final-sigma merge, dotless ı") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_coll_edge")
+    val dir = Staging.tempDirReapedAtExit("graft_coll_edge")
     try {
       val brands = Seq("İst#1", "ıssiz#2", "Straße#3", "ΟΔΟΣ#4", "οδος#4", "οδοσ#4")
       brands.zipWithIndex.map { case (b, i) =>
@@ -44,7 +44,7 @@ class Round3Spec extends AnyFunSuite {
       // final-sigma mapping only fires when lowercasing Σ). Normalize
       // ς→σ before comparing so the pin asserts the MERGE, not the
       // nondeterministic representative (r11 review).
-      val got = SparkEntry.queries("fn_collation")(spark, dir.toString)
+      val got = SparkEntry.queries("fn_collation")(spark, dir)
         .collect()
         .map(r => r.getString(0).replace('\u03c2', '\u03c3') -> r.getLong(1))
         .toMap
@@ -56,11 +56,7 @@ class Round3Spec extends AnyFunSuite {
         "stra\u00dfe#3" -> 2L,
         "\u03bf\u03b4\u03bf\u03c3#4" -> 9L), // σ = ς under UTF8_LCASE: every casing merges
         s"got $got")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    } finally Staging.rmr(java.nio.file.Paths.get(dir))
   }
 
   // The fn_string dialect guard NULLs `lev` on non-ASCII args because

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +11,7 @@ class SinkSpec extends AnyFunSuite {
   import T._
 
   test("partitioned write produces one directory per day and prunes") {
-    val out = Files.createTempDirectory("graft_sink").toString
+    val out = Staging.tempDirReapedAtExit("graft_sink")
     val daily = events(spark, sf)
       .groupBy(day(col("ts")).as("day"), col("event_type"))
       .agg(count(lit(1)).as("n"))
@@ -28,7 +27,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("JDBC counts upsert is idempotent (embedded Derby, zero extra deps)") {
-    val db = Files.createTempDirectory("graft_derby").toString + "/countsdb"
+    val db = Staging.tempDirReapedAtExit("graft_derby") + "/countsdb"
     val url = s"jdbc:derby:$db;create=true"
     def delta(d: String) = events(spark, sf)
       .filter(day(col("ts")) === java.sql.Date.valueOf(d))
@@ -55,7 +54,7 @@ class SinkSpec extends AnyFunSuite {
     val saved = java.util.Locale.getDefault
     try {
       java.util.Locale.setDefault(new java.util.Locale("tr", "TR"))
-      val db = Files.createTempDirectory("graft_derby_tr").toString + "/visitsdb"
+      val db = Staging.tempDirReapedAtExit("graft_derby_tr") + "/visitsdb"
       val url = s"jdbc:derby:$db;create=true"
       def delta(d: String) = events(spark, sf)
         .filter(day(col("ts")) === java.sql.Date.valueOf(d))
@@ -72,7 +71,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("upsert replaces only the delta's partitions (idempotent re-run)") {
-    val out = Files.createTempDirectory("graft_upsert").toString
+    val out = Staging.tempDirReapedAtExit("graft_upsert")
     val e = events(spark, sf)
     sinks.Sinks.ingestDay(spark, e, "2024-01-03", out)
     sinks.Sinks.ingestDay(spark, e, "2024-01-04", out)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,7 +23,7 @@ class SourceSpec extends AnyFunSuite {
     StructField("n", LongType)))
 
   test("bz2 TSV round-trip with explicit schema (the mediacounts format)") {
-    val dir = Files.createTempDirectory("graft_tsv").toString + "/out"
+    val dir = Staging.tempDirReapedAtExit("graft_tsv") + "/out"
     daily.write.option("sep", "\t").option("compression", "bzip2").csv(dir)
     assert(new java.io.File(dir).listFiles().exists(_.getName.endsWith(".csv.bz2")))
     val back = spark.read.option("sep", "\t").schema(schema).csv(dir)
@@ -32,14 +31,14 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("JSON lines round-trip with explicit schema") {
-    val dir = Files.createTempDirectory("graft_json").toString + "/out"
+    val dir = Staging.tempDirReapedAtExit("graft_json") + "/out"
     daily.write.json(dir)
     val back = spark.read.schema(schema).json(dir)
     assert(back.exceptAll(daily).count() == 0 && daily.exceptAll(back).count() == 0)
   }
 
   test("ORC round-trip") {
-    val dir = Files.createTempDirectory("graft_orc").toString + "/out"
+    val dir = Staging.tempDirReapedAtExit("graft_orc") + "/out"
     daily.write.orc(dir)
     val back = spark.read.orc(dir)
     assert(back.exceptAll(daily).count() == 0 && daily.exceptAll(back).count() == 0)

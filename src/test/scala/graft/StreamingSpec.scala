@@ -178,7 +178,7 @@ class StreamingSpec extends AnyFunSuite {
     // a parquet file in a watched directory; AvailableNow drains whatever
     // has arrived, maxFilesPerTrigger bounds per-batch work at scale.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_file_stream").toString
+    val dir = Staging.tempDirReapedAtExit("graft_file_stream")
     Seq((ts("2024-01-01 01:00:00"), "view", 1.0), (ts("2024-01-01 02:00:00"), "view", 2.0))
       .toDF("ts", "event_type", "value").write.mode("append").parquet(dir)
     Seq((ts("2024-01-02 01:00:00"), "click", 5.0))
@@ -254,8 +254,8 @@ class StreamingSpec extends AnyFunSuite {
     // overwrite converges to the batch answer over MANY batches — forced
     // here with 3 files × maxFilesPerTrigger=1.
     import spark.implicits._
-    val in  = java.nio.file.Files.createTempDirectory("graft_sbe_multi_in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_sbe_multi_out").toString
+    val in  = Staging.tempDirReapedAtExit("graft_sbe_multi_in")
+    val out = Staging.tempDirReapedAtExit("graft_sbe_multi_out")
     Seq((ts("2024-01-01 01:00:00"), "view", 1.5))
       .toDF("ts", "event_type", "value").write.mode("append").parquet(in)
     Seq((ts("2024-01-01 02:00:00"), "view", 2.25), (ts("2024-01-02 01:00:00"), "click", 5.0))
@@ -287,7 +287,7 @@ class StreamingSpec extends AnyFunSuite {
   test("foreachBatch incremental upsert matches batch recompute") {
     implicit val sql = spark.sqlContext
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_stream_upsert").toString
+    val out = Staging.tempDirReapedAtExit("graft_stream_upsert")
     val mem = MemoryStream[(Timestamp, String, Double)]
     val daily = mem.toDF().toDF("ts", "event_type", "value")
       .withWatermark("ts", "1 day")
@@ -321,7 +321,7 @@ class StreamingSpec extends AnyFunSuite {
   // when the marker is missing, stale (wrong fingerprint), or unreadable —
   // and must NOT restage when the marker matches the current fixture.
   test("Staging.once restages on missing/stale/corrupt marker, reuses on match") {
-    val in = java.nio.file.Files.createTempDirectory("graft_stage_t").toString
+    val in = Staging.tempDirReapedAtExit("graft_stage_t")
     val marker = java.nio.file.Paths.get(s"$in/_STAGED")
     var runs = 0
     def attempt(): Unit =
@@ -356,7 +356,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("atomicPublishDir swaps generations atomically and leaves no debris") {
-    val root = java.nio.file.Files.createTempDirectory("graft_pub_t")
+    val root = java.nio.file.Paths.get(Staging.tempDirReapedAtExit("graft_pub_t"))
     val dst = root.resolve("idx")
     def buildTmp(gen: Int): java.nio.file.Path = {
       val t = root.resolve(s"idx.tmp.$gen")
@@ -396,7 +396,7 @@ class StreamingSpec extends AnyFunSuite {
   // A restage whose build fails must leave the previous generation live:
   // staging builds beside the dir and publishes only a complete one.
   test("Staging.once: a failed restage keeps the live generation") {
-    val root = java.nio.file.Files.createTempDirectory("graft_once_t")
+    val root = java.nio.file.Paths.get(Staging.tempDirReapedAtExit("graft_once_t"))
     val dir = root.resolve("staged")
     def read(name: String) = java.nio.file.Files.readString(dir.resolve(name))
     Staging.once(dir.toString, "fp#1") { tmp =>
@@ -429,7 +429,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("validateArrivals gates every file the stream source lists, not just *.parquet") {
-    val in = java.nio.file.Files.createTempDirectory("graft_gate_t").toString
+    val in = Staging.tempDirReapedAtExit("graft_gate_t")
     val expected = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",
         org.apache.spark.sql.types.LongType)))
@@ -482,7 +482,7 @@ class StreamingSpec extends AnyFunSuite {
   // every rule the oracle models must hold, including the boundary.
   test("stream_late_drop end-to-end: day window ending exactly at the watermark is emitted") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sld_bnd").toString
+    val dir = Staging.tempDirReapedAtExit("graft_sld_bnd")
     def ev(id: Long, t: String): (Long, Timestamp, Long, String, Double, String) =
       (id, ts(t), id % 5, "a", 1.0, "{}")
     Seq(
@@ -531,11 +531,11 @@ class StreamingSpec extends AnyFunSuite {
   // marker corruption; this one covers the cache keying).
   test("Staging.once restages after an in-place fixture regeneration (mid-JVM)") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_regen").toString
+    val dir = Staging.tempDirReapedAtExit("graft_regen")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sf/events.parquet")
     raw.write.parquet(s"$dir/events.parquet")
-    val in = java.nio.file.Files.createTempDirectory("graft_regen_in").toString
+    val in = Staging.tempDirReapedAtExit("graft_regen_in")
     var runs = 0
     def attempt(): Unit =
       Staging.once(in, Staging.eventsFingerprint(spark, dir)) { _ => runs += 1 }
@@ -546,7 +546,7 @@ class StreamingSpec extends AnyFunSuite {
     // Regenerate IN PLACE: same path, same schema, changed content
     // (value column shifted) — the exact driver scenario.
     val mutated = raw.withColumn("value", col("value") + 1.0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_regen_mut").toString
+    val tmp = Staging.tempDirReapedAtExit("graft_regen_mut")
     mutated.write.parquet(s"$tmp/events.parquet")
     Staging.rmr(java.nio.file.Paths.get(s"$dir/events.parquet"))
     java.nio.file.Files.move(java.nio.file.Paths.get(s"$tmp/events.parquet"),
@@ -600,7 +600,7 @@ class StreamingSpec extends AnyFunSuite {
   // and a mid-JVM regeneration must bust the per-dir cache (file-sig key).
   test("eventsFingerprint detects content-only fixture regeneration") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_fp_t").toString
+    val dir = Staging.tempDirReapedAtExit("graft_fp_t")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sf/events.parquet")
     raw.write.parquet(s"$dir/events.parquet")
@@ -611,7 +611,7 @@ class StreamingSpec extends AnyFunSuite {
     // rows+maxTs fingerprint. The cache is keyed on file size+mtime, so
     // the rewrite is picked up within the same JVM.
     val mutated = raw.withColumn("event_type", upper(col("event_type")))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fp_mut").toString
+    val tmp = Staging.tempDirReapedAtExit("graft_fp_mut")
     mutated.write.parquet(s"$tmp/events.parquet")
     Staging.rmr(java.nio.file.Paths.get(s"$dir/events.parquet"))
     java.nio.file.Files.move(java.nio.file.Paths.get(s"$tmp/events.parquet"),
@@ -630,9 +630,9 @@ class StreamingSpec extends AnyFunSuite {
   // new-data-only totals, re-read sources read as doubled totals.
   test("checkpointed restart restores agg state without re-reading committed files") {
     import spark.implicits._
-    val in   = java.nio.file.Files.createTempDirectory("graft_restart_in").toString
-    val out  = java.nio.file.Files.createTempDirectory("graft_restart_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_restart_ck").toString
+    val in   = Staging.tempDirReapedAtExit("graft_restart_in")
+    val out  = Staging.tempDirReapedAtExit("graft_restart_out")
+    val ckpt = Staging.tempDirReapedAtExit("graft_restart_ck")
     Seq((ts("2024-01-01 01:00:00"), "view", 1.0), (ts("2024-01-01 02:00:00"), "view", 2.0))
       .toDF("ts", "event_type", "value").write.mode("append").parquet(in)
     val schema = spark.read.parquet(in).schema
@@ -688,9 +688,9 @@ class StreamingSpec extends AnyFunSuite {
       }
     }
 
-    val in   = java.nio.file.Files.createTempDirectory("graft_tws_rs_in").toString
-    val out  = java.nio.file.Files.createTempDirectory("graft_tws_rs_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_tws_rs_ck").toString
+    val in   = Staging.tempDirReapedAtExit("graft_tws_rs_in")
+    val out  = Staging.tempDirReapedAtExit("graft_tws_rs_out")
+    val ckpt = Staging.tempDirReapedAtExit("graft_tws_rs_ck")
     Seq(("a.webm", 3L), ("a.webm", 2L), ("b.ogg", 7L))
       .toDF("file", "n").write.mode("append").parquet(in)
     val schema = spark.read.parquet(in).schema
@@ -777,9 +777,9 @@ class StreamingSpec extends AnyFunSuite {
       }
     }
 
-    val in   = java.nio.file.Files.createTempDirectory("graft_skew_in").toString
-    val out  = java.nio.file.Files.createTempDirectory("graft_skew_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_skew_ck").toString
+    val in   = Staging.tempDirReapedAtExit("graft_skew_in")
+    val out  = Staging.tempDirReapedAtExit("graft_skew_out")
+    val ckpt = Staging.tempDirReapedAtExit("graft_skew_ck")
     Seq(("a.webm", 3L), ("a.webm", 2L)).toDF("file", "n")
       .write.mode("append").parquet(in)
     val schema = spark.read.parquet(in).schema
@@ -855,9 +855,9 @@ class StreamingSpec extends AnyFunSuite {
   // rows and emit a phantom closed window for them.
   test("restored watermark still drops rows late relative to pre-restart progress") {
     import spark.implicits._
-    val in   = java.nio.file.Files.createTempDirectory("graft_wm_rs_in").toString
-    val out  = java.nio.file.Files.createTempDirectory("graft_wm_rs_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_wm_rs_ck").toString
+    val in   = Staging.tempDirReapedAtExit("graft_wm_rs_in")
+    val out  = Staging.tempDirReapedAtExit("graft_wm_rs_out")
+    val ckpt = Staging.tempDirReapedAtExit("graft_wm_rs_ck")
     // Run 1: Jan-10 traffic only → final watermark = 10:00 − 1 h; the
     // Jan-10 day window stays OPEN in state (end > wm), nothing emits.
     Seq((ts("2024-01-10 09:00:00"), "view"), (ts("2024-01-10 10:00:00"), "view"))
@@ -899,9 +899,9 @@ class StreamingSpec extends AnyFunSuite {
   // (stream_dedup) holds through deployments, not just within one run.
   test("dedup state survives a restart: post-restart redelivery stays deduped") {
     import spark.implicits._
-    val in   = java.nio.file.Files.createTempDirectory("graft_dd_rs_in").toString
-    val out  = java.nio.file.Files.createTempDirectory("graft_dd_rs_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_dd_rs_ck").toString
+    val in   = Staging.tempDirReapedAtExit("graft_dd_rs_in")
+    val out  = Staging.tempDirReapedAtExit("graft_dd_rs_out")
+    val ckpt = Staging.tempDirReapedAtExit("graft_dd_rs_ck")
     Seq((ts("2024-01-01 00:01:00"), 1L), (ts("2024-01-01 00:02:00"), 2L),
         (ts("2024-01-01 00:03:00"), 3L))
       .toDF("ts", "event_id").write.mode("append").parquet(in)

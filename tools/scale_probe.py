@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Build xK synthetic scale-ups of the sf fixtures for empirical scaling runs.
 
-Usage: python3 tools/scale_probe.py <srcSfDir> <destDir> <K> [div]
+Usage: python3 tools/scale_probe.py <srcSfDir> <destDir> <K> [facts]
 
 Copies every table, then scales events/documents/embeddings by K with
 DISTINCT content per copy — the point is to measure how the engine's
@@ -18,24 +18,19 @@ shuffles/joins/hashes grow with N, so the copies must not collide:
   construction, telling us nothing about scaling.
 - embeddings: ids offset, vectors perturbed by k/1024 per copy (exact in
   float32) so nearest-neighbor structure is K shifted copies, not
-  distance-zero degeneracy. Labels are kept by default, so the
-  fixed-IvfCells within-cell join gets K x bigger cells — deliberately
-  measurable: that is exactly the documented sqrt(N) centroid-sizing
-  caveat (SURVEY §7.6), and the probe quantifies what ignoring it costs.
+  distance-zero degeneracy. Labels are copied unchanged; the IVF trainer
+  does not read them. The cell count is the constant
+  `Similarity.IvfCells`, so the within-cell join gets K x bigger cells —
+  deliberately measurable: that is exactly the documented sqrt(N)
+  centroid-sizing caveat (SURVEY §7.6), and the probe quantifies what
+  ignoring it costs. To validate the rule, edit IvfCells to ~sqrt(N)
+  and rebuild.
 
 With a trailing `facts` argument, lineitem and orders are ALSO scaled
 by K (orderkey offset per copy keeps the orders<->lineitem join
 consistent; dim keys untouched, so dims stay fixed while facts grow) —
 the mode that lets the relational/TPC-H family run the same x16 gate
 and scaling probes the events/docs/embeddings families have.
-
-With a trailing `div` argument, labels are instead offset per copy
-(label + i*1000), K x-ing the label alphabet — the data-side half of the
-sqrt(N) rule. The fixture trainer folds LABELS into cells, so kept
-labels cap the cell count at the base alphabet (~10) no matter what
-SPARK_GRAFT_IVF_CELLS says; the diversified corpus lets a raised cell
-count actually materialize more cells, which is what validating the rule
-requires (engine-side knob: SPARK_GRAFT_IVF_CELLS ~ sqrt(N)).
 
 Measurement protocol (manual, recorded in BASELINE.md):
   SPARK_GRAFT_KEYS=<set> SPARK_GRAFT_SF_DIR=<destDir> \
@@ -48,8 +43,7 @@ TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
 
 
-def build(src: str, dest: str, k: int, div_labels: bool = False,
-          facts: bool = False) -> None:
+def build(src: str, dest: str, k: int, facts: bool = False) -> None:
     os.makedirs(dest, exist_ok=True)
     con = duckdb.connect()
     scaled = ("events", "documents", "embeddings") + (
@@ -108,12 +102,11 @@ def build(src: str, dest: str, k: int, div_labels: bool = False,
                length(regexp_replace(text, '([A-Za-z0-9_]+)', '\\1q{i}', 'g')) AS n_chars
         FROM read_parquet('{src}/documents.parquet')""") for i in range(k)]
     con.sql(f"COPY ({' UNION ALL '.join(parts)}) TO '{dest}/documents.parquet' (FORMAT PARQUET)")
-    label_expr = "label + {i}::BIGINT * 1000" if div_labels else "label"
     parts = [
         f"""
         SELECT vec_id + {i}::BIGINT * 1000000000 AS vec_id,
                CAST(list_transform(embedding, e -> e + {i} / 1024.0) AS FLOAT[]) AS embedding,
-               {label_expr.format(i=i)} AS label
+               label
         FROM read_parquet('{src}/embeddings.parquet')""" for i in range(k)]
     con.sql(f"COPY ({' UNION ALL '.join(parts)}) TO '{dest}/embeddings.parquet' (FORMAT PARQUET)")
     for t in scaled:
@@ -124,4 +117,6 @@ def build(src: str, dest: str, k: int, div_labels: bool = False,
 if __name__ == "__main__":
     src, dest, k = sys.argv[1], sys.argv[2], int(sys.argv[3])
     mode = sys.argv[4] if len(sys.argv) > 4 else ""
-    build(src, dest, k, div_labels=mode == "div", facts=mode == "facts")
+    if mode not in ("", "facts"):
+        raise SystemExit(f"scale_probe: unknown mode {mode!r} (want 'facts' or nothing)")
+    build(src, dest, k, facts=mode == "facts")
