@@ -1,7 +1,10 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The reference's user-facing query surface, re-expressed as a library
   * over DataFrames — a user of `harej/mediaplaycounts` maps each call
@@ -21,55 +24,63 @@ import org.apache.spark.sql.functions._
   * reference's MySQL `counts` table, held as a (date-partitionable)
   * DataFrame.
   *
-  * The r11-ADVICE fold of `knownFile` into the main aggregate (one
-  * scan, existence = count over a file-only filter) was measured and
-  * REJECTED (r12): on a 1500-partition date-partitioned counts table,
-  * the fused form is 2–3× slower on the KNOWN-file hot path (dateCount
-  * ×5: probe 0.95–1.49 s vs fused 2.59–3.09 s) because the existence
-  * aggregate must scan the file's whole history with no early exit,
-  * where the probe's limit(1) stops at the first pushed match and the
-  * main branch keeps its date partition pruning; unknown files tie
-  * (2.72 vs 2.62 s — both shapes must exhaust the scan). If true
-  * MySQL-point-lookup latency ever matters, the answer is a
-  * broadcastable distinct-file dimension maintained at ingest, not the
-  * fold — the API keeps the probe.
+  * Every request method runs its Spark jobs when it is called and
+  * returns a local DataFrame holding the answer; constructing a
+  * `Playcounts` runs nothing.
   *
-  * Scale notes (100 TB): every method is a filter + aggregate over the
-  * counts table — partition pruning on `date` and predicate pushdown on
-  * `file` do the heavy lifting at rest; `categoryCount` broadcasts the
-  * (small) membership dimension, never shuffling the fact side. The
-  * `details` list is built with `collect_list` AFTER per-date
-  * aggregation — bounded by days-in-range, never by raw log rows.
+  * File requests answer first and probe only on an empty answer. The
+  * answer scan collects the file's (date, count) rows under the request's
+  * date filter: no aggregate, so one job over the date-pruned files with
+  * `file` pushed down. Those rows are bounded by days-in-range × path
+  * variants of one name, and are summed on the driver with ANSI `sum`'s
+  * rules (NULLs skipped, overflow throws). A row proves the file known;
+  * only an empty answer runs the existence probe, one job over every
+  * partition in which each task stops at its first match. The probe is
+  * never folded into the answer scan: an existence test inside the
+  * answer aggregate must read the file's whole history with no early
+  * exit and loses the answer's date pruning (measured 2–3× slower on the
+  * known-file path over a 1500-partition table).
+  *
+  * Category requests resolve their member files with a broadcast
+  * left-semi join, so the counts table is scanned once, only its
+  * per-file partial sums are shuffled, and a file listed twice counts
+  * once; the per-file sums they collect are bounded by the membership
+  * the broadcast already holds.
   */
 final class Playcounts(counts: DataFrame) {
+  import Playcounts._
 
-  /** 1-row-or-empty probe: does the counts table know `file` AT ALL?
-    * Gates the zero-fill below so "zero plays that day" and "unknown
-    * file" stay distinguishable (round-10 ADVICE: the reference API
-    * answers error/empty for a filename it has never seen, zero only for
-    * a known file on a playless date). limit(1) short-circuits the scan
-    * at the first pushed-filter match; crossJoin with the empty probe
-    * result erases the fabricated row for unknown files while the main
-    * branch keeps its own (file, date) pushdown + partition pruning.
+  private def local(schema: StructType, rows: Seq[Row]): DataFrame =
+    counts.sparkSession.createDataFrame(rows.asJava, schema)
+
+  /** `file`'s (date, count) rows on the dates `onDates` keeps. */
+  private def lookup(file: String, onDates: Column): Array[Row] =
+    counts.filter(col("file") === file && onDates)
+      .select(col("date"), col("count")).collect()
+
+  /** Does the counts table hold any row of `file`? Gates the zero-fill,
+    * so "zero plays that day" (known file) and "never seen" (empty
+    * answer, the reference's unknown-file error path) stay apart.
     */
-  private def knownFile(file: String): DataFrame =
-    counts.filter(col("file") === file).limit(1).select(lit(1).as("_known"))
+  private def knownFile(file: String): Boolean =
+    counts.sparkSession.sparkContext.runJob(
+      counts.filter(col("file") === file).queryExecution.toRdd,
+      (rows: Iterator[InternalRow]) => rows.hasNext).contains(true)
 
   /** Single (file, date) point lookup — MySQL PK lookup analog. A KNOWN
     * file on a date with no stored row answers count 0, not an empty
     * result: the reference's API returns a zero count for dates with no
     * plays (the same zero-fill contract as `join_anti_zerofill`), and
     * the pipeline_daily_e2e oracle (a COUNT(*) over the raw events)
-    * produces a 0-row for such dates — found diverging on the round-10
-    * degenerate-universe corpus where a queried date had no events. A
-    * filename absent from counts entirely answers an EMPTY result (the
-    * reference's unknown-file error path).
+    * produces a 0-row for such dates. A filename absent from counts
+    * entirely answers an EMPTY result.
     */
-  def dateCount(file: String, date: java.sql.Date): DataFrame =
-    counts.filter(col("file") === file && col("date") === date)
-      .agg(coalesce(sum(col("count")), lit(0L)).as("count"))
-      .crossJoin(broadcast(knownFile(file)))
-      .select(lit(file).as("file"), lit(date).as("date"), col("count"))
+  def dateCount(file: String, date: java.sql.Date): DataFrame = {
+    val rows = lookup(file, col("date") === date)
+    local(DateCountSchema,
+      if (rows.isEmpty && !knownFile(file)) Nil
+      else Seq(Row(file, date, orZero(sumExact(rows.map(countOf))))))
+  }
 
   /** Range query: grand total + date-sorted per-day details — the
     * `{filename, total, details:[{date,count}…]}` API response shape.
@@ -78,14 +89,16 @@ final class Playcounts(counts: DataFrame) {
     * answers empty.
     */
   def dateRangeCount(file: String, start: java.sql.Date, end: java.sql.Date): DataFrame = {
-    val daily = counts
-      .filter(col("file") === file && col("date").between(start, end))
-      .groupBy(col("date")).agg(sum(col("count")).as("count"))
-    daily.agg(
-      coalesce(sum(col("count")), lit(0L)).as("total"),
-      sort_array(collect_list(struct(col("date"), col("count")))).as("details"))
-      .crossJoin(broadcast(knownFile(file)))
-      .select(lit(file).as("file"), col("total"), col("details"))
+    val rows = lookup(file, col("date").between(start, end))
+    // The detail struct's date keeps the table's nullability, as a
+    // grouping key over the table's date column does.
+    val schema = dateRangeSchema(counts.schema("date").nullable)
+    if (rows.isEmpty && !knownFile(file)) local(schema, Nil)
+    else {
+      val details = rows.groupBy(_.getDate(0)).toSeq.sortBy(_._1.getTime)
+        .map { case (d, day) => Row(d, sumExact(day.map(countOf))) }
+      local(schema, Seq(Row(file, orZero(sumExact(details.map(countOf))), details)))
+    }
   }
 
   /** Sliding "last N days" ending at `asOf` (the reference anchors at
@@ -105,67 +118,93 @@ final class Playcounts(counts: DataFrame) {
 
   /** Category roll-up: membership (category, file) ⨝ counts, summed per
     * category — the reference's only join, done there as N API calls +
-    * a Python loop; here one broadcast join + aggregate.
+    * a Python loop; here one broadcast semi-join + per-file aggregate.
     */
   def categoryCount(members: DataFrame, category: String,
-                    start: java.sql.Date, end: java.sql.Date): DataFrame = {
-    val files = members.filter(col("category") === category).select(col("file"))
-    rollup(files, category, start, end)
-  }
+                    start: java.sql.Date, end: java.sql.Date): DataFrame =
+    rollup(members.filter(col("category") === category), category, start, end)
 
   /** Recursive variant — the reference's AskCommons category →
-    * subcategory → … descent, in-engine: membership is the closure of
-    * `category` over the `edges` (parent, child) dimension, resolved by
-    * iterative broadcast-join frontier expansion (the
-    * `join_category_closure` shape). Real category graphs are DAGs that
-    * may contain cycles, so each round subtracts already-seen categories
-    * — the loop terminates on any graph; depth is bounded LOUDLY (callers
-    * with deeper hierarchies raise `maxDepth` — real Commons chains can
-    * exceed the default), and a file reachable through several
-    * subcategories still counts once (distinct before the roll-up).
-    * Category dimensions are ≪ facts at 100 TB: the closure costs
-    * O(depth) tiny broadcast joins over an edge dim that is materialized
-    * ONCE up front (localCheckpoint — re-broadcasting an unpersisted
-    * frame would re-scan the source every round), and the counts table
-    * is touched exactly once.
+    * subcategory → … descent: membership is the closure of `category`
+    * over the `edges` (parent, child) dimension. The closure is walked on
+    * the driver, one job per round (the next frontier's children), with
+    * the seen set held locally, so the walk terminates on cyclic graphs
+    * and a file reachable through several subcategories counts once.
+    * Depth is bounded LOUDLY (callers with deeper hierarchies raise
+    * `maxDepth` — real Commons chains can exceed the default), and so is
+    * the closure's size (`MaxClosureCategories`).
     */
   def categoryCount(members: DataFrame, edges: DataFrame, category: String,
                     start: java.sql.Date, end: java.sql.Date,
                     maxDepth: Int = 20): DataFrame = {
-    val spark = members.sparkSession
-    import spark.implicits._
-    val edgeDim = edges.select(col("parent"), col("child")).localCheckpoint(true)
-    var frontier = Seq(category).toDF("category").localCheckpoint(true)
-    // cats = flat union of eagerly-checkpointed frontiers — depth-1 plan,
-    // no checkpoint of its own needed (one job per round, not three).
-    var cats = frontier
+    var seen = Set(category)
+    var frontier = seen
     var round = 0
-    while (!frontier.isEmpty && round < maxDepth) {
-      frontier = frontier.join(broadcast(edgeDim), col("category") === col("parent"))
-        .select(col("child").as("category")).distinct()
-        .except(cats).localCheckpoint(true)
-      cats = cats.union(frontier)
+    while (frontier.nonEmpty && round < maxDepth) {
+      frontier = edges.filter(col("parent").isin(frontier.toSeq: _*))
+        .select(col("child")).collect().map(_.getString(0)).toSet -- seen
+      seen ++= frontier
+      require(seen.size <= MaxClosureCategories,
+        s"category closure of $category exceeds $MaxClosureCategories categories")
       round += 1
     }
     require(frontier.isEmpty,
       s"category closure did not terminate within $round rounds; " +
         s"raise maxDepth (currently $maxDepth) for deeper hierarchies")
-    val files = members.join(broadcast(cats), Seq("category"))
-      .select(col("file")).distinct()
-    rollup(files, category, start, end)
+    rollup(members.filter(col("category").isin(seen.toSeq: _*)), category, start, end)
   }
 
-  private def rollup(files: DataFrame, category: String,
-                     start: java.sql.Date, end: java.sql.Date): DataFrame =
-    counts
-      .join(broadcast(files), Seq("file"))
+  private def rollup(members: DataFrame, category: String,
+                     start: java.sql.Date, end: java.sql.Date): DataFrame = {
+    val perFile = counts
+      .join(broadcast(members.select(col("file"))), Seq("file"), "left_semi")
       .filter(col("date").between(start, end))
-      .agg(coalesce(sum(col("count")), lit(0L)).as("total"),
-        countDistinct(col("file")).as("n_files"))
-      .select(lit(category).as("category"), col("total"), col("n_files"))
+      .groupBy(col("file")).agg(sum(col("count")).as("count"))
+      .collect()
+    local(CategorySchema,
+      Seq(Row(category, orZero(sumExact(perFile.map(countOf))), perFile.length.toLong)))
+  }
 }
 
 object Playcounts {
+
+  /** Bound on a recursive category closure: its seen set lives on the
+    * driver and is shipped to the roll-up as one IN list.
+    */
+  val MaxClosureCategories: Int = 100000
+
+  private val DateCountSchema = new StructType()
+    .add("file", StringType, nullable = false)
+    .add("date", DateType, nullable = false)
+    .add("count", LongType, nullable = false)
+
+  private def dateRangeSchema(dateNullable: Boolean) = new StructType()
+    .add("file", StringType, nullable = false)
+    .add("total", LongType, nullable = false)
+    .add("details", ArrayType(new StructType()
+      .add("date", DateType, dateNullable)
+      .add("count", LongType), containsNull = false), nullable = false)
+
+  private val CategorySchema = new StructType()
+    .add("category", StringType, nullable = false)
+    .add("total", LongType, nullable = false)
+    .add("n_files", LongType, nullable = false)
+
+  /** Column 1 of a (key, count) row, NULL kept. */
+  private def countOf(r: Row): java.lang.Long =
+    if (r.isNullAt(1)) null else r.getLong(1)
+
+  /** BIGINT `sum` as ANSI SQL computes it: NULLs skipped, NULL when no
+    * value is left, overflow throws `ArithmeticException`.
+    */
+  private def sumExact(xs: Iterable[java.lang.Long]): java.lang.Long =
+    xs.foldLeft(null: java.lang.Long) { (acc, x) =>
+      if (x == null) acc
+      else if (acc == null) x
+      else Math.addExact(acc.longValue, x.longValue)
+    }
+
+  private def orZero(x: java.lang.Long): Long = if (x == null) 0L else x.longValue
 
   /** Playable-media extensions (reference whitelist [MED on exact set]). */
   val playableExtensions: Seq[String] =
@@ -188,20 +227,19 @@ object Playcounts {
     val f = split(col("line"), "\t")
     // get(), not [i]: under ANSI an ordinal access beyond the array kills
     // the job with INVALID_ARRAY_INDEX, so one TRUNCATED dump line — the
-    // most ordinary real-world corruption — used to end the whole day
-    // (measured, r12). get() answers NULL out of bounds, so a missing
-    // counter column falls into the same '-'→0 rule as an unparseable one.
+    // most ordinary real-world corruption — would end the whole day.
+    // get() answers NULL out of bounds, so a missing counter column falls
+    // into the same '-'→0 rule as an unparseable one.
     def counter(i: Int): Column =
       coalesce(expr(s"try_cast(get(split(line, '\t'), $i) AS BIGINT)"), lit(0L))
     lines
       .select(element_at(f, 1).as("path"),
         // try_add, not `+`: this is the RAWEST ingest surface, and under
         // ANSI one absurd dump line with near-Long.Max counters kills
-        // the whole day with ARITHMETIC_OVERFLOW (measured, r12 — the
-        // same one-corrupt-row crash class as the r11 streaming cents
-        // find; the Python reference's bigints can't overflow). Overflow
-        // → NULL count → the count > 0 filter below drops the garbage
-        // row, matching the existing tolerance for undecodable paths.
+        // the whole day with ARITHMETIC_OVERFLOW (the Python reference's
+        // bigints can't overflow). Overflow → NULL count → the count > 0
+        // filter below drops the garbage row, matching the existing
+        // tolerance for undecodable paths.
         try_add(try_add(counter(3), counter(4)), counter(16)).as("count"))
       .filter(col("path").startsWith("/wikipedia/commons/")
         && lower(regexp_extract(col("path"), "\\.([a-zA-Z0-9]+)$", 1))

@@ -1,7 +1,12 @@
 package graft
 
 import java.sql.Date
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.graftspec.SparkAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end reference-API parity: mediacounts-shaped TSV lines →
@@ -158,8 +163,11 @@ class ApiSpec extends AnyFunSuite {
 
   test("categoryCount broadcast roll-up") {
     import spark.implicits._
+    // Song.ogg is listed twice: a duplicated membership row must not
+    // multiply its plays.
     val members = Seq(
       ("Cat videos", "Cat video.webm"),
+      ("Cat videos", "Song.ogg"),
       ("Cat videos", "Song.ogg"),
       ("Empty cat", "Nonexistent.ogv")).toDF("category", "file")
     val pc = new api.Playcounts(counts)
@@ -169,18 +177,19 @@ class ApiSpec extends AnyFunSuite {
     assert(empty.getAs[Long]("total") == 0L && empty.getAs[Long]("n_files") == 0L)
   }
 
-  test("categoryCount recursive closure: diamond counted once, cycle terminates") {
+  /** Diamond: "Cat videos" reachable from Media via BOTH Cats and Audio;
+    * cycle: Cat videos → Cats. The closure must count each file once and
+    * terminate anyway.
+    */
+  private def diamond = {
     import spark.implicits._
-    val members = Seq(
-      ("Cat videos", "Cat video.webm"),
-      ("Audio", "Song.ogg")).toDF("category", "file")
-    // Diamond: "Cat videos" reachable from Media via BOTH Cats and Audio;
-    // cycle: Cat videos → Cats. The closure must count each file once and
-    // terminate anyway.
-    val edges = Seq(
-      ("Media", "Cats"), ("Media", "Audio"),
-      ("Cats", "Cat videos"), ("Audio", "Cat videos"),
-      ("Cat videos", "Cats")).toDF("parent", "child")
+    (Seq(("Cat videos", "Cat video.webm"), ("Audio", "Song.ogg")).toDF("category", "file"),
+      Seq(("Media", "Cats"), ("Media", "Audio"), ("Cats", "Cat videos"),
+        ("Audio", "Cat videos"), ("Cat videos", "Cats")).toDF("parent", "child"))
+  }
+
+  test("categoryCount recursive closure: diamond counted once, cycle terminates") {
+    val (members, edges) = diamond
     val pc = new api.Playcounts(counts)
     val media = pc.categoryCount(members, edges, "Media", day1, day2).collect()(0)
     assert(media.getAs[Long]("total") == 29L && media.getAs[Long]("n_files") == 2L)
@@ -205,5 +214,91 @@ class ApiSpec extends AnyFunSuite {
     val deep = pc.categoryCount(members, edges, "cat0", day1, day2, maxDepth = 30)
       .collect()(0)
     assert(deep.getAs[Long]("total") == 22L && deep.getAs[Long]("n_files") == 1L)
+  }
+
+  /** `df` at rest in parquet, as the API is served. */
+  private def atRest(df: DataFrame, partitionCols: String*): DataFrame = {
+    val dir = Staging.tempDirReapedAtExit("graft_api_at_rest")
+    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private lazy val stored = atRest(counts, "date")
+
+  private def rangeSchema(dateNullable: Boolean) = new StructType()
+    .add("file", StringType, nullable = false)
+    .add("total", LongType, nullable = false)
+    .add("details", ArrayType(new StructType()
+      .add("date", DateType, dateNullable)
+      .add("count", LongType), containsNull = false), nullable = false)
+
+  test("result schemas are pinned for every request shape") {
+    val point = new StructType()
+      .add("file", StringType, nullable = false)
+      .add("date", DateType, nullable = false)
+      .add("count", LongType, nullable = false)
+    val category = new StructType()
+      .add("category", StringType, nullable = false)
+      .add("total", LongType, nullable = false)
+      .add("n_files", LongType, nullable = false)
+    val (members, edges) = diamond
+    // The detail struct's date carries the table's date nullability:
+    // NOT NULL on the ingest frame, nullable when read back from parquet.
+    for ((table, dateNullable) <- Seq(counts -> false, stored -> true)) {
+      val pc = new api.Playcounts(table)
+      assert(pc.dateCount("Song.ogg", day1).schema == point)
+      assert(pc.dateCount("Never-ingested.ogg", day1).schema == point)
+      assert(pc.dateRangeCount("Cat video.webm", day1, day2).schema == rangeSchema(dateNullable))
+      assert(pc.dateRangeCount("Never-ingested.ogg", day1, day2).schema == rangeSchema(dateNullable))
+      assert(pc.last30("Cat video.webm", day2).schema == rangeSchema(dateNullable))
+      assert(pc.categoryCount(members, "Cat videos", day1, day2).schema == category)
+      assert(pc.categoryCount(members, edges, "Media", day1, day2).schema == category)
+    }
+  }
+
+  test("dateCount and dateRangeCount overflow loudly past Long.MaxValue") {
+    import spark.implicits._
+    // Two path variants of one name, each a legal near-Max count; their
+    // sum does not fit a BIGINT.
+    val max = Long.MaxValue
+    val big = api.Playcounts.fromMediacountsLog(Seq(
+      mkLine("/wikipedia/commons/a/ab/Big.oga", max, "-", 0),
+      mkLine("/wikipedia/commons/c/cd/Big.oga", max, "-", 0)).toDF("line"), day1)
+    assert(big.count() == 2L)
+    val pc = new api.Playcounts(big)
+    intercept[ArithmeticException](pc.dateCount("Big.oga", day1).collect())
+    intercept[ArithmeticException](pc.dateRangeCount("Big.oga", day1, day2).collect())
+  }
+
+  /** Spark jobs started by `body`, counted once the listener bus drains. */
+  private def jobsOf(body: => Any): Long = {
+    val n = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    SparkAccess.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; SparkAccess.drain(sc); n.get }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("each request runs one job; only an empty answer adds the probe") {
+    val pc = new api.Playcounts(stored)
+    assert(jobsOf(pc.dateCount("Song.ogg", day1).collect()) == 1L)
+    assert(jobsOf(pc.dateRangeCount("Cat video.webm", day1, day2).collect()) == 1L)
+    assert(jobsOf(pc.dateCount("Never-ingested.ogg", day1).collect()) == 2L)
+    assert(jobsOf(pc.dateRangeCount("Never-ingested.ogg", day1, day2).collect()) == 2L)
+    // Known file, playless date: the empty answer pays the probe too.
+    assert(jobsOf(pc.dateCount("Song.ogg", day2).collect()) == 2L)
+    // Diamond closure at rest: 3 frontier rounds + the roll-up's
+    // broadcast, map and result jobs.
+    val (members, edges) = diamond
+    val (m, e) = (atRest(members), atRest(edges))
+    val tree = jobsOf(pc.categoryCount(m, e, "Media", day1, day2).collect())
+    assert(tree <= 6L, s"recursive categoryCount ran $tree jobs")
+    // The answers off the stored table match the in-memory ones.
+    assert(pc.dateRangeCount("Cat video.webm", day1, day2).collect().toSeq ==
+      new api.Playcounts(counts).dateRangeCount("Cat video.webm", day1, day2).collect().toSeq)
   }
 }

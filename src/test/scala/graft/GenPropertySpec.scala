@@ -83,18 +83,24 @@ class GenPropertySpec extends AnyFunSuite {
   }
 
   test("recursive categoryCount matches brute-force closure on random graphs") {
-    // The iterative broadcast-frontier closure must equal a driver-side
-    // BFS on ARBITRARY edge sets — diamonds, cycles, self-loops,
-    // disconnected parts — not just the fixtures' trees.
-    val edgesGen: Gen[List[(Int, Int)]] =
+    // The closure walk must equal a brute-force BFS on ARBITRARY edge
+    // sets — diamonds, cycles, self-loops, disconnected parts — and the
+    // roll-up must count each reachable file once, whatever the
+    // membership: files shared by several categories, listings repeated.
+    val pairGen: Gen[List[(Int, Int)]] =
       Gen.listOf(Gen.zip(Gen.chooseNum(0, 7), Gen.chooseNum(0, 7)))
-    forAll(edgesGen) { es =>
+    forAll(pairGen, pairGen) { (es, extra) =>
       import spark.implicits._
       // One file per category c: "f<c>" with count c+1 on a fixed day.
       val day = java.sql.Date.valueOf("2024-01-01")
       val counts = (0 to 7).map(c => (s"f$c", day, (c + 1).toLong))
         .toDF("file", "date", "count")
-      val members = (0 to 7).map(c => (s"cat$c", s"f$c")).toDF("category", "file")
+      // Category c lists "f<c>"; each extra (c, f) also lists "f<f>" under
+      // "cat<c>" (a file shared with its own category), and the first
+      // extras are listed twice.
+      val membership = (0 to 7).map(c => (c, c)) ++ extra ++ extra.take(2)
+      val members = membership.map { case (c, f) => (s"cat$c", s"f$f") }
+        .toDF("category", "file")
       val edges = es.map { case (p, c) => (s"cat$p", s"cat$c") }.toDF("parent", "child")
       // Driver-side BFS truth.
       val adj = es.groupBy(_._1).map { case (p, cs) => p -> cs.map(_._2).toSet }
@@ -103,12 +109,13 @@ class GenPropertySpec extends AnyFunSuite {
         frontier = frontier.flatMap(adj.getOrElse(_, Set.empty)) -- seen
         seen ++= frontier
       }
-      val expected = seen.map(_ + 1L).sum
+      val files = membership.collect { case (c, f) if seen(c) => f }.toSet
       val pc = new api.Playcounts(counts)
       val r = pc.categoryCount(members, edges, "cat0", day, day).collect()(0)
-      assert(r.getAs[Long]("total") == expected
-        && r.getAs[Long]("n_files") == seen.size.toLong,
-        s"edges=$es closure=$seen got=(${r.getAs[Long]("total")}, ${r.getAs[Long]("n_files")})")
+      assert(r.getAs[Long]("total") == files.map(_ + 1L).sum
+        && r.getAs[Long]("n_files") == files.size.toLong,
+        s"edges=$es extra=$extra closure=$seen files=$files " +
+          s"got=(${r.getAs[Long]("total")}, ${r.getAs[Long]("n_files")})")
     }
   }
 
