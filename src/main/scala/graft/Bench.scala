@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver throughput bench: every selected key runs fully against the
   * `noop` sink, three timed runs per key after untimed warm-ups, and the
@@ -56,11 +55,15 @@ object Bench {
     // whichever query runs first (~4 s on one key); warming the first
     // measured key too covers its own codegen. multimodal_binary is the
     // one key on the typed mapPartitions path, whose first-touch encoder
-    // JIT once made its driver number 6–9× its warm time.
+    // JIT once made its driver number 6–9× its warm time. Each selected
+    // checkpointed streaming key runs once too: they share JVM-global
+    // first-touch cost (StreamExecution, file-source/sink classes, the
+    // RocksDB state store, streaming codegen) that otherwise lands inside
+    // the first streaming key's first sample.
     untimed("agg_daily_counts")
     keys.headOption.foreach(untimed)
     if (LocalRun.selected("multimodal_binary")) untimed("multimodal_binary")
-    if (keys.exists(Staging.checkpointedKeys)) warmStreaming(spark)
+    keys.filter(Staging.checkpointedKeys).foreach(untimed)
     val samples = keys.map { name =>
       val ss =
         try Seq.fill(3) {
@@ -89,48 +92,4 @@ object Bench {
     println(stdoutLine(results, sfName, ckpt))
     spark.stop()
   }
-
-  /** Untimed checkpointed-streaming warm-up. The checkpointed keys share
-    * JVM-global first-touch cost (StreamExecution and file-source/sink
-    * classes, state-store infra, the RocksDB native library, streaming
-    * codegen) that otherwise lands inside the first streaming key's first
-    * sample. Two 100-row toy queries pay it: a windowed file-sink
-    * aggregation, and the foreachBatch + dynamic-partition-overwrite
-    * sink path of pipeline_daily_e2e.
-    */
-  private def warmStreaming(spark: SparkSession): Unit = try {
-    import org.apache.spark.sql.functions.{col, window}
-    import org.apache.spark.sql.streaming.Trigger
-    val base = Staging.freshCkptDir("graft_warm")
-    try {
-      spark.range(100).selectExpr("id AS event_id",
-        "timestamp_micros(1704067200000000 + id * 60000000) AS ts",
-        "CAST(id % 5 AS STRING) AS k", "CAST(id AS DOUBLE) AS v")
-        .coalesce(1).write.parquet(s"$base/in")
-      val sch = spark.read.parquet(s"$base/in").schema
-      Staging.withConf(spark, "spark.sql.shuffle.partitions" -> "4",
-          "spark.sql.streaming.stateStore.providerClass" ->
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        spark.readStream.schema(sch).parquet(s"$base/in")
-          .withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "1 day"), col("k")).count()
-          .writeStream.outputMode("append").format("parquet")
-          .option("path", s"$base/out")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-          .awaitTermination()
-        spark.readStream.schema(sch).parquet(s"$base/in")
-          .groupBy(col("k")).count()
-          .writeStream.outputMode("update")
-          .option("checkpointLocation", s"$base/ckpt2")
-          .foreachBatch { (bdf: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            bdf.write.mode("overwrite")
-              .option("partitionOverwriteMode", "DYNAMIC")
-              .partitionBy("k").parquet(s"$base/out2")
-          }
-          .trigger(Trigger.AvailableNow()).start()
-          .awaitTermination()
-      }
-    } finally Staging.rmr(java.nio.file.Paths.get(base))
-  } catch { case _: Throwable => () }
 }

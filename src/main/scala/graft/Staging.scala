@@ -167,7 +167,8 @@ object Staging {
   }
 
   /** The streaming keys that run real micro-batches on a fresh checkpoint
-    * per invocation. Bench warms the streaming path when any is selected.
+    * per invocation. Bench runs each selected one once, untimed, before
+    * its timed samples.
     */
   val checkpointedKeys: Set[String] = Set(
     "stream_batch_equiv", "stream_late_drop", "stream_dedup",

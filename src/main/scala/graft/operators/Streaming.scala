@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryModule, Staging, T}
+import graft.sinks.Sinks
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -77,14 +78,12 @@ object Streaming extends QueryModule {
       bdf.write.mode("overwrite").parquet(out)
     }
 
-  // Idempotent upsert: each batch dynamically overwrites only the `by`
-  // partitions it emitted; partitions silent in a later batch keep their
-  // last written rows.
+  // Idempotent upsert: each batch replaces only the `by` partitions it
+  // emitted (Sinks.upsertPartitions); partitions silent in a later batch
+  // keep their last written rows.
   private def upsertBy(by: String): Sink = (w, out) =>
     w.outputMode("update").foreachBatch { (bdf: Dataset[Row], _: Long) =>
-      bdf.write.mode("overwrite")
-        .option("partitionOverwriteMode", "DYNAMIC")
-        .partitionBy(by).parquet(out)
+      Sinks.upsertPartitions(bdf.sparkSession, bdf, out, by)
     }
 
   /** The checkpointed streaming keys' shared run: stage the input, gate

@@ -12,20 +12,12 @@ import org.apache.spark.sql.functions._
   * [[upsertJdbcCounts]] keeps the reference's RDBMS upsert as a parity
   * sink for the API-facing aggregate store.
   *
-  * Exercised by SinkSpec (unit tests) rather than `SparkEntry.queries` —
-  * sinks return no DataFrame for the driver to hash.
+  * [[upsertPartitions]] is the program's one date-partition writer: the
+  * streaming keys' upsert sink (`Streaming.upsertBy`) and the daily
+  * ingest of `perfbench/` both go through it, so a change to how a day
+  * is published is a change to that function alone.
   */
 object Sinks {
-
-  /** Write `df` partitioned by `partitionCol` (e.g. day). Executor-side
-    * writes, one directory per partition value — partition pruning serves
-    * the reference's `WHERE date BETWEEN` queries from directory listing.
-    */
-  def writePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
-    df.write
-      .mode(SaveMode.Overwrite)
-      .partitionBy(partitionCol)
-      .parquet(path)
 
   /** Idempotent daily upsert — the reference's cron re-run semantics:
     * replace ONLY the partitions present in `delta`, leave others intact.
@@ -36,31 +28,19 @@ object Sinks {
                        partitionCol: String): Unit =
     // Per-write option, NOT a session conf — a session-level
     // partitionOverwriteMode=dynamic would silently change the semantics
-    // of every later Overwrite write (e.g. writePartitioned's full replace).
+    // of every later Overwrite write (e.g. a complete-mode streaming
+    // sink's full replace of its output dir).
     // "DYNAMIC" (pre-uppercased): Spark parses this per-write option with
     // a locale-SENSITIVE toUpperCase (InsertIntoHadoopFsRelationCommand.
     // dynamicPartitionOverwrite — no Locale.ROOT, unlike the session-conf
     // path), so "dynamic" under a Turkish default locale becomes
     // "DYNAMİC" and the enum lookup throws. Uppercase ASCII is a fixed
-    // point of toUpperCase in every locale. Same at all call sites.
+    // point of toUpperCase in every locale.
     delta.write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "DYNAMIC")
       .partitionBy(partitionCol)
       .parquet(path)
-
-  /** The reference's daily ingest → counts-table load, end to end:
-    * events for one day → per-(entity, day) counts → upsert that day's
-    * partition.
-    */
-  def ingestDay(spark: SparkSession, events: DataFrame, day: String,
-                path: String): Unit = {
-    val delta = events
-      .filter(date_trunc("DAY", col("ts")).cast("date") === lit(java.sql.Date.valueOf(day)))
-      .groupBy(date_trunc("DAY", col("ts")).cast("date").as("day"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
-    upsertPartitions(spark, delta, path, "day")
-  }
 
   /** RDBMS parity sink — the reference's literal MySQL upsert
     * (`LogProcessor.py` insert loop [UNVERIFIED]) as delete-day-then-

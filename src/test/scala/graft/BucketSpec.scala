@@ -51,4 +51,44 @@ class BucketSpec extends AnyFunSuite {
       spark.sql("DROP TABLE IF EXISTS ord_bucketed")
     }
   }
+
+  test("join_bucketed_colocated restages when lineitem is rewritten mid-JVM") {
+    // A temp copy of the two tables the key reads, so the rewrite below
+    // touches no shared fixture.
+    val d = Staging.tempDirReapedAtExit("graft_bkt_fixture")
+    val staged = java.nio.file.Paths.get(s"/tmp/graft_buckets_${Staging.tag(d)}")
+    def file(t: String) = java.nio.file.Paths.get(s"$d/$t.parquet")
+    Seq("lineitem", "orders").foreach(t =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/$t.parquet"), file(t)))
+    def plain = lineitem(spark, d)
+      .join(orders(spark, d), col("l_orderkey") === col("o_orderkey"))
+      .groupBy(col("o_orderpriority"))
+      .agg(count(lit(1)).as("n_items"),
+        round(expr("""CAST(sum(CAST(CAST(round(l_extendedprice * 100) AS BIGINT)
+              * (100 - CAST(round(l_discount * 100) AS BIGINT)) AS DECIMAL(38,0)))
+              AS DOUBLE)""") / 10000.0, 4).as("revenue"))
+    def check(): Unit = assert(
+      SparkEntry.queries("join_bucketed_colocated")(spark, d)
+        .orderBy("o_orderpriority").collect().toSeq ==
+        plain.orderBy("o_orderpriority").collect().toSeq)
+    try {
+      check()
+      // Rewrite lineitem in place: every other order's items dropped and
+      // all discounts zeroed, so both n_items and revenue change.
+      val out = Staging.tempDirReapedAtExit("graft_bkt_rewrite")
+      lineitem(spark, d).filter(col("l_orderkey") % 2 === 0)
+        .withColumn("l_discount", lit(0.0))
+        .coalesce(1).write.mode("overwrite").parquet(out)
+      val part = new java.io.File(out).listFiles()
+        .find(_.getName.endsWith(".parquet")).get.toPath
+      java.nio.file.Files.move(part, file("lineitem"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      check()
+    } finally {
+      val tag = Staging.tag(d)
+      spark.sql(s"DROP TABLE IF EXISTS li_bkt_$tag")
+      spark.sql(s"DROP TABLE IF EXISTS ord_bkt_$tag")
+      Staging.rmr(staged)
+    }
+  }
 }

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Partitioned-parquet sink + idempotent partition upsert — the
-  * reference's daily MySQL upsert re-expressed at-rest (SURVEY §2.1).
+/** The date-partition writer (`Sinks.upsertPartitions`) and the JDBC
+  * upsert — the reference's daily MySQL upsert re-expressed at-rest
+  * (SURVEY §2.1).
   */
 class SinkSpec extends AnyFunSuite {
   import SparkFixture._
@@ -15,7 +16,7 @@ class SinkSpec extends AnyFunSuite {
     val daily = events(spark, sf)
       .groupBy(day(col("ts")).as("day"), col("event_type"))
       .agg(count(lit(1)).as("n"))
-    sinks.Sinks.writePartitioned(daily, out, "day")
+    sinks.Sinks.upsertPartitions(spark, daily, out, "day")
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory)
       .map(_.getName).filter(_.startsWith("day="))
     assert(dirs.length == 30, s"expected 30 day partitions, got ${dirs.length}")
@@ -71,15 +72,27 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("upsert replaces only the delta's partitions (idempotent re-run)") {
-    val out = Staging.tempDirReapedAtExit("graft_upsert")
     val e = events(spark, sf)
-    sinks.Sinks.ingestDay(spark, e, "2024-01-03", out)
-    sinks.Sinks.ingestDay(spark, e, "2024-01-04", out)
-    val before = spark.read.parquet(out).orderBy(col("day"), col("event_type")).collect()
-    // Re-running day 3 must change nothing (idempotence) and keep day 4.
-    sinks.Sinks.ingestDay(spark, e, "2024-01-03", out)
-    val after = spark.read.parquet(out).orderBy(col("day"), col("event_type")).collect()
-    assert(before.toSeq == after.toSeq)
-    assert(spark.read.parquet(out).select(col("day")).distinct().count() == 2)
+    // One day's per-(day, event_type) counts: the reference's daily load.
+    def delta(d: String) = e
+      .filter(day(col("ts")) === java.sql.Date.valueOf(d))
+      .groupBy(day(col("ts")).as("day"), col("event_type"))
+      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
+    // Under tr-TR a lowercase partitionOverwriteMode value upper-cases to
+    // dotted "DYNAMİC" and the write throws; run under both locales.
+    val saved = java.util.Locale.getDefault
+    for (locale <- Seq(saved, new java.util.Locale("tr", "TR"))) try {
+      java.util.Locale.setDefault(locale)
+      val out = Staging.tempDirReapedAtExit("graft_upsert")
+      sinks.Sinks.upsertPartitions(spark, delta("2024-01-03"), out, "day")
+      sinks.Sinks.upsertPartitions(spark, delta("2024-01-04"), out, "day")
+      val before = spark.read.parquet(out).orderBy(col("day"), col("event_type")).collect()
+      // Re-running day 3 must change nothing (idempotence) and keep day 4.
+      sinks.Sinks.upsertPartitions(spark, delta("2024-01-03"), out, "day")
+      val after = spark.read.parquet(out).orderBy(col("day"), col("event_type")).collect()
+      assert(before.toSeq == after.toSeq, s"locale $locale")
+      assert(spark.read.parquet(out).select(col("day")).distinct().count() == 2,
+        s"locale $locale")
+    } finally java.util.Locale.setDefault(saved)
   }
 }
