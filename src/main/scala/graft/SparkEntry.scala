@@ -30,9 +30,16 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("agg_daily_counts")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * first registers the library's SQL functions on its session.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.flatMap(_.queries).toMap
+    modules.flatMap(_.queries).map { case (key, build) =>
+      key -> { (s: SparkSession, d: String) =>
+        functions.SqlFunctions.register(s)
+        build(s, d)
+      }
+    }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys (engine-specific sketches,

@@ -200,12 +200,13 @@ object Staging {
 
   /** Run `body` with session confs temporarily set, restoring (or
     * unsetting) every key on all exit paths: a leaked conf would change
-    * every later key's plan.
+    * every later key's plan. Only explicitly set values are saved
+    * (`getAll`): `conf.get` would return a key's default, and restoring
+    * that would leave the key set.
     */
   def withConf[A](s: SparkSession, kvs: (String, String)*)(body: => A): A = {
-    val saved = kvs.map { case (k, _) =>
-      k -> scala.util.Try(Option(s.conf.get(k))).toOption.flatten
-    }
+    val set = s.conf.getAll
+    val saved = kvs.map { case (k, _) => k -> set.get(k) }
     kvs.foreach { case (k, v) => s.conf.set(k, v) }
     try body finally saved.foreach {
       case (k, Some(v)) => s.conf.set(k, v)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 /** Shared table readers and oracle-parity helpers.
   *
@@ -49,39 +50,33 @@ object T {
   def part(s: SparkSession, d: String): DataFrame     = tbl(s, d, "part")
   def nation(s: SparkSession, d: String): DataFrame   = tbl(s, d, "nation")
   def region(s: SparkSession, d: String): DataFrame   = tbl(s, d, "region")
-  /** events.ts normalized to TIMESTAMP (LTZ) across fixture generations.
-    * Earlier driver fixtures wrote TIMESTAMP(NANOS) parquet, which Spark 4
-    * rejects outright (PARQUET_TYPE_ILLEGAL) — readable only as raw longs
-    * under `nanosAsLong`, then truncated to µs (bit-identical to DuckDB's
-    * own ns→µs read-time truncation). Current fixtures write timestamp[µs]
-    * without UTC adjustment, which Spark reads as TIMESTAMP_NTZ. The
-    * session TZ is pinned UTC (build.sbt), so the NTZ→LTZ cast is
-    * value-preserving and both generations land on identical µs instants
-    * — every downstream window/watermark/date_trunc sees one type.
+  /** events with `ts` as TIMESTAMP (LTZ), via [[normalizeTs]]. The
+    * fixtures write timestamp[µs] without UTC adjustment, which Spark reads
+    * as TIMESTAMP_NTZ. The session TZ is pinned UTC (build.sbt), so the
+    * NTZ→LTZ cast keeps every instant, and every downstream
+    * window/watermark/date_trunc sees one type. A TIMESTAMP(NANOS) file
+    * fails the read (PARQUET_TYPE_ILLEGAL).
     */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(s: SparkSession, d: String): DataFrame =
     normalizeTs(tbl(s, d, "events"))
-  }
 
-  /** ts → TimestampType for either fixture generation (see [[events]]). */
+  /** `ts` as TimestampType: a TIMESTAMP_NTZ column is cast under a UTC
+    * session, a TIMESTAMP column is returned unchanged, and any other type
+    * fails, naming it (a raw long has no unit to read it by).
+    */
   def normalizeTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
+      case TimestampNTZType =>
         // The NTZ→LTZ cast reinterprets the wall-clock fields in the
         // SESSION timezone — value-preserving ONLY under UTC. That
         // invariant lives in session config (build.sbt fork options /
         // each builder), not in this code path, so fail loudly rather
         // than silently shifting every instant if a caller ever runs
-        // non-UTC (r9 ADVICE). The legacy nanos branch above is
-        // TZ-independent and needs no guard.
+        // non-UTC.
         val tz = df.sparkSession.sessionState.conf.sessionLocalTimeZone
         // Compare normalized zone rules, not the literal string: 'UTC',
         // 'Etc/UTC', 'Z', '+00:00' are all value-preserving for the cast
-        // and must all pass; only a genuinely shifted zone should throw
-        // (review r10).
+        // and must all pass; only a genuinely shifted zone should throw.
         val isUtc = scala.util.Try(
           java.time.ZoneId.of(tz).normalized() == java.time.ZoneOffset.UTC
         ).getOrElse(false)
@@ -89,7 +84,10 @@ object T {
           s"events.ts is TIMESTAMP_NTZ: the NTZ->TIMESTAMP cast requires " +
             s"a UTC session timezone (got '$tz')")
         df.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => df.withColumn("ts", col("ts").cast("timestamp"))
+      case t =>
+        require(t == TimestampType,
+          s"ts must be TIMESTAMP or TIMESTAMP_NTZ, got ${t.simpleString}")
+        df
     }
   def documents(s: SparkSession, d: String): DataFrame  = tbl(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = tbl(s, d, "embeddings")

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expression for `array<float>` dot product with
@@ -143,53 +143,35 @@ case class DotF32F64(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** Standard injection point: `--conf spark.sql.extensions=graft.functions.GraftExtensions`
-  * registers the library's native expressions in every session built from
-  * that config (the per-session `VectorFunctions.register` below is the
-  * programmatic equivalent used by the driver-contract queries).
+/** Mean of float vectors: state = (per-dim double sums, count). The
+  * Aggregator surface exercises custom partial-merge state (SURVEY §2.10).
   */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("dot_f32"),
-      new ExpressionInfo(classOf[DotF32].getName, "dot_f32"),
-      (children: Seq[Expression]) => DotF32(children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("dot_f32f64"),
-      new ExpressionInfo(classOf[DotF32F64].getName, "dot_f32f64"),
-      (children: Seq[Expression]) => DotF32F64(children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("sum_i128"),
-      new ExpressionInfo(classOf[Int128SumDouble].getName, "sum_i128"),
-      (children: Seq[Expression]) => Int128SumDouble(children.head)))
+object VectorAvg extends Aggregator[Array[Float], (Array[Double], Long), Array[Double]] {
+  // Buffer sized lazily from the first vector seen — works for any
+  // dimensionality, and a dimension mismatch mid-group fails loudly.
+  def zero: (Array[Double], Long) = (Array.empty[Double], 0L)
+  def reduce(b: (Array[Double], Long), a: Array[Float]): (Array[Double], Long) = {
+    val sums = if (b._2 == 0) new Array[Double](a.length) else b._1
+    require(sums.length == a.length,
+      s"vector dimension mismatch: ${sums.length} vs ${a.length}")
+    var i = 0
+    while (i < a.length) { sums(i) += a(i); i += 1 }
+    (sums, b._2 + 1)
   }
-}
-
-object VectorFunctions {
-  /** Idempotently register `dot_f32` in the session's function registry so
-    * plain `expr("dot_f32(a, b)")` resolves (the SparkSessionExtensions
-    * injection point uses the same registry; per-session registration
-    * keeps the library usable without a spark.sql.extensions config).
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier("dot_f32")
-    if (!reg.functionExists(id)) {
-      reg.registerFunction(id,
-        new ExpressionInfo(classOf[DotF32].getName, "dot_f32"),
-        (children: Seq[Expression]) => DotF32(children.head, children(1)))
-    }
-    val idMixed = FunctionIdentifier("dot_f32f64")
-    if (!reg.functionExists(idMixed)) {
-      reg.registerFunction(idMixed,
-        new ExpressionInfo(classOf[DotF32F64].getName, "dot_f32f64"),
-        (children: Seq[Expression]) => DotF32F64(children.head, children(1)))
-    }
-    val idSum = FunctionIdentifier("sum_i128")
-    if (!reg.functionExists(idSum)) {
-      reg.registerFunction(idSum,
-        new ExpressionInfo(classOf[Int128SumDouble].getName, "sum_i128"),
-        (children: Seq[Expression]) => Int128SumDouble(children.head))
+  def merge(x: (Array[Double], Long), y: (Array[Double], Long)): (Array[Double], Long) = {
+    if (x._2 == 0) y
+    else if (y._2 == 0) x
+    else {
+      require(x._1.length == y._1.length,
+        s"vector dimension mismatch: ${x._1.length} vs ${y._1.length}")
+      var i = 0
+      while (i < x._1.length) { x._1(i) += y._1(i); i += 1 }
+      (x._1, x._2 + y._2)
     }
   }
+  def finish(r: (Array[Double], Long)): Array[Double] =
+    if (r._2 == 0) Array.empty else r._1.map(_ / r._2)
+  def bufferEncoder: ExpressionEncoder[(Array[Double], Long)] =
+    ExpressionEncoder[(Array[Double], Long)]()
+  def outputEncoder: ExpressionEncoder[Array[Double]] = ExpressionEncoder[Array[Double]]()
 }

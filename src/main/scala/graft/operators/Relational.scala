@@ -814,7 +814,6 @@ object Relational extends QueryModule {
     // covar rescales by 1/10⁴. The formula text is shared verbatim with
     // the oracle (corrStats) → bit-identical doubles before rounding.
     "agg_corr_stats" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val sums = Seq("q" -> "q", "qq" -> "q*q", "pc" -> "pc", "pp" -> "pc*pc",
         "qp" -> "q*pc", "dc" -> "dc", "tc" -> "tc", "dt" -> "dc*tc")
         .map { case (nm, e) => expr(s"sum_i128($e)").as(s"s_$nm") }
@@ -838,7 +837,6 @@ object Relational extends QueryModule {
     // verbatim with the oracle (momentStats), so both engines run the
     // identical IEEE expression over identical exact inputs.
     "agg_skew_kurt" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val aggs = count(lit(1)).as("n") +: (powerSums("q") ++ powerSums("c"))
       lineitem(s, d)
         .select(col("l_returnflag"),

@@ -1,8 +1,8 @@
 package graft.operators
 
 import graft.{QueryModule, Staging, T}
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search + multimodal columns over `embeddings`/`documents`
@@ -36,17 +36,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity extends QueryModule {
   import T._
-
-  /** Idempotently register the `mean_vec` UDAF (VectorAvg) — the three
-    * consumer keys each ensure it, and an unguarded `udf.register` logs a
-    * replace-function warning per call (r8 VERDICT nit).
-    */
-  private def registerMeanVec(s: SparkSession): Unit = {
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("mean_vec")
-    if (!s.sessionState.functionRegistry.functionExists(id))
-      s.udf.register("mean_vec", udaf(VectorAvg,
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Float]]()))
-  }
 
   /** Left-to-right double-precision dot product a·b (both array<float>). */
   private def dot(a: String, b: String): String =
@@ -304,7 +293,6 @@ object Similarity extends QueryModule {
     */
   private def probeScored(s: SparkSession, d: String,
                           onlyUsable: Boolean = false): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e0 = embeddings(s, d)
     // Index-backed searches (IVF) score index MEMBERS only — malformed
     // vectors were never admitted to the structure. Brute-force keys
@@ -415,8 +403,6 @@ object Similarity extends QueryModule {
     * staged-index write) never re-run the training chain.
     */
   private[graft] def trainCentroidsN(s: SparkSession, e: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
-    registerMeanVec(s)
     val samp = e.select(col("vec_id"), col("embedding"),
         expr(sparkHash).as("hv"),
         expr("sqrt(dot_f32(embedding, embedding))").as("norm"))
@@ -469,7 +455,6 @@ object Similarity extends QueryModule {
     * staged path is checked against.
     */
   private[graft] def cellAssignment(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = embeddings(s, d).filter(expr(usableVec("embedding")))
     assignCells(
       e.select(col("vec_id"), col("embedding"),
@@ -535,7 +520,6 @@ object Similarity extends QueryModule {
     scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   private def stagedIvf(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    graft.functions.VectorFunctions.register(s)
     // `iters=1` names the trainer's single Lloyd step; it stays in the
     // key so indexes staged under this exact string are reused.
     val indexKey =
@@ -580,7 +564,6 @@ object Similarity extends QueryModule {
     * scale).
     */
   private def ivfTopk(s: SparkSession, d: String, nprobe: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     // Only usable vectors train cells or live in them (malformed-vector
     // contract above): one NaN component would NaN a centroid dimension
     // and a dimension mismatch is a loud UDAF require — both are
@@ -629,7 +612,6 @@ object Similarity extends QueryModule {
 
     // ANN: probe searches only its own sign-LSH bucket (1/2^planes of data).
     "sim_ann_lsh" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       // usable-filter BEFORE bucketing: ANSI element_at(emb, i..64)
       // THROWS on a truncated vector (one corrupt row killed the whole
       // index build — emb_dirty corpus), and NaN sign bits diverge
@@ -652,7 +634,6 @@ object Similarity extends QueryModule {
     // of the probe's bucket (flip each of the LshPlanes bits) — the
     // standard recall lever, (planes+1)/2^planes of the data instead of 1.
     "sim_ann_multiprobe" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       // Same usable-filter-before-bucketing rule as sim_ann_lsh.
       val e = embeddings(s, d)
         .filter(expr(usableVec("embedding")))
@@ -701,7 +682,6 @@ object Similarity extends QueryModule {
     // (r13) needs no labels at all. Cosine rounded BEFORE ranking so
     // ties break identically in both engines (by neighbor id).
     "dedup_embed_cosine" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       // Norms once per vector (map-side), not three dot products per pair.
       // (A pre-assignment repartition to undo the single-row-group
       // 2026-08-13 fixture layout was measured and rejected here too:
@@ -777,8 +757,6 @@ object Similarity extends QueryModule {
     // Typed UDAF: per-label mean embedding via a custom Aggregator with
     // (sums[64], count) partial state — map-side combine, one shuffle.
     "udaf_vector_avg" -> ((s, d) => {
-      registerMeanVec(s)
-      graft.functions.VectorFunctions.register(s) // usableVec needs dot_f32
       // Output is exploded to (label, n_vecs, dim, mean_val) scalar rows:
       // the driver's compare sorts rows with pandas, which cannot order an
       // array-valued column (r1 udaf_vector_avg failed exactly there).
@@ -799,7 +777,6 @@ object Similarity extends QueryModule {
     // Multimodal row: text + typed metadata + vector in one result; filter
     // on both modalities, derive per-modality features.
     "multimodal_join" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       documents(s, d)
         .join(embeddings(s, d), col("doc_id") === col("vec_id"))
         .filter(col("lang").isin("en", "de") && col("label") < 5)
@@ -1007,39 +984,4 @@ object Similarity extends QueryModule {
       FROM b ORDER BY doc_id
     """
   )
-}
-
-/** Mean of float vectors: state = (per-dim double sums, count). The
-  * Aggregator surface exercises custom partial-merge state (SURVEY §2.10).
-  */
-object VectorAvg extends Aggregator[Array[Float], (Array[Double], Long), Array[Double]] {
-  // Buffer sized lazily from the first vector seen — works for any
-  // dimensionality, and a dimension mismatch mid-group fails loudly.
-  def zero: (Array[Double], Long) = (Array.empty[Double], 0L)
-  def reduce(b: (Array[Double], Long), a: Array[Float]): (Array[Double], Long) = {
-    val sums = if (b._2 == 0) new Array[Double](a.length) else b._1
-    require(sums.length == a.length,
-      s"vector dimension mismatch: ${sums.length} vs ${a.length}")
-    var i = 0
-    while (i < a.length) { sums(i) += a(i); i += 1 }
-    (sums, b._2 + 1)
-  }
-  def merge(x: (Array[Double], Long), y: (Array[Double], Long)): (Array[Double], Long) = {
-    if (x._2 == 0) y
-    else if (y._2 == 0) x
-    else {
-      require(x._1.length == y._1.length,
-        s"vector dimension mismatch: ${x._1.length} vs ${y._1.length}")
-      var i = 0
-      while (i < x._1.length) { x._1(i) += y._1(i); i += 1 }
-      (x._1, x._2 + y._2)
-    }
-  }
-  def finish(r: (Array[Double], Long)): Array[Double] =
-    if (r._2 == 0) Array.empty else r._1.map(_ / r._2)
-  import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-  def bufferEncoder: org.apache.spark.sql.Encoder[(Array[Double], Long)] =
-    ExpressionEncoder[(Array[Double], Long)]()
-  def outputEncoder: org.apache.spark.sql.Encoder[Array[Double]] =
-    ExpressionEncoder[Array[Double]]()
 }

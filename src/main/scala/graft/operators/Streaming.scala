@@ -94,10 +94,9 @@ object Streaming extends QueryModule {
     * the empty result).
     *
     * The input is `/tmp/graft_<name>_in_<tag>`, staged by `stage` once
-    * per events fingerprint ([[Staging.once]]); with `perRun` it is
-    * instead a fresh temp dir staged every run and deleted after it. The
-    * checkpoint is deleted after the run, success or not; the output dir
-    * lives until JVM exit because the returned DataFrame reads it lazily.
+    * per events fingerprint ([[Staging.once]]). The checkpoint is deleted
+    * after the run, success or not; the output dir lives until JVM exit
+    * because the returned DataFrame reads it lazily.
     *
     * Confs: 4 state partitions instead of the session's one per core —
     * state parallelism tracks key cardinality (~10 groups here), and each
@@ -108,21 +107,18 @@ object Streaming extends QueryModule {
     * advance. `confs` override these.
     */
   private def runStaged(s: SparkSession, d: String, name: String,
-      sources: Seq[Arrivals], sink: Sink, perRun: Boolean = false,
+      sources: Seq[Arrivals], sink: Sink,
       confs: Seq[(String, String)] = Nil)(stage: Path => Unit)(
       query: Seq[DataFrame] => DataFrame): DataFrame = {
     val out  = Staging.tempDirReapedAtExit(s"graft_${name}_out")
     val ckpt = Staging.freshCkptDir(s"graft_${name}_ckpt")
-    val in =
-      if (perRun) Files.createTempDirectory(s"graft_${name}_in")
-      else Paths.get(s"/tmp/graft_${name}_in_${Staging.tag(d)}")
+    val in = Paths.get(s"/tmp/graft_${name}_in_${Staging.tag(d)}")
     val allConfs = (Seq(
       "spark.sql.shuffle.partitions" -> "4",
       "spark.sql.streaming.minBatchesToRetain" -> "2",
       "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++ confs).toMap
     Staging.withConf(s, allConfs.toSeq: _*) { try {
-      if (perRun) stage(in)
-      else Staging.once(in.toString, Staging.eventsFingerprint(s, d))(stage)
+      Staging.once(in.toString, Staging.eventsFingerprint(s, d))(stage)
       val streams = sources.map { a =>
         val dir = in.resolve(a.dir).toString
         val schema = s.read.parquet(in.resolve(a.schemaOf).toString).schema
@@ -138,10 +134,7 @@ object Streaming extends QueryModule {
         .start()
         .awaitTermination()
       s.read.schema(emitted.schema).parquet(out)
-    } finally {
-      Staging.rmr(Paths.get(ckpt))
-      if (perRun) Staging.rmr(in)
-    } }
+    } finally Staging.rmr(Paths.get(ckpt)) }
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -172,19 +165,14 @@ object Streaming extends QueryModule {
     // operational ingest shape: new log files land, AvailableNow drains
     // them through bounded state, foreachBatch upserts day-partitions.
     "stream_batch_equiv" -> ((s, d) => {
-      // Stream sources can't infer schema: the runner takes it from the
-      // batch reader (ts arrives as raw long / NTZ per fixture generation —
-      // see T.events; T.normalizeTs below maps either to TIMESTAMP).
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // The file stream source watches a DIRECTORY (its real contract:
       // log files landing in a drop folder); the fixture is a single
-      // file, so each run stages it into a fresh dir via symlink —
-      // read-only, zero copy. Complete mode has no watermark, so a
-      // trailing no-data batch would only redo the full rewrite.
+      // file, so the stage copies it into one. Complete mode has no
+      // watermark, so a trailing no-data batch would only redo the full
+      // rewrite.
       runStaged(s, d, "sbe", Seq(Arrivals("events.parquet", oneFilePerBatch = false)),
-          rewriteAll, perRun = true) { in =>
-        Files.createSymbolicLink(in.resolve("events.parquet"),
-          Paths.get(s"$d/events.parquet").toAbsolutePath)
+          rewriteAll) { in =>
+        Files.copy(Paths.get(s"$d/events.parquet"), in.resolve("events.parquet"))
       } { case Seq(ev) =>
         T.normalizeTs(ev)
           .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
@@ -217,10 +205,9 @@ object Streaming extends QueryModule {
       val cutoff = lit(java.sql.Timestamp.valueOf("2024-01-10 00:00:00"))
       val mid    = lit(java.sql.Timestamp.valueOf("2024-01-05 00:00:00"))
       // Append-mode windows close only when the watermark passes them, so
-      // this key keeps the trailing no-data batch. The arrivals are plain
-      // micro-TIMESTAMP parquet via T.events, so the stream schema needs
-      // no nanos shim; mtimes are set 60 s apart because the file source
-      // orders pending files by modification time.
+      // this key keeps the trailing no-data batch. The arrivals are
+      // TIMESTAMP parquet written from T.events; mtimes are set 60 s apart
+      // because the file source orders pending files by modification time.
       runStaged(s, d, "sld", Seq(Arrivals("0_ontime.parquet")), appendFiles,
           confs = Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "true")) { in =>
         val ev = events(s, d)

@@ -26,40 +26,42 @@ class ContractSpec extends AnyFunSuite {
   }
 
   test("every query executes at sf0.001") {
+    // On a fresh session: it has none of the library's functions and none
+    // of the shared session's runtime confs, so every key must work from
+    // SparkEntry's own set-up and leave the session's confs as it found
+    // them (a leaked conf changes every later key's plan).
+    val s = spark.newSession()
+    val before = s.conf.getAll
     SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
+      val n = fn(s, sf).count()
       withClue(name)(assert(n >= 0))
     }
+    val after = s.conf.getAll
+    assert(after == before, s"confs changed: ${after.toSet diff before.toSet}")
   }
 
-  test("T.normalizeTs maps both fixture generations to TIMESTAMP") {
-    // The 2026-08-13 regeneration switched events.ts from TIMESTAMP(NANOS)
-    // (readable only as raw longs) to timestamp[µs]/NTZ; a future
-    // regeneration could switch back. Both branches must stay alive:
-    // identical instants out, TimestampType out, regardless of input type.
+  test("T.normalizeTs maps NTZ ts to TIMESTAMP and rejects a raw long") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.TimestampType
     import spark.implicits._
     val microsUtc = 1704067199123456L // 2023-12-31 23:59:59.123456 UTC
-    // Legacy generation: ts arrives as raw NANOS long.
-    val legacy = T.normalizeTs(Seq(microsUtc * 1000L).toDF("ts"))
-    // Current generation: ts arrives as TIMESTAMP_NTZ. Built from LITERAL
+    // The fixtures' ts arrives as TIMESTAMP_NTZ. Built from LITERAL
     // wall-clock fields (make_timestamp_ntz), NOT via a round-trip cast:
     // a cast-constructed NTZ and the cast back are inverse session-TZ
     // shifts, so that leg would pass under ANY timezone and could never
-    // catch the cast ceasing to be value-preserving (r9 ADVICE). With a
-    // literal NTZ, the unix_micros equality below holds ONLY when the
-    // NTZ→LTZ cast runs under a UTC session — the invariant normalizeTs
-    // now asserts.
+    // catch the cast ceasing to be value-preserving. With a literal NTZ,
+    // the unix_micros equality below holds ONLY when the NTZ→LTZ cast
+    // runs under a UTC session — the invariant normalizeTs asserts.
     val ntz = T.normalizeTs(
       spark.sql(
         "SELECT make_timestamp_ntz(2023, 12, 31, 23, 59, 59.123456) AS ts"))
-    for ((df, gen) <- Seq(legacy -> "legacy-nanos", ntz -> "ntz-micros")) {
-      withClue(gen) {
-        assert(df.schema("ts").dataType == TimestampType)
-        assert(df.select(unix_micros(col("ts"))).head.getLong(0) == microsUtc)
-      }
-    }
+    assert(ntz.schema("ts").dataType == TimestampType)
+    assert(ntz.select(unix_micros(col("ts"))).head.getLong(0) == microsUtc)
+    // A raw long ts has no unit to read it by: it must fail, naming the
+    // type, not be cast as seconds.
+    val e = intercept[IllegalArgumentException](
+      T.normalizeTs(Seq(microsUtc * 1000L).toDF("ts")))
+    assert(e.getMessage.contains("bigint"), e.getMessage)
     // And the live fixture loader lands on the same contract: every
     // watermark/window/date_trunc downstream assumes TimestampType.
     assert(T.events(spark, sf).schema("ts").dataType == TimestampType)

@@ -828,7 +828,7 @@ class GenPropertySpec extends AnyFunSuite {
   // truncated vectors and read NULL slots as 0.0f — this property is
   // the regression pin for that malformed-vector class (emb_dirty).
   test("dot_f32 equals the HOF zip_with fold on malformed and clean vectors") {
-    graft.functions.VectorFunctions.register(spark)
+    graft.functions.SqlFunctions.register(spark)
     import spark.implicits._
     val elemGen: Gen[Option[Float]] = Gen.frequency(
       12 -> Gen.chooseNum(-100, 100).map(n => Some(n / 8.0f)),
@@ -879,7 +879,7 @@ class GenPropertySpec extends AnyFunSuite {
   // codegen'd dot_f32f64 — this property is what licenses that move
   // (bit-identical on every input class, both expression paths).
   test("dot_f32f64 equals the HOF zip_with fold on malformed and clean vectors") {
-    graft.functions.VectorFunctions.register(spark)
+    graft.functions.SqlFunctions.register(spark)
     import spark.implicits._
     val f32Gen: Gen[Option[Float]] = Gen.frequency(
       12 -> Gen.chooseNum(-100, 100).map(n => Some(n / 8.0f)),
@@ -970,7 +970,7 @@ class GenPropertySpec extends AnyFunSuite {
   // EVERY admissible plane count, not just the shipped 8 — same
   // treatment the r12 simhash-geometry property gave the band width.
   test("multiprobe radius-1 recall holds at every LSH plane count") {
-    graft.functions.VectorFunctions.register(spark)
+    graft.functions.SqlFunctions.register(spark)
     val vecGen: Gen[List[Array[Float]]] = for {
       n <- Gen.chooseNum(4, 12)
       vs <- Gen.listOfN(n, Gen.listOfN(64,
@@ -1065,6 +1065,7 @@ class GenPropertySpec extends AnyFunSuite {
   // assert the assignment is TOTAL (every usable vector exactly one
   // cell), RANGE-VALID, and DETERMINISTIC across invocations.
   test("trained quantizer is total, valid, and deterministic on generated corpora") {
+    graft.functions.SqlFunctions.register(spark)
     val corpusGen: Gen[List[Array[Float]]] = for {
       n <- Gen.chooseNum(3, 16)
       vs <- Gen.listOfN(n, Gen.listOfN(64,

@@ -269,7 +269,7 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("ivf: result is the exact top-5 of the chosen cell") {
-    graft.functions.VectorFunctions.register(spark)
+    graft.functions.SqlFunctions.register(spark)
     val ivf = SparkEntry.queries("sim_ivf_topk")(spark, sf)
       .select(col("vec_id"), col("cos")).collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
@@ -297,7 +297,7 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("ivf: trained quantizer is label-independent and covers the usable corpus") {
-    graft.functions.VectorFunctions.register(spark)
+    graft.functions.SqlFunctions.register(spark)
     val assign = graft.operators.Similarity.cellAssignment(spark, sf)
     val usable = embeddings(spark, sf).filter(
       expr("size(embedding) = 64 AND dot_f32(embedding, embedding) IS NOT NULL" +

@@ -69,7 +69,7 @@ class Round4Spec extends AnyFunSuite {
   // ---- Int128SumDouble -----------------------------------------------
 
   private def sumI128(values: Seq[Long], partitions: Int = 7): Double = {
-    graft.functions.VectorFunctions.register(spark)
+    graft.functions.SqlFunctions.register(spark)
     import spark.implicits._
     values.toDF("v").repartition(partitions)
       .agg(expr("sum_i128(v)").as("s")).collect()(0).getDouble(0)
@@ -93,7 +93,7 @@ class Round4Spec extends AnyFunSuite {
   }
 
   test("sum_i128: nulls contribute zero") {
-    graft.functions.VectorFunctions.register(spark)
+    graft.functions.SqlFunctions.register(spark)
     import spark.implicits._
     val got = Seq[java.lang.Long](1L, null, 2L, null, 3L).toDF("v")
       .agg(expr("sum_i128(v)")).collect()(0).getDouble(0)
@@ -107,7 +107,7 @@ class Round4Spec extends AnyFunSuite {
   }
 
   test("sum_i128 group sums match builtin decimal sums on fixture data") {
-    graft.functions.VectorFunctions.register(spark)
+    graft.functions.SqlFunctions.register(spark)
     val li = T.lineitem(spark, sf)
       .selectExpr("l_returnflag", "CAST(round(l_extendedprice * 100) AS BIGINT) AS pc")
     val ours = li.groupBy("l_returnflag").agg(expr("sum_i128(pc*pc)").as("s"))

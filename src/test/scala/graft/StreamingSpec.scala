@@ -532,7 +532,6 @@ class StreamingSpec extends AnyFunSuite {
   test("Staging.once restages after an in-place fixture regeneration (mid-JVM)") {
     import org.apache.spark.sql.functions._
     val dir = Staging.tempDirReapedAtExit("graft_regen")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sf/events.parquet")
     raw.write.parquet(s"$dir/events.parquet")
     val in = Staging.tempDirReapedAtExit("graft_regen_in")
@@ -601,7 +600,6 @@ class StreamingSpec extends AnyFunSuite {
   test("eventsFingerprint detects content-only fixture regeneration") {
     import org.apache.spark.sql.functions._
     val dir = Staging.tempDirReapedAtExit("graft_fp_t")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sf/events.parquet")
     raw.write.parquet(s"$dir/events.parquet")
     val fp1 = Staging.eventsFingerprint(spark, dir)
