@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
+import java.nio.file.{Files, Paths}
+import scala.collection.concurrent.TrieMap
 
 /** Shared table readers and oracle-parity helpers.
   *
@@ -39,9 +41,31 @@ object T {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Parquet reader. Schemas are embedded in parquet (no inference). */
-  def tbl(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Parquet reader that reads with a given schema. Inferring a parquet
+    * schema runs one Spark job over the footers, so each fixture's schema
+    * is inferred once per session and then given to every later read of
+    * it. The cache holds `StructType`s only, never data. An entry is keyed
+    * by the session, the path's [[Staging.fileSig]] (size and mtime in ns,
+    * so a fixture rewritten mid-JVM is inferred again) and the session's
+    * parquet settings, which decide how a file's schema reads. A path that
+    * is not a local file is inferred on every read.
+    */
+  def tbl(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    if (!Files.exists(Paths.get(path))) spark.read.parquet(path)
+    else {
+      val parquetConf = spark.conf.getAll.toSeq
+        .filter { case (k, _) => k.contains(".parquet.") }.sorted.mkString(";")
+      val perSession = schemas.synchronized(
+        schemas.computeIfAbsent(spark, _ => TrieMap.empty[String, StructType]))
+      val key = s"$path|${Staging.fileSig(Paths.get(path))}|$parquetConf"
+      val schema = perSession.getOrElseUpdate(key, spark.read.parquet(path).schema)
+      spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, TrieMap[String, StructType]]()
 
   def lineitem(s: SparkSession, d: String): DataFrame = tbl(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame   = tbl(s, d, "orders")

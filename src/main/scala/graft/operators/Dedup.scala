@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryModule, T}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -73,7 +73,12 @@ object Dedup extends QueryModule {
       val nbrMin = labels.union(prop)
         .groupBy(col("id")).agg(min(col("comp")).as("comp"))
       val jump = nbrMin.select(col("id").as("jid"), col("comp").as("jcomp"))
-      labels = nbrMin.join(jump, col("comp") === col("jid"), "left")
+      // MERGE pins the jump join's strategy, as a shuffle join that holds
+      // at any scale. Unpinned, it is planned as a sort-merge join that
+      // adaptive execution turns into a broadcast join at run time, and
+      // the jobs that takes vary from run to run of one input (5 or 6 in
+      // round 1 at sf0.1); pinned, every round runs a fixed job count.
+      labels = nbrMin.join(jump.hint("merge"), col("comp") === col("jid"), "left")
         .select(col("id"),
           least(col("comp"), coalesce(col("jcomp"), col("comp")))
             .as("comp"))
@@ -238,8 +243,19 @@ object Dedup extends QueryModule {
       }).toDF("doc_id", "simhash")
   }
 
+  /** `|a ∩ b|` of two strictly ascending, NULL-free `array<bigint>`
+    * columns; equal to `size(array_intersect(a, b))` on that input, and an
+    * error on any other (see [[graft.functions.SortedIntersect]]).
+    */
+  private[graft] def sortedIntersectSize(a: Column, b: Column): Column = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    ColumnBridge.column(graft.functions.SortedIntersectSize(
+      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+  }
+
   /** Prefix-filtered exact-Jaccard pairs over (doc_id, codes) with codes
-    * SORTED ascending — the all-pairs similarity join of Bayardo/Ma/
+    * STRICTLY ascending (no duplicate, no NULL; enforced by the confirm
+    * step) — the all-pairs similarity join of Bayardo/Ma/
     * Srikant (WWW'07) and Chaudhuri's SSJoin, re-expressed as three
     * DataFrame joins.
     *
@@ -316,13 +332,17 @@ object Dedup extends QueryModule {
     // Confirm on full sorted arrays. At fixture scale both sides
     // auto-broadcast; at 100 TB these become doc_id shuffle joins whose
     // payload is O(candidates) arrays — candidates ≈ output size here.
+    // The confirm step needs `codes` strictly ascending with no NULL
+    // (codesDS emits `distinct.sorted`, and array_except keeps that
+    // order): sortedIntersectSize counts the overlap in one merge pass
+    // and fails the query on any other input.
     cand
       .join(d.select(col("doc_id").as("a_id"), col("codes").as("ca"),
         col("nsh").as("na")), "a_id")
       .join(d.select(col("doc_id").as("b_id"), col("codes").as("cb"),
         col("nsh").as("nb")), "b_id")
       .select(col("a_id"), col("b_id"),
-        size(array_intersect(col("ca"), col("cb"))).as("inter"),
+        sortedIntersectSize(col("ca"), col("cb")).as("inter"),
         col("na"), col("nb"))
       .select(col("a_id"), col("b_id"),
         r6(col("inter") / (col("na") + col("nb") - col("inter"))).as("jaccard"))
@@ -377,7 +397,7 @@ object Dedup extends QueryModule {
           col("a.band") === col("b.band") && col("a.key") === col("b.key")
             && col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-          size(array_intersect(col("a.codes"), col("b.codes"))).as("inter"),
+          sortedIntersectSize(col("a.codes"), col("b.codes")).as("inter"),
           size(col("a.codes")).as("na"), size(col("b.codes")).as("nb"))
         .select(col("a_id"), col("b_id"),
           r6(col("inter") / (col("na") + col("nb") - col("inter"))).as("jaccard"))

@@ -1,9 +1,6 @@
 package graft
 
 import java.sql.Date
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.graftspec.SparkAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -268,19 +265,6 @@ class ApiSpec extends AnyFunSuite {
     val pc = new api.Playcounts(big)
     intercept[ArithmeticException](pc.dateCount("Big.oga", day1).collect())
     intercept[ArithmeticException](pc.dateRangeCount("Big.oga", day1, day2).collect())
-  }
-
-  /** Spark jobs started by `body`, counted once the listener bus drains. */
-  private def jobsOf(body: => Any): Long = {
-    val n = new AtomicLong
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    SparkAccess.drain(sc)
-    sc.addSparkListener(listener)
-    try { body; SparkAccess.drain(sc); n.get }
-    finally sc.removeSparkListener(listener)
   }
 
   test("each request runs one job; only an empty answer adds the probe") {

@@ -924,6 +924,75 @@ class GenPropertySpec extends AnyFunSuite {
     }
   }
 
+  // sorted_intersect_size replaces size(array_intersect(...)) at Dedup's
+  // confirm sites, so it must equal it on every strictly ascending pair
+  // (empty, identical, disjoint, negative, the Long extremes) under both
+  // expression paths, and fail loudly on any input outside that contract.
+  test("sorted_intersect_size equals size(array_intersect) on strictly ascending arrays") {
+    import spark.implicits._
+    val elemGen: Gen[Long] = Gen.frequency(
+      8 -> Gen.chooseNum(-12L, 12L),
+      1 -> Gen.oneOf(Long.MinValue, Long.MinValue + 1, Long.MaxValue - 1, Long.MaxValue),
+      1 -> Gen.chooseNum(Long.MinValue, Long.MaxValue))
+    val setGen: Gen[Seq[Long]] =
+      Gen.chooseNum(0, 14).flatMap(Gen.listOfN(_, elemGen)).map(_.distinct.sorted)
+    val pairGen: Gen[(Seq[Long], Seq[Long])] = Gen.oneOf(
+      Gen.zip(setGen, setGen),
+      setGen.map(a => (a, a)),
+      Gen.zip(setGen, setGen).map { case (a, b) => (a, b.filterNot(a.contains)) },
+      setGen.map(a => (a, Seq.empty[Long])),
+      setGen.map(a => (Seq.empty[Long], a)))
+    def underMode[A](interpreted: Boolean)(body: => A): A = {
+      val ws = spark.conf.get("spark.sql.codegen.wholeStage")
+      val fm = spark.conf.get("spark.sql.codegen.factoryMode")
+      try {
+        spark.conf.set("spark.sql.codegen.wholeStage", (!interpreted).toString)
+        spark.conf.set("spark.sql.codegen.factoryMode",
+          if (interpreted) "NO_CODEGEN" else "CODEGEN_ONLY")
+        body
+      } finally {
+        spark.conf.set("spark.sql.codegen.wholeStage", ws)
+        spark.conf.set("spark.sql.codegen.factoryMode", fm)
+      }
+    }
+    // An RDD source, not a local Seq: the optimizer evaluates projections
+    // over a LocalRelation with interpreted code, whatever the mode.
+    def kernel(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id"), operators.Dedup.sortedIntersectSize(col("a"), col("b")))
+    forAll(Gen.listOfN(24, pairGen)) { pairs =>
+      val df = spark.sparkContext.parallelize(
+        pairs.zipWithIndex.map { case ((a, b), i) => (i.toLong, a, b) }, 2)
+        .toDF("id", "a", "b")
+      val want = df.select(col("id"), size(array_intersect(col("a"), col("b"))))
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      for (interpreted <- Seq(false, true)) underMode(interpreted) {
+        val q = kernel(df)
+        if (!interpreted) assert(
+          org.apache.spark.sql.execution.debug.codegenString(q.queryExecution.executedPlan)
+            .contains("graft.functions.SortedIntersect.size"),
+          "sorted_intersect_size is not in the generated code")
+        q.collect().foreach { r =>
+          val (a, b) = pairs(r.getLong(0).toInt)
+          assert(r.getInt(1) == want(r.getLong(0)),
+            s"[interpreted=$interpreted] a=$a b=$b: ${r.getInt(1)} != ${want(r.getLong(0))}")
+        }
+      }
+    }
+    val bad = Seq[Seq[Option[Long]]](
+      Seq(Some(1L), Some(5L), Some(3L)),
+      Seq(Some(Long.MinValue), Some(2L), Some(2L)),
+      Seq(Some(1L), None, Some(3L)))
+    val ok = Seq[Option[Long]](Some(2L), Some(4L))
+    for (interpreted <- Seq(false, true); x <- bad; (a, b) <- Seq((x, ok), (ok, x))) {
+      val df = spark.sparkContext.parallelize(Seq((0L, a, b)), 1).toDF("id", "a", "b")
+      val e = intercept[Exception](underMode(interpreted)(kernel(df).collect()))
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains("sorted_intersect_size")),
+        s"[interpreted=$interpreted] a=$a b=$b failed without naming the function: $e")
+    }
+  }
+
   test("property: minLabelComponents equals union-find on random graphs") {
     // The pointer-jumping label loop (r12) against a classic union-find
     // reference, over random edge sets — paths, cliques, stars, and

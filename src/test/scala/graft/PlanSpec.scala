@@ -118,6 +118,38 @@ class PlanSpec extends AnyFunSuite {
       "minhash candidate generation must be an equi-join on band key")
   }
 
+  /** The executed plans of every query a key runs: those its build runs
+    * (dedup_cluster_cc's label loop) and its own, executed to a noop sink.
+    */
+  private def plansRun(key: String): String = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries(key)(spark, sf).write.format("noop").mode("overwrite").save()
+      org.apache.spark.graftspec.SparkAccess.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    plans.toArray.mkString("\n")
+  }
+
+  test("dedup confirm steps count the overlap with sorted_intersect_size") {
+    Seq("dedup_ngram_jaccard", "dedup_ngram_capped", "dedup_cluster_cc",
+        "dedup_near_minhash").foreach { key =>
+      val p = plansRun(key)
+      withClue(key) {
+        assert(p.contains("sorted_intersect_size"), s"no merge-count kernel in:\n$p")
+        assert(!p.contains("array_intersect"), s"hash-set intersect in:\n$p")
+      }
+    }
+    // Its arrays are not sorted, so this key keeps the generic function.
+    assert(plansRun("fn_array_setops").contains("array_intersect"))
+  }
+
   test("sql_tpch_q17 decorrelates the scalar subquery into one aggregate") {
     // The per-part avg must run as ONE aggregate + join (the decorrelated
     // shape), never a per-outer-row subplan: no nested-loop join, and the

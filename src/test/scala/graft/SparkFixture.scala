@@ -19,4 +19,20 @@ object SparkFixture {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Spark jobs started by `body` in any session of the shared context,
+    * counted once the listener bus drains.
+    */
+  def jobsOf(body: => Any): Long = {
+    val n = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graftspec.SparkAccess.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.graftspec.SparkAccess.drain(sc); n.get }
+    finally sc.removeSparkListener(listener)
+  }
 }
