@@ -36,10 +36,31 @@ object T {
     a
   }
 
-  /** All fixture tables, for view registration / docs. */
+  /** All fixture tables: the names [[sql]] binds. */
   val tables: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** `s.sql(text)` over the fixtures of `d`, each fixture table that
+    * `text` names (a whole-word, case-insensitive match) bound as a temp
+    * view under its own name, so one SQL text serves both engines.
+    *
+    * - The views exist only while the text is analyzed: they are dropped
+    *   in `finally`. `s.sql` returns an analyzed DataFrame, into whose
+    *   plan each view is already resolved, so it still runs, persists
+    *   and writes after the drop.
+    * - `events` is bound through [[events]], with `ts` normalized; every
+    *   other table through [[tbl]].
+    * - A session temp view of the same name is replaced and then
+    *   dropped.
+    */
+  def sql(s: SparkSession, d: String, text: String): DataFrame = {
+    val named = tables.filter(t => s"(?i)\\b$t\\b".r.findFirstIn(text).isDefined)
+    named.foreach(t =>
+      (if (t == "events") events(s, d) else tbl(s, d, t)).createOrReplaceTempView(t))
+    try s.sql(text)
+    finally named.foreach(s.catalog.dropTempView)
+  }
 
   /** Parquet reader that reads with a given schema. Inferring a parquet
     * schema runs one Spark job over the footers, so each fixture's schema

@@ -350,9 +350,7 @@ object Functions extends QueryModule {
     // exercises one failure class: div-by-zero, bigint overflow,
     // unparseable cast, out-of-bounds element, unparseable timestamp.
     // The oracle reproduces the NULL semantics with CASE guards.
-    "fn_try_ansi" -> ((s, d) => {
-      part(s, d).createOrReplaceTempView("part_try")
-      s.sql("""
+    "fn_try_ansi" -> ((s, d) => T.sql(s, d, """
         SELECT p_partkey,
                round(try_divide(p_retailprice, p_size - 25), 6) + 0.0 AS div_maybe,
                -- r19 OPTIMIZATION (guide step 2, the r18 bad_ts lesson
@@ -395,9 +393,8 @@ object Functions extends QueryModule {
                -- pinned on adversarial strings by FunctionsParitySpec.
                CASE WHEN p_brand RLIKE '^\\s*[+-]?[0-9]'
                     THEN try_to_timestamp(p_brand, 'yyyy-MM-dd') END AS bad_ts
-        FROM part_try
-      """)
-    }),
+        FROM part
+      """)),
 
     // Spark 4 collation framework: case-insensitive grouping via
     // UTF8_LCASE as a COLUMN property rather than per-expression
@@ -407,16 +404,13 @@ object Functions extends QueryModule {
     // MERGES keys; the emitted group label is normalized with lower()
     // because a collated group's representative is whichever casing a
     // partition saw first. Oracle: plain lower() grouping.
-    "fn_collation" -> ((s, d) => {
-      part(s, d).createOrReplaceTempView("part_coll")
-      s.sql("""
+    "fn_collation" -> ((s, d) => T.sql(s, d, """
         WITH m AS (
           SELECT explode(array(p_brand, lower(p_brand), upper(p_brand))) AS b
-          FROM part_coll)
+          FROM part)
         SELECT lower(b COLLATE UTF8_LCASE) AS brand_ci, count(*) AS n
         FROM m GROUP BY b COLLATE UTF8_LCASE
-      """)
-    }),
+      """)),
 
     // Spark 4 VARIANT: schemaless semi-structured columns — the
     // heterogeneous-metadata path a training-data pipeline needs when

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{QueryModule, Staging, T}
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,11 +29,11 @@ object Joins extends QueryModule {
   /** Per-part top-2 lineitems via correlated LATERAL + LIMIT, one SQL
     * text for BOTH engines.
     */
-  private def lateralTopnSql(part: String, lineitem: String): String = s"""
+  private val lateralTopnSql: String = """
     SELECT p_brand, p_partkey, l.l_orderkey,
            round(l.l_extendedprice, 4) AS price
-    FROM $part p, LATERAL (
-      SELECT l_orderkey, l_extendedprice FROM $lineitem
+    FROM part p, LATERAL (
+      SELECT l_orderkey, l_extendedprice FROM lineitem
       WHERE l_partkey = p.p_partkey
       ORDER BY l_extendedprice DESC, l_orderkey LIMIT 2) l
     WHERE p_brand IN ('Brand#12', 'Brand#23')"""
@@ -160,11 +159,7 @@ object Joins extends QueryModule {
     // Same text runs in DuckDB; the output order-by keys make the top-2
     // multiset deterministic under price ties (same orderkey+price rows
     // differ only in non-projected linenumber).
-    "join_lateral_topn" -> ((s, d) => {
-      part(s, d).createOrReplaceTempView("part_lat")
-      lineitem(s, d).createOrReplaceTempView("lineitem_lat")
-      s.sql(lateralTopnSql("part_lat", "lineitem_lat"))
-    }),
+    "join_lateral_topn" -> ((s, d) => T.sql(s, d, lateralTopnSql)),
 
     // As-of join: each purchase → latest prior-or-equal click of the same
     // user (see asofLatest below — factored for the off-fixture tie
@@ -207,20 +202,18 @@ object Joins extends QueryModule {
       val fp = sides.map { case (_, _, table, cols) =>
         Staging.fingerprint(s"$d/$table.parquet", rows(table, cols), cols)
       }.mkString(";")
-      // Bucketing needs an explicit column list in the DDL; it is staged
-      // next to the tables, so registering one runs no schema-inference job.
       Staging.once(base, fp) { tmp =>
         sides.foreach { case (name, key, table, cols) =>
-          val df = rows(table, cols)
           s.sql(s"DROP TABLE IF EXISTS $name")
-          df.write.format("parquet").bucketBy(8, key).sortBy(key)
+          rows(table, cols).write.format("parquet").bucketBy(8, key).sortBy(key)
             .option("path", s"$tmp/$name").saveAsTable(name)
-          Files.writeString(tmp.resolve(s"$name.ddl"),
-            df.schema.fields.map(f => s"${f.name} ${f.dataType.sql}").mkString(", "))
         }
       }
-      sides.foreach { case (name, key, _, _) =>
-        val ddl = Files.readString(Paths.get(s"$base/$name.ddl"))
+      // Bucketing needs an explicit column list in the DDL. T.tbl caches
+      // each fixture's schema per session, so reading it runs no job.
+      sides.foreach { case (name, key, table, cols) =>
+        val ddl = rows(table, cols).schema.fields
+          .map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
         s.sql(s"DROP TABLE IF EXISTS $name")
         s.sql(s"CREATE TABLE $name ($ddl) USING parquet CLUSTERED BY ($key) " +
           s"SORTED BY ($key) INTO 8 BUCKETS LOCATION '$base/$name'")
@@ -456,7 +449,7 @@ object Joins extends QueryModule {
     """,
 
     "join_lateral_topn" ->
-      (lateralTopnSql("part", "lineitem") + "\n      ORDER BY p_partkey, price DESC, l_orderkey"),
+      (lateralTopnSql + "\n      ORDER BY p_partkey, price DESC, l_orderkey"),
 
     "join_asof_latest" -> """
       SELECT p.event_id, p.user_id, max(c.ts) AS asof_click_ts

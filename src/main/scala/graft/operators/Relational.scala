@@ -154,7 +154,7 @@ object Relational extends QueryModule {
   // 1e-6 quantum — the boundary class needs giant magnitudes. rowPrec 38
   // (not the ≤8 fast path): the cents³ product rows carry ~11 digits, so
   // DecimalAggregates can't run these as unscaled longs at any precision.
-  private def tpchQ1Sql(table: String): String = {
+  private val tpchQ1Sql: String = {
     import ExactMoney._
     s"""
     WITH b AS (
@@ -163,7 +163,7 @@ object Relational extends QueryModule {
              ${unitsSql("l_extendedprice", 2)} AS pc,
              ${unitsSql("l_discount", 2)} AS dc,
              ${unitsSql("l_tax", 2)} AS tc
-      FROM $table
+      FROM lineitem
       WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'),
     t AS (
       SELECT l_returnflag, l_linestatus,
@@ -201,18 +201,17 @@ object Relational extends QueryModule {
     * broadcast only region/nation/supplier, with AQE re-checking at run
     * time.
     */
-  private def tpchQ5Sql(customer: String, orders: String, lineitem: String,
-                        supplier: String, nation: String, region: String): String = s"""
+  private val tpchQ5Sql: String = s"""
     WITH b AS (
       SELECT n_name,
              ${ExactMoney.unitsSql("l_extendedprice", 2)} AS pc,
              ${ExactMoney.unitsSql("l_discount", 2)} AS dc
-      FROM $customer
-           JOIN $orders   ON c_custkey = o_custkey
-           JOIN $lineitem ON l_orderkey = o_orderkey
-           JOIN $supplier ON l_suppkey = s_suppkey
-           JOIN $nation   ON s_nationkey = n_nationkey
-           JOIN $region   ON n_regionkey = r_regionkey
+      FROM customer
+           JOIN orders   ON c_custkey = o_custkey
+           JOIN lineitem ON l_orderkey = o_orderkey
+           JOIN supplier ON l_suppkey = s_suppkey
+           JOIN nation   ON s_nationkey = n_nationkey
+           JOIN region   ON n_regionkey = r_regionkey
       WHERE r_name = 'ASIA'
         AND c_nationkey = s_nationkey
         AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -232,15 +231,15 @@ object Relational extends QueryModule {
     * per-part double sum is exact (< 2^53) and avg/0.2· are single IEEE
     * ops; the money output sums exact cents per the q1 recipe.
     */
-  private def tpchQ17Sql(lineitem: String, part: String): String = s"""
+  private val tpchQ17Sql: String = s"""
     SELECT p_brand,
            count(*) AS n_small,
            round(CAST(sum(CAST(CAST(round(l_extendedprice * 100) AS BIGINT)
                                 AS DECIMAL(38,0))) AS DOUBLE) / 100.0 / 7.0, 4)
              AS avg_yearly
-    FROM $lineitem JOIN $part ON p_partkey = l_partkey
+    FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE p_brand IN ('Brand#12', 'Brand#23')
-      AND l_quantity < (SELECT 0.2 * avg(l_quantity) FROM $lineitem l2
+      AND l_quantity < (SELECT 0.2 * avg(l_quantity) FROM lineitem l2
                         WHERE l2.l_partkey = p_partkey)
     GROUP BY p_brand"""
 
@@ -252,16 +251,15 @@ object Relational extends QueryModule {
     * never a per-order correlated re-scan. Quantities are integer-valued
     * (Q1 recipe), so the HAVING threshold compare is exact.
     */
-  private def tpchQ18Sql(customer: String, orders: String,
-                         lineitem: String): String = s"""
+  private val tpchQ18Sql: String = s"""
     SELECT c_custkey, o_orderkey,
            CAST(o_orderdate AS DATE) AS orderdate,
            round(o_totalprice, 4) AS totalprice,
            CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-    FROM $customer
-         JOIN $orders   ON c_custkey = o_custkey
-         JOIN $lineitem ON o_orderkey = l_orderkey
-    WHERE o_orderkey IN (SELECT l_orderkey FROM $lineitem
+    FROM customer
+         JOIN orders   ON c_custkey = o_custkey
+         JOIN lineitem ON o_orderkey = l_orderkey
+    WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem
                          GROUP BY l_orderkey
                          HAVING sum(CAST(l_quantity AS BIGINT)) > 250)
     GROUP BY c_custkey, o_orderkey, o_orderdate, o_totalprice"""
@@ -277,20 +275,19 @@ object Relational extends QueryModule {
     * on the return flag: supplier's own line returned ('R') while no other
     * supplier's line on the order was.
     */
-  private def tpchQ21Sql(supplier: String, lineitem: String, orders: String,
-                         nation: String): String = s"""
+  private val tpchQ21Sql: String = s"""
     SELECT s_name, count(*) AS numwait
-    FROM $supplier
-         JOIN $lineitem l1 ON s_suppkey = l1.l_suppkey
-         JOIN $orders       ON o_orderkey = l1.l_orderkey
-         JOIN $nation       ON s_nationkey = n_nationkey
+    FROM supplier
+         JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
+         JOIN orders       ON o_orderkey = l1.l_orderkey
+         JOIN nation       ON s_nationkey = n_nationkey
     WHERE o_orderstatus = 'F'
       AND l1.l_returnflag = 'R'
       AND n_name IN ('NATION_3', 'NATION_7', 'NATION_11', 'NATION_19')
-      AND EXISTS (SELECT 1 FROM $lineitem l2
+      AND EXISTS (SELECT 1 FROM lineitem l2
                   WHERE l2.l_orderkey = l1.l_orderkey
                     AND l2.l_suppkey <> l1.l_suppkey)
-      AND NOT EXISTS (SELECT 1 FROM $lineitem l3
+      AND NOT EXISTS (SELECT 1 FROM lineitem l3
                       WHERE l3.l_orderkey = l1.l_orderkey
                         AND l3.l_suppkey <> l1.l_suppkey
                         AND l3.l_returnflag = 'R')
@@ -305,18 +302,18 @@ object Relational extends QueryModule {
     * sums, whose merge order would make the threshold nondeterministic
     * at the boundary; products of exact BIGINTs cannot disagree.
     */
-  private def tpchQ22Sql(customer: String, orders: String): String = s"""
+  private val tpchQ22Sql: String = s"""
     WITH c AS (
       SELECT c_custkey, c_nationkey,
              CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c
-      FROM $customer)
+      FROM customer)
     SELECT c_nationkey AS cntrycode, count(*) AS numcust,
            round(CAST(sum(CAST(bal_c AS DECIMAL(38,0))) AS DOUBLE) / 100.0, 4)
              AS totacctbal
     FROM c
     WHERE bal_c * (SELECT count(*) FROM c WHERE bal_c > 0)
             > (SELECT sum(bal_c) FROM c WHERE bal_c > 0)
-      AND NOT EXISTS (SELECT 1 FROM $orders o
+      AND NOT EXISTS (SELECT 1 FROM orders o
                       WHERE o.o_custkey = c.c_custkey
                         AND o.o_orderpriority = '1-URGENT')
     GROUP BY c_nationkey"""
@@ -330,19 +327,18 @@ object Relational extends QueryModule {
     * equality is engine-exact; ties at the minimum return every tying
     * row, q2's own multiset semantics.
     */
-  private def tpchQ2Sql(part: String, lineitem: String, supplier: String,
-                        nation: String): String = s"""
+  private val tpchQ2Sql: String = s"""
     SELECT p_partkey, p_brand, s_name, n_name,
            round(l_extendedprice, 4) AS min_price
-    FROM $part
-         JOIN $lineitem ON p_partkey = l_partkey
-         JOIN $supplier ON s_suppkey = l_suppkey
-         JOIN $nation   ON s_nationkey = n_nationkey
+    FROM part
+         JOIN lineitem ON p_partkey = l_partkey
+         JOIN supplier ON s_suppkey = l_suppkey
+         JOIN nation   ON s_nationkey = n_nationkey
     WHERE p_size < 10
       AND s_nationkey < 13
       AND l_extendedprice = (SELECT min(l2.l_extendedprice)
-                             FROM $lineitem l2
-                                  JOIN $supplier s2 ON l2.l_suppkey = s2.s_suppkey
+                             FROM lineitem l2
+                                  JOIN supplier s2 ON l2.l_suppkey = s2.s_suppkey
                              WHERE l2.l_partkey = p_partkey
                                AND s2.s_nationkey < 13)"""
 
@@ -353,12 +349,12 @@ object Relational extends QueryModule {
     * an exact integer cross-multiply over cents×quantity values summed
     * in DECIMAL(38,0) — no double avg, no decimal-fraction literal.
     */
-  private def tpchQ11Sql(lineitem: String, supplier: String): String = s"""
+  private val tpchQ11Sql: String = s"""
     WITH sv AS (
       SELECT s_nationkey,
              CAST(round(l_extendedprice * 100) AS BIGINT)
                * CAST(l_quantity AS BIGINT) AS val_c
-      FROM $lineitem JOIN $supplier ON s_suppkey = l_suppkey)
+      FROM lineitem JOIN supplier ON s_suppkey = l_suppkey)
     SELECT s_nationkey,
            round(CAST(sum(CAST(val_c AS DECIMAL(38,0))) AS DOUBLE) / 100.0, 4)
              AS value
@@ -374,15 +370,14 @@ object Relational extends QueryModule {
     * aggregate, outer IN → semi join above it, scalars → 1-row
     * broadcasts. Above-average is the Q22 exact cross-multiply.
     */
-  private def tpchQ20Sql(part: String, lineitem: String,
-                         supplier: String): String = s"""
+  private val tpchQ20Sql: String = s"""
     WITH std AS (
       SELECT l_suppkey, CAST(l_quantity AS BIGINT) AS q
-      FROM $lineitem
-      WHERE l_partkey IN (SELECT p_partkey FROM $part
+      FROM lineitem
+      WHERE l_partkey IN (SELECT p_partkey FROM part
                           WHERE p_type LIKE 'STANDARD%'))
     SELECT s_suppkey, s_name
-    FROM $supplier
+    FROM supplier
     WHERE s_suppkey IN (
       SELECT l_suppkey FROM std
       GROUP BY l_suppkey
@@ -398,16 +393,46 @@ object Relational extends QueryModule {
     * filter runs post-join. Plan-asserted: both FileScans carry pushed
     * Or(...) filters. Money math is the exact-cents q1 recipe.
     */
-  private def tpchQ19Sql(lineitem: String, part: String): String = s"""
+  private val tpchQ19Sql: String = s"""
     SELECT count(*) AS n_lines,
            round(CAST(sum(CAST(CAST(round(l_extendedprice * 100) AS BIGINT)
                                  * (100 - CAST(round(l_discount * 100) AS BIGINT))
                                  AS DECIMAL(38,0))) AS DOUBLE) / 10000.0, 4)
              AS revenue
-    FROM $lineitem JOIN $part ON p_partkey = l_partkey
+    FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE (p_brand = 'Brand#12' AND l_quantity BETWEEN 1 AND 15 AND p_size <= 25)
        OR (p_brand = 'Brand#23' AND l_quantity BETWEEN 10 AND 25 AND p_size <= 30)
        OR (p_brand = 'Brand#34' AND l_quantity BETWEEN 20 AND 35 AND p_size <= 40)"""
+
+  /** TPC-H Q3-shaped shipping-priority query, one SQL text for BOTH
+    * engines: dim-filtered 3-way join + grouped revenue + top-10. The
+    * customer filter reduces before the join; top-k plans as
+    * TakeOrderedAndProject.
+    */
+  private val tpchQ3Sql: String = """
+      SELECT l_orderkey,
+             round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
+             CAST(o_orderdate AS DATE) AS orderdate, o_orderpriority
+      FROM customer JOIN orders ON c_custkey = o_custkey
+           JOIN lineitem ON l_orderkey = o_orderkey
+      WHERE c_mktsegment = 'BUILDING'
+        AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
+        AND l_shipdate > TIMESTAMP '1998-03-15 00:00:00'
+      GROUP BY l_orderkey, o_orderdate, o_orderpriority
+      ORDER BY revenue DESC, l_orderkey
+      LIMIT 10
+    """
+
+  /** Correlated EXISTS + NOT EXISTS (`join_exists_correlated`), one SQL
+    * text for BOTH engines.
+    */
+  private val existsCorrelatedSql: String = """
+      SELECT c_custkey, c_mktsegment
+      FROM customer c
+      WHERE EXISTS (SELECT 1 FROM orders o
+                    WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
+        AND NOT EXISTS (SELECT 1 FROM orders o
+                        WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')"""
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- scans -----------------------------------------------------------
@@ -621,17 +646,14 @@ object Relational extends QueryModule {
     // shuffle carries every distinct VALUE, this shuffles one bitmap
     // per (group, bucket) — bounded by id-range/32k regardless of row
     // count — and stays exact (the sketch keys trade exactness away).
-    "agg_bitmap_distinct" -> ((s, d) => {
-      events(s, d).createOrReplaceTempView("events_bmd")
-      s.sql("""
+    "agg_bitmap_distinct" -> ((s, d) => T.sql(s, d, """
         WITH b AS (
           SELECT event_type, bitmap_bucket_number(user_id) AS bkt,
                  bitmap_construct_agg(bitmap_bit_position(user_id)) AS bm
-          FROM events_bmd WHERE user_id IS NOT NULL GROUP BY 1, 2)
+          FROM events WHERE user_id IS NOT NULL GROUP BY 1, 2)
         SELECT event_type, CAST(sum(bitmap_count(bm)) AS BIGINT) AS n_users
         FROM b GROUP BY event_type
-      """)
-    }),
+      """)),
 
     // Apache DataSketches HLL (hll_sketch_agg) — distinct from the
     // approx_count_distinct HLL++ path: this sketch's binary format is
@@ -853,128 +875,45 @@ object Relational extends QueryModule {
     // Money sums run over exact integer cents (price sums reach ~10¹⁰ at
     // sf0.1, where double partial-sum ordering noise exceeds the r4
     // rounding tolerance — caught by the sf0.1 check on the bucketed
-    // join); q1Select is shared verbatim with the oracle.
-    "sql_tpch_q1" -> ((s, d) => {
-      lineitem(s, d).createOrReplaceTempView("lineitem_q1")
-      s.sql(tpchQ1Sql("lineitem_q1"))
-    }),
+    // join); tpchQ1Sql is shared verbatim with the oracle.
+    "sql_tpch_q1" -> ((s, d) => T.sql(s, d, tpchQ1Sql)),
 
-    // TPC-H-shaped shipping-priority query (Q3): dim-filtered 3-way join
-    // + grouped revenue + top-10. Customer filter reduces before the
-    // join; top-k plans as TakeOrderedAndProject.
-    "sql_tpch_q3" -> ((s, d) => {
-      customer(s, d).createOrReplaceTempView("customer_q3")
-      orders(s, d).createOrReplaceTempView("orders_q3")
-      lineitem(s, d).createOrReplaceTempView("lineitem_q3")
-      s.sql("""
-        SELECT l_orderkey,
-               round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
-               CAST(o_orderdate AS DATE) AS orderdate, o_orderpriority
-        FROM customer_q3 JOIN orders_q3 ON c_custkey = o_custkey
-             JOIN lineitem_q3 ON l_orderkey = o_orderkey
-        WHERE c_mktsegment = 'BUILDING'
-          AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
-          AND l_shipdate > TIMESTAMP '1998-03-15 00:00:00'
-        GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        ORDER BY revenue DESC, l_orderkey
-        LIMIT 10
-      """)
-    }),
+    // Shipping-priority top-10 (Q3 shape) — see tpchQ3Sql.
+    "sql_tpch_q3" -> ((s, d) => T.sql(s, d, tpchQ3Sql)),
 
     // 5-way star join (Q5 shape) — see tpchQ5Sql.
-    "sql_tpch_q5" -> ((s, d) => {
-      customer(s, d).createOrReplaceTempView("customer_q5")
-      orders(s, d).createOrReplaceTempView("orders_q5")
-      lineitem(s, d).createOrReplaceTempView("lineitem_q5")
-      supplier(s, d).createOrReplaceTempView("supplier_q5")
-      nation(s, d).createOrReplaceTempView("nation_q5")
-      region(s, d).createOrReplaceTempView("region_q5")
-      s.sql(tpchQ5Sql("customer_q5", "orders_q5", "lineitem_q5",
-        "supplier_q5", "nation_q5", "region_q5"))
-    }),
+    "sql_tpch_q5" -> ((s, d) => T.sql(s, d, tpchQ5Sql)),
 
     // Correlated scalar aggregate subquery (Q17 shape) — see tpchQ17Sql.
-    "sql_tpch_q17" -> ((s, d) => {
-      lineitem(s, d).createOrReplaceTempView("lineitem_q17")
-      part(s, d).createOrReplaceTempView("part_q17")
-      s.sql(tpchQ17Sql("lineitem_q17", "part_q17"))
-    }),
+    "sql_tpch_q17" -> ((s, d) => T.sql(s, d, tpchQ17Sql)),
 
     // Correlated scalar subquery CONTAINING a join (Q2 shape) — see
     // tpchQ2Sql.
-    "sql_tpch_q2" -> ((s, d) => {
-      part(s, d).createOrReplaceTempView("part_q2")
-      lineitem(s, d).createOrReplaceTempView("lineitem_q2")
-      supplier(s, d).createOrReplaceTempView("supplier_q2")
-      nation(s, d).createOrReplaceTempView("nation_q2")
-      s.sql(tpchQ2Sql("part_q2", "lineitem_q2", "supplier_q2", "nation_q2"))
-    }),
+    "sql_tpch_q2" -> ((s, d) => T.sql(s, d, tpchQ2Sql)),
 
     // Scalar subquery in HAVING (Q11 shape) — see tpchQ11Sql.
-    "sql_tpch_q11" -> ((s, d) => {
-      lineitem(s, d).createOrReplaceTempView("lineitem_q11")
-      supplier(s, d).createOrReplaceTempView("supplier_q11")
-      s.sql(tpchQ11Sql("lineitem_q11", "supplier_q11"))
-    }),
+    "sql_tpch_q11" -> ((s, d) => T.sql(s, d, tpchQ11Sql)),
 
     // Two-level nested IN + CTE scalars (Q20 shape) — see tpchQ20Sql.
-    "sql_tpch_q20" -> ((s, d) => {
-      part(s, d).createOrReplaceTempView("part_q20")
-      lineitem(s, d).createOrReplaceTempView("lineitem_q20")
-      supplier(s, d).createOrReplaceTempView("supplier_q20")
-      s.sql(tpchQ20Sql("part_q20", "lineitem_q20", "supplier_q20"))
-    }),
+    "sql_tpch_q20" -> ((s, d) => T.sql(s, d, tpchQ20Sql)),
 
     // Disjunctive cross-table predicate (Q19 shape) — see tpchQ19Sql.
-    "sql_tpch_q19" -> ((s, d) => {
-      lineitem(s, d).createOrReplaceTempView("lineitem_q19")
-      part(s, d).createOrReplaceTempView("part_q19")
-      s.sql(tpchQ19Sql("lineitem_q19", "part_q19"))
-    }),
+    "sql_tpch_q19" -> ((s, d) => T.sql(s, d, tpchQ19Sql)),
 
     // IN-subquery over a grouped HAVING (Q18 shape) — see tpchQ18Sql.
-    "sql_tpch_q18" -> ((s, d) => {
-      customer(s, d).createOrReplaceTempView("customer_q18")
-      orders(s, d).createOrReplaceTempView("orders_q18")
-      lineitem(s, d).createOrReplaceTempView("lineitem_q18")
-      s.sql(tpchQ18Sql("customer_q18", "orders_q18", "lineitem_q18"))
-    }),
+    "sql_tpch_q18" -> ((s, d) => T.sql(s, d, tpchQ18Sql)),
 
     // Dual same-table EXISTS/NOT EXISTS correlation (Q21 shape) — see
     // tpchQ21Sql.
-    "sql_tpch_q21" -> ((s, d) => {
-      supplier(s, d).createOrReplaceTempView("supplier_q21")
-      lineitem(s, d).createOrReplaceTempView("lineitem_q21")
-      orders(s, d).createOrReplaceTempView("orders_q21")
-      nation(s, d).createOrReplaceTempView("nation_q21")
-      s.sql(tpchQ21Sql("supplier_q21", "lineitem_q21", "orders_q21",
-        "nation_q21"))
-    }),
+    "sql_tpch_q21" -> ((s, d) => T.sql(s, d, tpchQ21Sql)),
 
     // Uncorrelated scalar subqueries + anti join (Q22 shape) — see
     // tpchQ22Sql.
-    "sql_tpch_q22" -> ((s, d) => {
-      customer(s, d).createOrReplaceTempView("customer_q22")
-      orders(s, d).createOrReplaceTempView("orders_q22")
-      s.sql(tpchQ22Sql("customer_q22", "orders_q22"))
-    }),
+    "sql_tpch_q22" -> ((s, d) => T.sql(s, d, tpchQ22Sql)),
 
     // Correlated EXISTS subquery (decorrelated by Catalyst into a join) —
     // the SQL surface a reference user would reach for directly.
-    "join_exists_correlated" -> ((s, d) => {
-      customer(s, d).createOrReplaceTempView("customer_ec")
-      orders(s, d).createOrReplaceTempView("orders_ec")
-      s.sql("""
-        SELECT c_custkey, c_mktsegment
-        FROM customer_ec c
-        WHERE EXISTS (SELECT 1 FROM orders_ec o
-                      WHERE o.o_custkey = c.c_custkey
-                        AND o.o_totalprice > 300000)
-          AND NOT EXISTS (SELECT 1 FROM orders_ec o
-                          WHERE o.o_custkey = c.c_custkey
-                            AND o.o_orderstatus = 'F')
-      """)
-    }),
+    "join_exists_correlated" -> ((s, d) => T.sql(s, d, existsCorrelatedSql)),
 
     // Pivot: long → wide reshape (one column per event type). Spark plans
     // this as a single hash agg with CASE-filtered partials — one shuffle
@@ -1127,14 +1066,11 @@ object Relational extends QueryModule {
           ExactMoney.exactSum(col("pu"), 8, 2).as("sum_price"))
     }),
 
-    "agg_grouping_sets" -> ((s, d) => {
-      orders(s, d).createOrReplaceTempView("orders_gs")
-      s.sql("""
+    "agg_grouping_sets" -> ((s, d) => T.sql(s, d, """
         SELECT o_orderstatus, o_orderpriority, count(*) AS n
-        FROM orders_gs
+        FROM orders
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-      """)
-    }),
+      """)),
 
     // ---- sorts / limits / top-k -----------------------------------------
     // Date-sorted per-file detail (the API's response ordering), with a
@@ -1469,15 +1405,7 @@ object Relational extends QueryModule {
       FROM m ORDER BY l_returnflag
     """,
 
-    "join_exists_correlated" -> """
-      SELECT c_custkey, c_mktsegment
-      FROM customer c
-      WHERE EXISTS (SELECT 1 FROM orders o
-                    WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
-        AND NOT EXISTS (SELECT 1 FROM orders o
-                        WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')
-      ORDER BY c_custkey
-    """,
+    "join_exists_correlated" -> (existsCorrelatedSql + "\n      ORDER BY c_custkey\n    "),
 
     "agg_pivot" -> """
       SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
@@ -1564,53 +1492,27 @@ object Relational extends QueryModule {
       FROM m ORDER BY l_returnflag
     """,
 
-    "sql_tpch_q1" ->
-      (tpchQ1Sql("lineitem") + "\n      ORDER BY l_returnflag, l_linestatus"),
+    "sql_tpch_q1" -> (tpchQ1Sql + "\n      ORDER BY l_returnflag, l_linestatus"),
 
-    "sql_tpch_q5" ->
-      (tpchQ5Sql("customer", "orders", "lineitem", "supplier", "nation", "region")
-        + "\n      ORDER BY n_name"),
+    "sql_tpch_q5" -> (tpchQ5Sql + "\n      ORDER BY n_name"),
 
-    "sql_tpch_q17" ->
-      (tpchQ17Sql("lineitem", "part") + "\n      ORDER BY p_brand"),
+    "sql_tpch_q17" -> (tpchQ17Sql + "\n      ORDER BY p_brand"),
 
-    "sql_tpch_q2" ->
-      (tpchQ2Sql("part", "lineitem", "supplier", "nation")
-        + "\n      ORDER BY p_partkey, s_name"),
+    "sql_tpch_q2" -> (tpchQ2Sql + "\n      ORDER BY p_partkey, s_name"),
 
-    "sql_tpch_q11" ->
-      (tpchQ11Sql("lineitem", "supplier") + "\n      ORDER BY s_nationkey"),
+    "sql_tpch_q11" -> (tpchQ11Sql + "\n      ORDER BY s_nationkey"),
 
-    "sql_tpch_q20" ->
-      (tpchQ20Sql("part", "lineitem", "supplier")
-        + "\n      ORDER BY s_suppkey"),
+    "sql_tpch_q20" -> (tpchQ20Sql + "\n      ORDER BY s_suppkey"),
 
-    "sql_tpch_q18" ->
-      (tpchQ18Sql("customer", "orders", "lineitem")
-        + "\n      ORDER BY o_orderkey"),
+    "sql_tpch_q18" -> (tpchQ18Sql + "\n      ORDER BY o_orderkey"),
 
-    "sql_tpch_q19" -> tpchQ19Sql("lineitem", "part"),
+    "sql_tpch_q19" -> tpchQ19Sql,
 
-    "sql_tpch_q21" ->
-      (tpchQ21Sql("supplier", "lineitem", "orders", "nation")
-        + "\n      ORDER BY s_name"),
+    "sql_tpch_q21" -> (tpchQ21Sql + "\n      ORDER BY s_name"),
 
-    "sql_tpch_q22" ->
-      (tpchQ22Sql("customer", "orders") + "\n      ORDER BY cntrycode"),
+    "sql_tpch_q22" -> (tpchQ22Sql + "\n      ORDER BY cntrycode"),
 
-    "sql_tpch_q3" -> """
-      SELECT l_orderkey,
-             round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
-             CAST(o_orderdate AS DATE) AS orderdate, o_orderpriority
-      FROM customer JOIN orders ON c_custkey = o_custkey
-           JOIN lineitem ON l_orderkey = o_orderkey
-      WHERE c_mktsegment = 'BUILDING'
-        AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
-        AND l_shipdate > TIMESTAMP '1998-03-15 00:00:00'
-      GROUP BY l_orderkey, o_orderdate, o_orderpriority
-      ORDER BY revenue DESC, l_orderkey
-      LIMIT 10
-    """,
+    "sql_tpch_q3" -> tpchQ3Sql,
 
     "agg_median" -> """
       -- NaN → NULL mirrors the product's nanvl ejection (the DuckDB

@@ -289,15 +289,11 @@ object Similarity extends QueryModule {
 
   /** Every non-probe vector scored against the broadcast probe (vec_id 0)
     * with the codegen'd r6-rounded cosine — the shared head of the
-    * brute-force top-k, range-search, and IVF in-cell rank stages.
+    * brute-force top-k and range-search keys, which keep every row
+    * addressable and answer NULL for the unscorable.
     */
-  private def probeScored(s: SparkSession, d: String,
-                          onlyUsable: Boolean = false): DataFrame = {
-    val e0 = embeddings(s, d)
-    // Index-backed searches (IVF) score index MEMBERS only — malformed
-    // vectors were never admitted to the structure. Brute-force keys
-    // keep every row addressable and answer NULL for the unscorable.
-    val e = if (onlyUsable) e0.filter(expr(usableVec("embedding"))) else e0
+  private def probeScored(s: SparkSession, d: String): DataFrame = {
+    val e = embeddings(s, d)
     val probe = e.filter(col("vec_id") === 0)
       .select(col("embedding").as("probe_emb"))
     e.filter(col("vec_id") =!= 0)

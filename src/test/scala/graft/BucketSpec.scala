@@ -52,6 +52,14 @@ class BucketSpec extends AnyFunSuite {
     }
   }
 
+  test("join_bucketed_colocated builds with no Spark job once staged") {
+    // The staged tables' DDL is read from the fixtures' cached schemas and
+    // the fingerprints are cached too, so a second build runs no job.
+    val build = SparkEntry.queries("join_bucketed_colocated")
+    build(spark, sf)
+    assert(jobsOf(build(spark, sf)) == 0)
+  }
+
   test("join_bucketed_colocated restages when lineitem is rewritten mid-JVM") {
     // A temp copy of the two tables the key reads, so the rewrite below
     // touches no shared fixture.

@@ -28,16 +28,23 @@ class ContractSpec extends AnyFunSuite {
   test("every query executes at sf0.001") {
     // On a fresh session: it has none of the library's functions and none
     // of the shared session's runtime confs, so every key must work from
-    // SparkEntry's own set-up and leave the session's confs as it found
-    // them (a leaked conf changes every later key's plan).
+    // SparkEntry's own set-up and leave the session's confs and temp views
+    // as it found them (a leaked conf changes every later key's plan; a
+    // leaked view shadows a name for every later query of the session).
     val s = spark.newSession()
+    def tempViews = s.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
     val before = s.conf.getAll
+    val viewsBefore = tempViews
     SparkEntry.queries.foreach { case (name, fn) =>
       val n = fn(s, sf).count()
       withClue(name)(assert(n >= 0))
     }
     val after = s.conf.getAll
     assert(after == before, s"confs changed: ${after.toSet diff before.toSet}")
+    val viewsAfter = tempViews
+    assert(viewsAfter == viewsBefore,
+      s"temp views changed: ${(viewsAfter diff viewsBefore).toSeq.sorted}")
   }
 
   test("T.normalizeTs maps NTZ ts to TIMESTAMP and rejects a raw long") {

@@ -5,10 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-/** Round-4 custom expressions: DuckRound (oracle-identical double
-  * rounding) and Int128SumDouble (exact 128-bit integer sum).
+/** The `graft.functions` expressions: DuckRound (oracle-identical double
+  * rounding) and `sum_i128` (Int128SumDouble, exact 128-bit integer sum).
   */
-class Round4Spec extends AnyFunSuite {
+class ExprSpec extends AnyFunSuite {
   import SparkFixture._
 
   /** Deterministic sampling, same pattern as GenPropertySpec (no

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Encoder, Row}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -820,6 +821,82 @@ class GenPropertySpec extends AnyFunSuite {
     } finally Staging.rmr(java.nio.file.Paths.get(dir))
   }
 
+  /** Runs `body` with whole-stage codegen and the codegen expression
+    * factory both on (`interpreted = false`) or both off.
+    */
+  private def underMode[A](interpreted: Boolean)(body: => A): A = {
+    val ws = spark.conf.get("spark.sql.codegen.wholeStage")
+    val fm = spark.conf.get("spark.sql.codegen.factoryMode")
+    try {
+      spark.conf.set("spark.sql.codegen.wholeStage", (!interpreted).toString)
+      spark.conf.set("spark.sql.codegen.factoryMode",
+        if (interpreted) "NO_CODEGEN" else "CODEGEN_ONLY")
+      body
+    } finally {
+      spark.conf.set("spark.sql.codegen.wholeStage", ws)
+      spark.conf.set("spark.sql.codegen.factoryMode", fm)
+    }
+  }
+
+  /** `rows` as a DataFrame over an RDD, not a local Seq: the optimizer
+    * evaluates projections over a LocalRelation with interpreted code,
+    * whatever the mode, so only an RDD source reaches `doGenCode`.
+    */
+  private def rddDF[A : scala.reflect.ClassTag : Encoder](rows: Seq[A], cols: String*): DataFrame =
+    spark.createDataset(spark.sparkContext.parallelize(rows, 2)).toDF(cols: _*)
+
+  /** `kernel` over `df` under both expression paths, each leg's rows
+    * passed to `check` with the leg's name. A custom expression carries
+    * two implementations (`nullSafeEval` and `doGenCode`), so a
+    * divergence between them would hide until a codegen-fallback
+    * production run hit it. The codegen leg must hold `inCode` in its
+    * generated code, or it never ran `doGenCode`.
+    */
+  private def bothPaths(df: DataFrame, kernel: DataFrame => DataFrame,
+                        inCode: scala.util.matching.Regex)(
+      check: (Array[Row], String) => Unit): Unit =
+    for (interpreted <- Seq(false, true)) underMode(interpreted) {
+      val q = kernel(df)
+      if (!interpreted) {
+        val code =
+          org.apache.spark.sql.execution.debug.codegenString(q.queryExecution.executedPlan)
+        assert(inCode.findFirstIn(code).isDefined, s"/$inCode/ is not in the generated code")
+      }
+      check(q.collect(), if (interpreted) "interpreted" else "codegen")
+    }
+
+  /** A dot-product property: `native` against the HOF fold `hof` over
+    * columns `a` and `b` of each pair, bit-exact and NULL-exact on both
+    * expression paths.
+    */
+  private def dotMatchesHof(pairs: Seq[(Seq[_], Seq[_])], df: DataFrame,
+                           native: String, hof: String,
+                           loop: scala.util.matching.Regex): Unit = {
+    def value(r: Row) = if (r.isNullAt(1)) null else java.lang.Double.valueOf(r.getDouble(1))
+    val want = df.select(col("id"), expr(hof)).collect().map(r => r.getLong(0) -> value(r)).toMap
+    bothPaths(df, _.select(col("id"), expr(native)), loop) { (got, path) =>
+      got.foreach { r =>
+        val n = value(r)
+        val h = want(r.getLong(0))
+        // java.lang.Double.equals is NaN-reflexive and bit-exact.
+        assert((n == null && h == null) || (n != null && n.equals(h)),
+          s"[$path] id=${r.getLong(0)}: $native=$n hof=$h " +
+            s"for a=${pairs(r.getLong(0).toInt)._1} b=${pairs(r.getLong(0).toInt)._2}")
+      }
+    }
+  }
+
+  private def vecGen[T](g: Gen[Option[T]]): Gen[Seq[Option[T]]] = for {
+    n <- Gen.frequency(5 -> Gen.const(8), 2 -> Gen.chooseNum(0, 12))
+    xs <- Gen.listOfN(n, g)
+  } yield xs
+
+  private val f32Gen: Gen[Option[Float]] = Gen.frequency(
+    12 -> Gen.chooseNum(-100, 100).map(n => Some(n / 8.0f)),
+    1 -> Gen.const(Option.empty[Float]),
+    1 -> Gen.oneOf(Float.NaN, Float.PositiveInfinity,
+      Float.NegativeInfinity).map(Some(_)))
+
   // dot_f32's r12 contract: EXACT equivalence with the HOF
   // zip_with/aggregate fold on every input class — mismatched lengths
   // (zip_with NULL-pads → NULL), NULL elements (→ NULL), empty arrays
@@ -830,46 +907,12 @@ class GenPropertySpec extends AnyFunSuite {
   test("dot_f32 equals the HOF zip_with fold on malformed and clean vectors") {
     graft.functions.SqlFunctions.register(spark)
     import spark.implicits._
-    val elemGen: Gen[Option[Float]] = Gen.frequency(
-      12 -> Gen.chooseNum(-100, 100).map(n => Some(n / 8.0f)),
-      1 -> Gen.const(Option.empty[Float]),
-      1 -> Gen.oneOf(Float.NaN, Float.PositiveInfinity,
-        Float.NegativeInfinity).map(Some(_)))
-    val vecGen: Gen[Seq[Option[Float]]] = for {
-      n <- Gen.frequency(5 -> Gen.const(8), 2 -> Gen.chooseNum(0, 12))
-      xs <- Gen.listOfN(n, elemGen)
-    } yield xs
-    forAll(Gen.listOfN(16, Gen.zip(vecGen, vecGen))) { pairs =>
-      val rows = pairs.zipWithIndex.map { case ((a, b), i) => (i.toLong, a, b) }
-      def run(): Array[org.apache.spark.sql.Row] = rows.toDF("id", "a", "b")
-        .select(col("id"),
-          expr("dot_f32(a, b)").as("native"),
-          expr("aggregate(zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)").as("hof"))
-        .collect()
-      def check(got: Array[org.apache.spark.sql.Row], path: String): Unit =
-        got.foreach { r =>
-          val n = if (r.isNullAt(1)) null else java.lang.Double.valueOf(r.getDouble(1))
-          val h = if (r.isNullAt(2)) null else java.lang.Double.valueOf(r.getDouble(2))
-          // java.lang.Double.equals is NaN-reflexive and bit-exact.
-          assert((n == null && h == null) || (n != null && n.equals(h)),
-            s"[$path] id=${r.getLong(0)}: dot_f32=$n hof=$h " +
-              s"for a=${pairs(r.getLong(0).toInt)._1} b=${pairs(r.getLong(0).toInt)._2}")
-        }
-      check(run(), "codegen")
-      // DotF32 carries two independent implementations (nullSafeEval and
-      // doGenCode) — force the INTERPRETED expression path and require
-      // identical results, or a divergence would hide until a
-      // codegen-fallback production run hit it.
-      val ws = spark.conf.get("spark.sql.codegen.wholeStage")
-      val fm = spark.conf.get("spark.sql.codegen.factoryMode")
-      try {
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-        check(run(), "interpreted")
-      } finally {
-        spark.conf.set("spark.sql.codegen.wholeStage", ws)
-        spark.conf.set("spark.sql.codegen.factoryMode", fm)
-      }
+    forAll(Gen.listOfN(16, Gen.zip(vecGen(f32Gen), vecGen(f32Gen)))) { pairs =>
+      val df = rddDF(pairs.zipWithIndex.map { case ((a, b), i) => (i.toLong, a, b) },
+        "id", "a", "b")
+      dotMatchesHof(pairs, df, "dot_f32(a, b)",
+        "aggregate(zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)",
+        """\+= \(\(double\) \w+\.getFloat\(\w+\)\) \* \(\(double\) \w+\.getFloat\(""".r)
     }
   }
 
@@ -881,46 +924,17 @@ class GenPropertySpec extends AnyFunSuite {
   test("dot_f32f64 equals the HOF zip_with fold on malformed and clean vectors") {
     graft.functions.SqlFunctions.register(spark)
     import spark.implicits._
-    val f32Gen: Gen[Option[Float]] = Gen.frequency(
-      12 -> Gen.chooseNum(-100, 100).map(n => Some(n / 8.0f)),
-      1 -> Gen.const(Option.empty[Float]),
-      1 -> Gen.oneOf(Float.NaN, Float.PositiveInfinity,
-        Float.NegativeInfinity).map(Some(_)))
     val f64Gen: Gen[Option[Double]] = Gen.frequency(
       12 -> Gen.chooseNum(-100, 100).map(n => Some(n / 8.0)),
       1 -> Gen.const(Option.empty[Double]),
       1 -> Gen.oneOf(Double.NaN, Double.PositiveInfinity,
         Double.NegativeInfinity).map(Some(_)))
-    def vecGen[T](g: Gen[Option[T]]): Gen[Seq[Option[T]]] = for {
-      n <- Gen.frequency(5 -> Gen.const(8), 2 -> Gen.chooseNum(0, 12))
-      xs <- Gen.listOfN(n, g)
-    } yield xs
     forAll(Gen.listOfN(16, Gen.zip(vecGen(f32Gen), vecGen(f64Gen)))) { pairs =>
-      val rows = pairs.zipWithIndex.map { case ((a, b), i) => (i.toLong, a, b) }
-      def run(): Array[org.apache.spark.sql.Row] = rows.toDF("id", "a", "c")
-        .select(col("id"),
-          expr("dot_f32f64(a, c)").as("native"),
-          expr("aggregate(zip_with(a, c, (x, y) -> CAST(x AS DOUBLE) * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)").as("hof"))
-        .collect()
-      def check(got: Array[org.apache.spark.sql.Row], path: String): Unit =
-        got.foreach { r =>
-          val n = if (r.isNullAt(1)) null else java.lang.Double.valueOf(r.getDouble(1))
-          val h = if (r.isNullAt(2)) null else java.lang.Double.valueOf(r.getDouble(2))
-          assert((n == null && h == null) || (n != null && n.equals(h)),
-            s"[$path] id=${r.getLong(0)}: dot_f32f64=$n hof=$h " +
-              s"for a=${pairs(r.getLong(0).toInt)._1} c=${pairs(r.getLong(0).toInt)._2}")
-        }
-      check(run(), "codegen")
-      val ws = spark.conf.get("spark.sql.codegen.wholeStage")
-      val fm = spark.conf.get("spark.sql.codegen.factoryMode")
-      try {
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-        check(run(), "interpreted")
-      } finally {
-        spark.conf.set("spark.sql.codegen.wholeStage", ws)
-        spark.conf.set("spark.sql.codegen.factoryMode", fm)
-      }
+      val df = rddDF(pairs.zipWithIndex.map { case ((a, c), i) => (i.toLong, a, c) },
+        "id", "a", "c")
+      dotMatchesHof(pairs, df, "dot_f32f64(a, c)",
+        "aggregate(zip_with(a, c, (x, y) -> CAST(x AS DOUBLE) * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)",
+        """\+= \(\(double\) \w+\.getFloat\(\w+\)\) \* \w+\.getDouble\(""".r)
     }
   }
 
@@ -942,39 +956,19 @@ class GenPropertySpec extends AnyFunSuite {
       Gen.zip(setGen, setGen).map { case (a, b) => (a, b.filterNot(a.contains)) },
       setGen.map(a => (a, Seq.empty[Long])),
       setGen.map(a => (Seq.empty[Long], a)))
-    def underMode[A](interpreted: Boolean)(body: => A): A = {
-      val ws = spark.conf.get("spark.sql.codegen.wholeStage")
-      val fm = spark.conf.get("spark.sql.codegen.factoryMode")
-      try {
-        spark.conf.set("spark.sql.codegen.wholeStage", (!interpreted).toString)
-        spark.conf.set("spark.sql.codegen.factoryMode",
-          if (interpreted) "NO_CODEGEN" else "CODEGEN_ONLY")
-        body
-      } finally {
-        spark.conf.set("spark.sql.codegen.wholeStage", ws)
-        spark.conf.set("spark.sql.codegen.factoryMode", fm)
-      }
-    }
-    // An RDD source, not a local Seq: the optimizer evaluates projections
-    // over a LocalRelation with interpreted code, whatever the mode.
-    def kernel(df: org.apache.spark.sql.DataFrame) =
+    def kernel(df: DataFrame) =
       df.select(col("id"), operators.Dedup.sortedIntersectSize(col("a"), col("b")))
     forAll(Gen.listOfN(24, pairGen)) { pairs =>
-      val df = spark.sparkContext.parallelize(
-        pairs.zipWithIndex.map { case ((a, b), i) => (i.toLong, a, b) }, 2)
-        .toDF("id", "a", "b")
+      val df = rddDF(pairs.zipWithIndex.map { case ((a, b), i) => (i.toLong, a, b) },
+        "id", "a", "b")
       val want = df.select(col("id"), size(array_intersect(col("a"), col("b"))))
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      for (interpreted <- Seq(false, true)) underMode(interpreted) {
-        val q = kernel(df)
-        if (!interpreted) assert(
-          org.apache.spark.sql.execution.debug.codegenString(q.queryExecution.executedPlan)
-            .contains("graft.functions.SortedIntersect.size"),
-          "sorted_intersect_size is not in the generated code")
-        q.collect().foreach { r =>
+      bothPaths(df, kernel,
+        java.util.regex.Pattern.quote("graft.functions.SortedIntersect.size").r) { (got, path) =>
+        got.foreach { r =>
           val (a, b) = pairs(r.getLong(0).toInt)
           assert(r.getInt(1) == want(r.getLong(0)),
-            s"[interpreted=$interpreted] a=$a b=$b: ${r.getInt(1)} != ${want(r.getLong(0))}")
+            s"[$path] a=$a b=$b: ${r.getInt(1)} != ${want(r.getLong(0))}")
         }
       }
     }
@@ -984,7 +978,7 @@ class GenPropertySpec extends AnyFunSuite {
       Seq(Some(1L), None, Some(3L)))
     val ok = Seq[Option[Long]](Some(2L), Some(4L))
     for (interpreted <- Seq(false, true); x <- bad; (a, b) <- Seq((x, ok), (ok, x))) {
-      val df = spark.sparkContext.parallelize(Seq((0L, a, b)), 1).toDF("id", "a", "b")
+      val df = rddDF(Seq((0L, a, b)), "id", "a", "b")
       val e = intercept[Exception](underMode(interpreted)(kernel(df).collect()))
       val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .map(t => String.valueOf(t.getMessage))
